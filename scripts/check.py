@@ -78,21 +78,54 @@ def main():
     sys.exit(1 if n_bad else 0)
 
 
+INTEGER_TYPES = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
+                 "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "UHUGEINT"}
+
+
+def family(t):
+    """Type family of a DuckDB column type. The driver compares values
+    of different families unequal (a DECIMAL never equals a DOUBLE), so
+    the families must match before any value is normalized."""
+    t = str(t)
+    if t.endswith("]"):
+        return family(t[:t.rindex("[")]) + "[]"
+    head = t.split("(")[0].strip()
+    if head == "DECIMAL":
+        return "decimal"
+    if head in ("FLOAT", "DOUBLE"):
+        return "float"
+    if head in INTEGER_TYPES:
+        return "integer"
+    if head.startswith("TIMESTAMP"):
+        return "timestamp"
+    if head == "VARCHAR":
+        return "string"
+    return head.lower()
+
+
 def check_one(con, name, sql, n_ok, n_bad):
     try:
-        exp = con.execute(sql).fetch_df()
+        exp_rel = con.sql(sql)
+        exp = exp_rel.fetchdf()
     except Exception as e:
         print(f"FAIL {name}: oracle SQL error: {e}")
         return n_ok, n_bad + 1
     try:
-        got = con.execute(
-            f"SELECT * FROM read_parquet('{OUT}/{name}/*.parquet')").fetch_df()
+        got_rel = con.sql(f"SELECT * FROM read_parquet('{OUT}/{name}/*.parquet')")
+        got = got_rel.fetchdf()
     except Exception as e:
         print(f"FAIL {name}: spark output missing: {e}")
         return n_ok, n_bad + 1
     gcols, ecols = sorted(got.columns), sorted(exp.columns)
     if gcols != ecols:
         print(f"FAIL {name}: columns spark={gcols} oracle={ecols}")
+        return n_ok, n_bad + 1
+    gtypes = dict(zip(got_rel.columns, map(family, got_rel.types)))
+    etypes = dict(zip(exp_rel.columns, map(family, exp_rel.types)))
+    mismatched = [f"{c} spark={gtypes[c]} oracle={etypes[c]}"
+                  for c in gcols if gtypes[c] != etypes[c]]
+    if mismatched:
+        print(f"FAIL {name}: column types differ: {'; '.join(mismatched)}")
         return n_ok, n_bad + 1
     # sort on stringified keys: normed cells can mix str ("NaN") and
     # float, which plain sort_values can't compare

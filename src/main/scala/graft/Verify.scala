@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional 3rd+ args: query-name filter for fast local iteration
     // (the driver always passes exactly 2 — full dump).
     val only = args.drop(2).toSet
-    // same default as Bench: results are parallelism-independent by
-    // the float discipline, but sf0.01 wall-clock is ~3× better at 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // kept for nanos-era events.parquet layouts (harmless on the
-      // current TIMESTAMP(MICROS) files — Tables.events sniffs the
-      // observed schema and handles both).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()

@@ -189,7 +189,7 @@ object Corpus {
     * (Q108PlanSpec pins both the exchange count and the window's
     * absence). */
   private def q108(spark: SparkSession, dir: String): DataFrame = {
-    val ch = chunkDocs(Tables.documents(spark, dir))
+    val ch = chunkDocs(Tables.table(spark, dir, "documents"))
       .select(col("chunk_fp"), col("doc_id"), col("chunk_id"))
     val dup = ch.groupBy(col("chunk_fp"))
       .agg(count(lit(1)).as("n_copies"),

@@ -130,7 +130,7 @@ object Privacy {
     def markerCount(s: Column, marker: String): Column =
       ((length(s) - length(expr(s"replace(scrubbed, '$marker', '')"))) /
         lit(marker.length)).cast("long")
-    Tables.documents(spark, dir)
+    Tables.table(spark, dir, "documents")
       .select(id, col("text"), scrubbed.as("scrubbed"))
       .select(
         id,

@@ -987,10 +987,11 @@ object Recommender {
     * (exact) and q17b (DIMSUM) stay fixed for hash-compat; Auto is
     * the library default for new callers, like Content's
     * CandidateSource.Auto. Returns mirrored 6-dp `(i, j, sim)` —
-    * the `simsSource` contract. */
-  def itemSimsAuto(ratings0: DataFrame,
+    * the `simsSource` contract. The sizing agg and the chosen kernel
+    * both read `ratings` as given: callers own caching, as for every
+    * library call (see [[itemSimsCached]]). */
+  def itemSimsAuto(ratings: DataFrame,
                    threshold: Double = 0.3): DataFrame = {
-    val ratings = ratings0.cache()
     val pairDots = ratings.groupBy(col("user_id"))
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c") * col("c")).cast("long")).collect()(0).getLong(0)
@@ -1072,13 +1073,8 @@ object Recommender {
     * fixed for hash-compat; Auto is the library default for new
     * callers. Returns mirrored 6-dp `(u, v, sim)` — the
     * [[userKnnTopK]] `simsSource` contract. */
-  def userSimsAuto(ratings0: DataFrame,
+  def userSimsAuto(ratings: DataFrame,
                    threshold: Double = 0.3): DataFrame = {
-    // cache scope mirrors itemSimsAuto: the sizing agg materializes
-    // the ratings the returned plan then reuses; the cache is
-    // session-scoped and CacheManager-dedup'd — callers making many
-    // Auto calls over distinct frames own unpersisting them
-    val ratings = ratings0.cache()
     val pairDots = ratings.groupBy(col("item_id"))
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c") * col("c")).cast("long")).collect()(0).getLong(0)

@@ -182,7 +182,7 @@ object SeqRecommender {
       // aggregates map-side — the shuffle carries one combined row
       // per t_id instead of sorting the full t × cluster grid. At
       // sf0.1 the stage is join-bound so the wall is unchanged
-      // (Q58Profile r14); the win is the shuffle SHAPE at 100×
+      // (measured r14); the win is the shuffle SHAPE at 100×
       // (no sort buffer over the widest intermediate in the fit)
       grid.groupBy(col("t_id"))
         .agg(min(struct(col("d2"), col("cluster"))).as("b"))

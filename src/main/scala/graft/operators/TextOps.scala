@@ -58,7 +58,7 @@ object TextOps {
   private def q111(spark: SparkSession, dir: String): DataFrame = {
     val block = array(BLOCK_TERMS.map(lit): _*)
     val tk = VectorFns.tokens(col("text"))
-    Tables.documents(spark, dir)
+    Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), tk.as("tk"))
       .select(
         col("doc_id"), col("source"),
@@ -278,7 +278,7 @@ object TextOps {
     * hash-checkable against the plain GROUP BY / HAVING oracle. */
   private def q72(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = Tables.documents(spark, dir)
+    val toks = Tables.table(spark, dir, "documents")
       .select(explode(VectorFns.tokens(col("text"))).as("tok"))
     val sketch = new MisraGriesAggregator(HH_CAPACITY).toColumn
     // the typed global agg yields Dataset[MGBuf], flattened to `counts`

@@ -306,7 +306,7 @@ object RelationalSql {
 
     "q71_trending_users" ->
       """WITH uv AS (
-        |  SELECT date_trunc('day', ts) AS day, user_id,
+        |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, user_id,
         |         floor(sum(value) * 1000000.0 + 0.5) / 1000000.0 AS vol
         |  FROM events GROUP BY 1, 2)
         |SELECT day, user_id,

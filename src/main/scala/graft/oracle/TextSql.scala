@@ -509,7 +509,7 @@ object TextSql {
          |         CAST(len(${SqlFragments.tokensSql("lower(trim(text))")})
          |              AS BIGINT) AS n_tok
          |  FROM agg a JOIN documents d ON d.doc_id = a.doc_id),
-         |grid AS (SELECT unnest([$grid]) AS thresh)
+         |grid AS (SELECT unnest([$grid]::DOUBLE[]) AS thresh)
          |SELECT g.thresh,
          |       CAST(sum(CASE WHEN avg_logp >= g.thresh THEN 1 ELSE 0 END)
          |            AS BIGINT) AS n_docs_kept,

@@ -75,7 +75,10 @@ object Tables {
     * join under their union then executed with mismatched child
     * partition counts ("Can't zip RDDs", q149b) — fixed at the fold
     * sites by broadcasting the delta-sized touched key set, which is
-    * the right join shape there anyway. */
+    * the right join shape there anyway. The map-only and
+    * single-shuffle plans (q72, q108, q109, q111) read the plain
+    * `table(spark, dir, "documents")` scan instead: the spread would
+    * only add an exchange to them. */
   def documents(spark: SparkSession, dir: String): DataFrame = {
     val raw = table(spark, dir, "documents")
     val n = spark.sessionState.conf.numShufflePartitions

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch feasibility probe (VERDICT r7 stretch #7): is a seed-fixed
@@ -13,16 +12,7 @@ import org.apache.spark.sql.functions._
 object AlsDeterminism {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val ratings = graft.sources.Tables.ratingsCached(spark, dir)
     val model = new graft.ml.AlsRecommender()
       .setRank(10).setMaxIter(10).setSeed(42L).setKItems(5)
@@ -38,7 +28,7 @@ object AlsDeterminism {
       .agg(sum(conv(substring(col("h"), 1, 7), 16, 10).cast("long")).as("d"))
       .head().getLong(0)
     val nRatings = ratings.count()
-    println(s"[alsdet] rows=${out.count()} digest=$digest cpus=$cpus nRatings=$nRatings")
+    println(s"[alsdet] rows=${out.count()} digest=$digest cpus=${graft.Session.cpus} nRatings=$nRatings")
     // 4-dp digest too: if 6 dp flips but 4 dp holds, a coarser round
     // could still gate the query
     val digest4 = model.transform(cohort)

@@ -138,18 +138,6 @@ object ScaleProbe {
     * linearity evidence of the 13 scale-path queries. */
   val ISOLATED_QUERIES: Seq[String] = Seq("q32_content_topk")
 
-  private def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    // longer than any probe pass: forced GCs happen between queries
-    // (see Bench — in-flight periodic GC pauses land inside the
-    // longest queries and corrupt their timings)
-    .config("spark.cleaner.periodicGC.interval", "30min")
-    .getOrCreate()
 
   def main(args: Array[String]): Unit = args(0) match {
     case "build" => build(args(1), args(2), args(3).toInt)
@@ -174,8 +162,7 @@ object ScaleProbe {
     * deltas — the number that justifies "fold weekly, rebuild
     * rarely". */
   def foldSweep(dir: String): Unit = {
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val S = graft.operators.Similarity
     val T = graft.operators.TextOps
     val C = graft.operators.Corpus
@@ -256,8 +243,7 @@ object ScaleProbe {
     * the inversion; the clustered arm documents the win; run on the
     * replica to read both at 10×). */
   def resAnn(dir: String): Unit = {
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.expressions.Window
     val S = graft.operators.Similarity
@@ -320,8 +306,7 @@ object ScaleProbe {
     * between V values so each point is self-contained. */
   def lmVocab(src: String, scratch: String, repeats: Int,
               vs: Seq[Int]): Unit = {
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.size - 1) / 2) }
     import graft.operators.TextOps
@@ -370,8 +355,7 @@ object ScaleProbe {
   }
 
   def build(src: String, out: String, copies: Int): Unit = {
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     try buildWith(spark, src, out, copies) finally spark.stop()
   }
 
@@ -439,8 +423,7 @@ object ScaleProbe {
   }
 
   def run(dir: String, repeats: Int, queries: Seq[String]): Unit = {
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.size - 1) / 2) }
     val fns = queries.sorted.map(n => n -> graft.SparkEntry.queries(n))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,14 +27,7 @@ object StreamIngestProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val n = args(1).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val docs = graft.sources.Tables.documents(spark, dir).cache()
     docs.count()
     val base = java.nio.file.Files

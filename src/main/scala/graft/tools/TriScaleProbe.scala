@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Scratch diagnostic for the q93 probe reading: price the
@@ -11,16 +10,7 @@ import org.apache.spark.sql.functions.col
 object TriScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     def f1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)
     val und = graft.operators.Graph.coPurchaseUndCached(spark, dir)
       .select(col("a"), col("b"))

@@ -8,15 +8,9 @@ import org.scalatest.BeforeAndAfterAll
   * a single JVM; getOrCreate dedups across suites). */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  /** Two partitions, so plan-shape assertions see the same exchange
+    * layout on any host. */
+  lazy val spark: SparkSession = Session.local(2)
 
   def resourcePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
