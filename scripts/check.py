@@ -4,12 +4,23 @@
 
 Usage: python3 scripts/check.py [sfdir] [outdir] [--no-run] [names...]
        python3 scripts/check.py --smoke [sfdir]
+       python3 scripts/check.py --against <base_out> [outdir] [names...]
 
 --smoke: the ~30-second round-start tripwire — runs graft.tools.Smoke
 (one representative query per source family at sf0.001) and exits with
 its status. Run it FIRST each round: it catches driver testdata
 regenerations that changed a physical parquet schema (the round-6
 events.ts incident) before any longer gate burns time.
+
+--against: compare two Verify output directories query by query, with
+no Spark run and no oracle — the "identical outputs" check for a
+refactor. Run Verify on the base tree into <base_out> and on the
+changed tree into <outdir> (default /tmp/verify_out), then compare:
+the exact DuckDB column names, order and types first (an INTEGER that
+turns into a BIGINT is a difference, unlike the family-level oracle
+gate), then the rows sorted and compared exactly (floats bit for bit,
+no rounding). Prints the first differing rows and exits non-zero on
+any difference or any query present on one side only.
 """
 import json, math, os, subprocess, sys
 
@@ -146,5 +157,60 @@ def check_one(con, name, sql, n_ok, n_bad):
     return n_ok, n_bad + 1
 
 
+def exact(v):
+    """Exact, hashable, orderable form of a DuckDB cell: floats by their
+    bits (so -0.0 differs from 0.0 and NaN equals NaN), nested lists and
+    structs recursively."""
+    if isinstance(v, float):
+        return ("f", v.hex())
+    if isinstance(v, (list, tuple)):
+        return ("l", tuple(map(exact, v)))
+    if isinstance(v, dict):
+        return ("d", tuple((k, exact(x)) for k, x in v.items()))
+    return (type(v).__name__, v)
+
+
+def against(base, out, names):
+    import duckdb
+    from collections import Counter
+    con = duckdb.connect()
+
+    def queries(d):
+        return {q for q in os.listdir(d)
+                if os.path.isdir(f"{d}/{q}") and (not names or q in names)}
+
+    qb, qo = queries(base), queries(out)
+    n_same = n_diff = 0
+    for q in sorted(qb ^ qo):
+        print(f"DIFF {q}: only in {base if q in qb else out}")
+        n_diff += 1
+    for q in sorted(qb & qo):
+        rels = [con.sql(f"SELECT * FROM read_parquet('{d}/{q}/*.parquet')")
+                for d in (base, out)]
+        schemas = [list(zip(r.columns, map(str, r.types))) for r in rels]
+        if schemas[0] != schemas[1]:
+            print(f"DIFF {q}: schema base={schemas[0]} out={schemas[1]}")
+            n_diff += 1
+            continue
+        rows = [r.fetchall() for r in rels]
+        keys = [sorted(tuple(map(exact, row)) for row in rs) for rs in rows]
+        if keys[0] == keys[1]:
+            print(f"SAME {q}: {len(rows[0])} rows")
+            n_same += 1
+            continue
+        raw = {tuple(map(exact, row)): row for rs in rows for row in rs}
+        cb, co = Counter(keys[0]), Counter(keys[1])
+        print(f"DIFF {q}: rows base={len(rows[0])} out={len(rows[1])}; first diffs:")
+        print("  base:", [raw[k] for k in sorted(cb - co)[:3]])
+        print("  out: ", [raw[k] for k in sorted(co - cb)[:3]])
+        n_diff += 1
+    print(f"== {n_same} identical, {n_diff} differ ==")
+    return 1 if n_diff else 0
+
+
 if __name__ == "__main__":
+    if "--against" in sys.argv:
+        i = sys.argv.index("--against")
+        rest = [a for a in sys.argv[1:i] + sys.argv[i + 2:] if not a.startswith("--")]
+        sys.exit(against(sys.argv[i + 1], rest[0] if rest else "/tmp/verify_out", rest[1:]))
     main()

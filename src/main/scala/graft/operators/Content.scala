@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.VectorFns.{cosineArr, invEuclideanArr}
 import graft.functions.Rounding.{r4, r6}
+import graft.functions.TopK
 
 /**
  * Content-based recommender (SURVEY.md §2.10 R6/R7): item similarity
@@ -138,10 +138,7 @@ object Content {
     * groups (the reference's empty-neighbor guard). */
   private def neighborAgg(pairs: DataFrame, keys: Seq[String],
                           kNeighbors: Int): DataFrame = {
-    val wNb = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("sim").desc, col("j").asc)
-    pairs.withColumn("nrk", row_number().over(wNb))
-      .filter(col("nrk") <= kNeighbors)
+    TopK.perGroup(pairs, keys.map(col), Seq(col("sim").desc, col("j").asc), kNeighbors, "nrk")
       .groupBy(keys.map(col): _*)
       .agg(sum(col("sim") * col("r_uj")).as("num"), sum(abs(col("sim"))).as("den"))
       .filter(col("den") =!= 0.0)
@@ -348,9 +345,7 @@ object Content {
           .select(col("u"), col("i"), col("score"))
     }
 
-    val wTop = Window.partitionBy(col("u")).orderBy(col("score").desc, col("i").asc)
-    scored.withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= kItems)
+    TopK.perGroup(scored, Seq(col("u")), Seq(col("score").desc, col("i").asc), kItems)
       .select(col("u").as("user_id"), col("i").as("item_id"), col("score"), col("rk"))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.functions.VectorFns
+import graft.functions.{TopK, VectorFns}
 import graft.functions.Rounding.{r4, r6}
 
 /**
@@ -294,28 +294,20 @@ object Corpus {
     * retry-stable, engine-portable sample (the `TABLESAMPLE` of a
     * pipeline that must be reproducible). Emits (group, id, rk).
     *
-    * Scale shape: groups may be LOW-cardinality (languages, sources),
-    * where a window rank would funnel each group's whole corpus
-    * through one partition. The bounded-heap
-    * [[graft.functions.TopKAggregator]] keeps k rows per group
-    * map-side and merges associatively — only |groups|·k rows cross
-    * the shuffle. (Heap order is score DESC, so the sample key is the
-    * NEGATED hash; 28-bit hashes are exact in double.) The hash is
-    * SALTED ("_sample") to decorrelate this draw from the
+    * Scale shape: groups may be LOW-cardinality (languages, sources);
+    * the partial prune [[graft.functions.TopK.perGroup]] guarantees
+    * (see its doc) keeps k rows per group per map partition, so only
+    * partitions·|groups|·k rows cross the shuffle. The sample key is
+    * the hash ascending with id-ascending ties; the id is emitted as
+    * bigint. The hash is SALTED ("_sample") to decorrelate this draw from the
     * [[splitAssign]] buckets — unsalted, the k smallest hashes per
     * group all sit in low buckets, i.e. inside the train split. */
   def hashSamplePerGroup(df: DataFrame, group: String, id: String,
-                         k: Int = SAMPLE_PER_GROUP): DataFrame = {
-    val topk = udaf(new graft.functions.TopKAggregator(k))
-    df.select(col(group), col(id),
-        -Dedup.baseHash(concat(col(id).cast("string"), lit("_sample")))
-          .cast("double") as "nh")
-      .groupBy(col(group))
-      .agg(topk(col(id), col("nh")).as("top"))
-      .select(col(group), posexplode(col("top.items")))
-      .select(col(group), col("col._1").as(id),
-        (col("pos") + 1).cast("int").as("rk"))
-  }
+                         k: Int = SAMPLE_PER_GROUP): DataFrame =
+    df.select(col(group), col(id).cast("long").as(id),
+        Dedup.baseHash(concat(col(id).cast("string"), lit("_sample"))).as("h"))
+      .transform(TopK.perGroup(_, Seq(col(group)), Seq(col("h").asc, col(id).asc), k))
+      .select(col(group), col(id), col("rk"))
 
   private def q67(spark: SparkSession, dir: String): DataFrame =
     hashSamplePerGroup(Tables.documents(spark, dir), "lang", "doc_id")
@@ -895,8 +887,6 @@ object Corpus {
     * guard; ties break on term asc. */
   def tfidfTopTerms(docs: DataFrame, topK: Int = TFIDF_TOP): DataFrame = {
     val wDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val wRank = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("term").asc)
     val tf = docs
       .select(col("doc_id"), explode(VectorFns.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
@@ -909,8 +899,7 @@ object Corpus {
       .crossJoin(broadcast(nDocs))
       .withColumn("score", (col("tf").cast("double") / col("dl")) *
         log(col("bigN").cast("double") / col("df")))
-      .withColumn("rk", row_number().over(wRank))
-      .filter(col("rk") <= topK)
+      .transform(TopK.perGroup(_, Seq(col("doc_id")), Seq(col("score").desc, col("term").asc), topK))
       .select(col("doc_id"), col("rk"), col("term"),
         r6(col("score")).as("tfidf"))
   }
@@ -2002,13 +1991,9 @@ object Corpus {
     * (tombstones included). */
   private def resolveIngest(spark: SparkSession, ingestDir: String,
       key: String = "doc_id"): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val ingested = spark.read.parquet(ingestDir)
-    val latestAll = ingested
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(col(key))
-          .orderBy(col("batch_id").cast("long").desc)))
-      .filter(col("_rk") === 1)
+    val latestAll = TopK.perGroup(ingested, Seq(col(key)),
+      Seq(col("batch_id").cast("long").desc), 1, "_rk")
     // a tombstoned doc still counts as TOUCHED (its standing version
     // must not survive the anti-join) but contributes no update row
     val latest =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Rounding.r4
+import graft.functions.TopK
 
 /**
  * Hybrid recommender fusion (SURVEY.md §2.10 R10, reference
@@ -70,10 +71,7 @@ object Hybrid {
       .select(col("user_id"), col("item_id"),
         r4(coalesce(col("sa"), lit(0.0)) + coalesce(col("sb"), lit(0.0)))
           .as("score"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("score").desc, col("item_id").asc)
-    fused.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= kItems)
+    TopK.perGroup(fused, Seq(col("user_id")), Seq(col("score").desc, col("item_id").asc), kItems)
       .select(col("user_id"), col("item_id"), col("score"), col("rk"))
   }
 }

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Rounding.{r4, r6}
+import graft.functions.TopK
 
 /**
  * Collaborative-filtering kNN recommenders (SURVEY.md §2.10 R1-R5,
@@ -235,9 +235,8 @@ object Recommender {
         denseTopK = if (dense && !denseGrid) Some(kNeighbors) else None)
     }
 
-    val wNb = Window.partitionBy(col("u")).orderBy(col("sim").desc, col("v").asc)
-    val neighbors = sims.withColumn("nrk", row_number().over(wNb))
-      .filter(col("nrk") <= kNeighbors)
+    val neighbors = TopK.perGroup(sims, Seq(col("u")), Seq(col("sim").desc, col("v").asc),
+        kNeighbors, "nrk")
       .select(col("u"), col("v"), col("sim"))
 
     // cohort runs: neighbors is |targets|·k rows — provably small, hint
@@ -258,10 +257,7 @@ object Recommender {
       .select(col("u").as("user_id"), col("item_id"),
         r4(col("umean") + col("num") / col("den")).as("score"))
 
-    val wTop = Window.partitionBy(col("user_id"))
-      .orderBy(col("score").desc, col("item_id").asc)
-    preds.withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= kItems)
+    TopK.perGroup(preds, Seq(col("user_id")), Seq(col("score").desc, col("item_id").asc), kItems)
       .select("user_id", "item_id", "score", "rk")
   }
 
@@ -624,12 +620,8 @@ object Recommender {
     * `Int.MaxValue` (the default everywhere) keeps the exact path. */
   def capPerUser(ratings: DataFrame, maxItems: Int): DataFrame =
     if (maxItems == Int.MaxValue) ratings
-    else {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("rating").desc, col("item_id").asc)
-      ratings.withColumn("cap_rk", row_number().over(w))
-        .filter(col("cap_rk") <= maxItems).drop("cap_rk")
-    }
+    else TopK.perGroup(ratings, Seq(col("user_id")),
+      Seq(col("rating").desc, col("item_id").asc), maxItems, "cap_rk").drop("cap_rk")
 
   /** The transposed heavy-key cap: truncate each ITEM's rater list to
     * its top-`maxRaters` rows by (rating desc, user_id asc) before the
@@ -638,12 +630,8 @@ object Recommender {
     * `Int.MaxValue` (default everywhere) keeps the exact path. */
   def capPerItem(ratings: DataFrame, maxRaters: Int): DataFrame =
     if (maxRaters == Int.MaxValue) ratings
-    else {
-      val w = Window.partitionBy(col("item_id"))
-        .orderBy(col("rating").desc, col("user_id").asc)
-      ratings.withColumn("cap_rk", row_number().over(w))
-        .filter(col("cap_rk") <= maxRaters).drop("cap_rk")
-    }
+    else TopK.perGroup(ratings, Seq(col("item_id")),
+      Seq(col("rating").desc, col("user_id").asc), maxRaters, "cap_rk").drop("cap_rk")
 
   /** Mirror an `i < j` half similarity table (e.g. [[itemSimsDimsum]]
     * output) into the both-directions form the kNN pipelines join on. */
@@ -797,19 +785,15 @@ object Recommender {
     // where the cohort-sized u left almost every comparison to the
     // full-row comparator (r15 — the exchange+sort of the exploded
     // candidate stream is q17's dominant stage)
-    val wNb = Window.partitionBy(col("i"), col("u"))
-      .orderBy(col("sim").desc, col("j").asc)
-    val scored = cand.withColumn("nrk", row_number().over(wNb))
-      .filter(col("nrk") <= kNeighbors)
+    val scored = TopK.perGroup(cand, Seq(col("i"), col("u")),
+        Seq(col("sim").desc, col("j").asc), kNeighbors, "nrk")
       .groupBy(col("u"), col("i"))
       .agg(r4(sum(col("sim") * col("r_uj")) / sum(abs(col("sim")))).as("score"))
 
     val rated = r.select(col("user_id").as("u"), col("item_id").as("i"))
     val unseen = scored.join(rated, Seq("u", "i"), "left_anti")
 
-    val wTop = Window.partitionBy(col("u")).orderBy(col("score").desc, col("i").asc)
-    unseen.withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= kItems)
+    TopK.perGroup(unseen, Seq(col("u")), Seq(col("score").desc, col("i").asc), kItems)
       .select(col("u").as("user_id"), col("i").as("item_id"), col("score"), col("rk"))
   }
 
@@ -918,10 +902,8 @@ object Recommender {
       .filter(col("v") =!= col("u"))
       .join(sims, Seq("u", "v"))
       .join(broadcast(stats.select(col("user_id").as("v"), col("umean").as("vmean"))), Seq("v"))
-    val wNb = Window.partitionBy(col("u"), col("item_id"))
-      .orderBy(col("sim").desc, col("v").asc)
-    cand.withColumn("nrk", row_number().over(wNb))
-      .filter(col("nrk") <= kNeighbors)
+    TopK.perGroup(cand, Seq(col("u"), col("item_id")),
+        Seq(col("sim").desc, col("v").asc), kNeighbors, "nrk")
       .groupBy(col("u"), col("item_id"), col("actual"))
       .agg(sum(col("sim") * (col("r_vi") - col("vmean"))).as("num"),
         sum(col("sim")).as("den"))
@@ -1171,10 +1153,8 @@ object Recommender {
     val cand = cohort.join(rated, Seq("u"))
       .filter(col("j") =!= col("i"))
       .join(sims, Seq("i", "j"))
-    val wNb = Window.partitionBy(col("u"), col("i"))
-      .orderBy(col("sim").desc, col("j").asc)
-    cand.withColumn("nrk", row_number().over(wNb))
-      .filter(col("nrk") <= kNeighbors)
+    TopK.perGroup(cand, Seq(col("u"), col("i")),
+        Seq(col("sim").desc, col("j").asc), kNeighbors, "nrk")
       .groupBy(col("u"), col("i"), col("actual"))
       .agg(sum(col("sim") * col("r_uj")).as("num"),
         sum(abs(col("sim"))).as("den"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.functions.TopK
 
 /**
  * Relational-core operator suite: scans, projections, filters, joins,
@@ -121,10 +122,7 @@ object Relational {
     val rev = Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"), col("l_partkey"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"))
-    val w = Window.partitionBy(col("l_returnflag"))
-      .orderBy(col("revenue").desc, col("l_partkey").asc)
-    rev.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+    TopK.perGroup(rev, Seq(col("l_returnflag")), Seq(col("revenue").desc, col("l_partkey").asc), 3)
       .select("l_returnflag", "l_partkey", "revenue", "rk")
   }
 
@@ -184,11 +182,8 @@ object Relational {
   private def q09(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val n = Tables.nation(spark, dir)
-    val w = Window.partitionBy(col("n_name"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("n_name")), Seq(col("c_acctbal").desc, col("c_custkey").asc), 1))
       .select(col("n_name"), col("c_custkey"), round(col("c_acctbal"), 4).as("best_acctbal"))
   }
 
@@ -266,25 +261,20 @@ object Relational {
       .select(col("order_date"), col("period_id"))
   }
 
-  /** T1/T2 at the 100-TB posture: q04's per-group top-k computed by
-    * the typed bounded-heap [[graft.functions.TopKAggregator]] instead
-    * of a window rank — only k rows per group survive the map side,
-    * where `row_number() <= k` sorts and ranks EVERY row of the group
-    * after the shuffle. Same semantics, same oracle as q04 (revenue
-    * desc, partkey asc tie-break). */
+  /** T1/T2 at the 100-TB posture: q04's per-group top-k ranked over
+    * the bigint partkey and the double revenue. Only k rows per group
+    * per map partition cross the shuffle — the partial prune
+    * [[graft.functions.TopK.perGroup]] guarantees (see its doc). Same
+    * semantics, same oracle as q04 (revenue desc, partkey asc
+    * tie-break). */
   private def q51(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.udaf
-    val topk = udaf(new graft.functions.TopKAggregator(3))
     val rev = Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"), col("l_partkey"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"))
-    rev.groupBy(col("l_returnflag"))
-      .agg(topk(col("l_partkey"), col("revenue")).as("top"))
-      .select(col("l_returnflag"), posexplode(col("top.items")))
-      .select(col("l_returnflag"),
-        col("col._1").as("l_partkey"),
-        col("col._2").as("revenue"),
-        (col("pos") + 1).cast("int").as("rk"))
+      .select(col("l_returnflag"), col("l_partkey").cast("long").as("l_partkey"),
+        col("revenue").cast("double").as("revenue"))
+    TopK.perGroup(rev, Seq(col("l_returnflag")), Seq(col("revenue").desc, col("l_partkey").asc), 3)
+      .select("l_returnflag", "l_partkey", "revenue", "rk")
   }
 
   /** Relative tolerance the approx-sketch contracts certify: HLL++ at
@@ -396,10 +386,7 @@ object Relational {
       .select(col("c_mktsegment"), explode(col("items")).as("item_id"))
       .groupBy(col("c_mktsegment"), col("item_id"))
       .agg(count(lit(1)).as("n_orders"))
-    val w = Window.partitionBy(col("c_mktsegment"))
-      .orderBy(col("n_orders").desc, col("item_id").asc)
-    freq.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+    TopK.perGroup(freq, Seq(col("c_mktsegment")), Seq(col("n_orders").desc, col("item_id").asc), 3)
       .select(col("c_mktsegment"), col("item_id"), col("n_orders"), col("rk"))
   }
 
@@ -519,24 +506,21 @@ object Relational {
 
   /** W1 × T1 at the 100-TB posture: per-window trending entities —
     * top-[[TRENDING_TOP_K]] users by event volume in each tumbling
-    * day — via the bounded-heap [[graft.functions.TopKAggregator]].
-    * The group key is (window), whose cardinality is LOW relative to
-    * the rows per window, exactly where a rank window would funnel
-    * each day's whole event volume through one partition; the heap
-    * keeps k rows per window map-side. Rank key is the 6-dp-rounded
-    * volume (id-asc ties), emitted 4-dp — the repo-wide float
-    * discipline. */
+    * day. The group key is (window), whose cardinality is LOW relative
+    * to the rows per window; the partial prune
+    * [[graft.functions.TopK.perGroup]] guarantees (see its doc) keeps k
+    * rows per window per map partition before the shuffle. Rank key
+    * is the 6-dp-rounded volume (id-asc ties), emitted 4-dp — the
+    * repo-wide float discipline. */
   private def q71(spark: SparkSession, dir: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKAggregator(TRENDING_TOP_K))
     val uv = Tables.events(spark, dir)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .agg(graft.functions.Rounding.r6(sum(col("value"))).as("vol"))
-    uv.groupBy(col("day"))
-      .agg(topk(col("user_id"), col("vol")).as("top"))
-      .select(col("day"), posexplode(col("top.items")))
-      .select(col("day"), col("col._1").as("user_id"),
-        graft.functions.Rounding.r4(col("col._2")).as("volume"),
-        (col("pos") + 1).cast("int").as("rk"))
+      .select(col("day"), col("user_id").cast("long").as("user_id"),
+        col("vol").cast("double").as("vol"))
+    TopK.perGroup(uv, Seq(col("day")), Seq(col("vol").desc, col("user_id").asc), TRENDING_TOP_K)
+      .select(col("day"), col("user_id"),
+        graft.functions.Rounding.r4(col("vol")).as("volume"), col("rk"))
   }
 
   /** PIVOT — long→wide with an EXPLICIT value list (the open-ended

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Rounding.r6
+import graft.functions.TopK
 
 /**
  * The composed end-to-end sequential recommender (SURVEY.md §2.10
@@ -312,10 +313,8 @@ object SeqRecommender {
         concat_ws(",", col("ant")).as("ant_str"),
         r6(size(array_intersect(col("ant"), col("items"))).cast("double")
           * col("support") * col("confidence")).as("score"))
-    val wBest = Window.partitionBy(col("user_id"))
-      .orderBy(col("score").desc, col("cons").asc, col("ant_str").asc)
-    val best = fired.withColumn("brk", row_number().over(wBest))
-      .filter(col("brk") === 1)
+    val best = TopK.perGroup(fired, Seq(col("user_id")),
+        Seq(col("score").desc, col("cons").asc, col("ant_str").asc), 1, "brk")
       .select(col("user_id"),
         split(col("cons"), "_").getItem(0).cast("long").as("cluster"))
 
@@ -335,15 +334,11 @@ object SeqRecommender {
     // input degrades to an empty result instead of an NPE
     val maxSeen = Option(seen.groupBy("user_id").count().agg(max("count"))
       .head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val wCl = Window.partitionBy(col("cluster"))
-      .orderBy(col("cnt").desc, col("item_id").asc)
-    val topItems = itemCnt.withColumn("crk", row_number().over(wCl))
-      .filter(col("crk") <= lit(k + maxSeen)).drop("crk")
+    val topItems = TopK.perGroup(itemCnt, Seq(col("cluster")),
+      Seq(col("cnt").desc, col("item_id").asc), Math.toIntExact(k + maxSeen), "crk").drop("crk")
     val cands = best.join(topItems, Seq("cluster"))
       .join(seen, Seq("user_id", "item_id"), "left_anti")
-    val wTop = Window.partitionBy(col("user_id"))
-      .orderBy(col("cnt").desc, col("item_id").asc)
-    cands.withColumn("rk", row_number().over(wTop)).filter(col("rk") <= k)
+    TopK.perGroup(cands, Seq(col("user_id")), Seq(col("cnt").desc, col("item_id").asc), k)
       .select(col("user_id"), col("cluster"), col("item_id"), col("cnt"), col("rk"))
   }
 }

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.functions.TopK
 import graft.functions.VectorFns._
 import graft.functions.Rounding.{r4, r6}
 
@@ -204,9 +204,7 @@ object Sequential {
       val pairs = vecs.crossJoin(broadcast(centroids))
         .select(col("vec_id"), col("v"), col("cluster"),
           r6(sqDist(col("v"), col("cv"))).as("d2"))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("d2").asc, col("cluster").asc)
-      pairs.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      TopK.perGroup(pairs, Seq(col("vec_id")), Seq(col("d2").asc, col("cluster").asc), 1)
         .select(col("vec_id"), col("v"), col("cluster"), col("d2"))
     }
     def recenter(assigned: DataFrame): DataFrame =
@@ -305,9 +303,8 @@ object Sequential {
           !array_contains(col("items"), col("consequent")))
       .select(col("user_id"), col("antecedent"), col("consequent"),
         r6(col("support") * col("confidence")).as("score"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("score").desc, col("antecedent").asc, col("consequent").asc)
-    fired.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    TopK.perGroup(fired, Seq(col("user_id")),
+        Seq(col("score").desc, col("antecedent").asc, col("consequent").asc), 1)
       .select(col("user_id"), col("antecedent"),
         col("consequent").as("recommended"), col("score"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.functions.TopK
 import graft.functions.VectorFns._
 import graft.functions.Rounding.{r4, r6}
 
@@ -137,30 +138,23 @@ object Similarity {
   private[graft] def cellAssign2(e: DataFrame, cents: DataFrame,
                                  seedIds: Seq[Long], sm: Long): DataFrame = {
     val supers = supersOf(cents, seedIds, sm)
-    val wSup = Window.partitionBy(col("cell"))
-      .orderBy(col("d2s").asc, col("super").asc)
     // level-1: each CELL attaches to its nearest super (tiny × tiny)
     val cellSuper = cents.crossJoin(broadcast(supers))
       .select(col("cell"), col("cv"), col("super"),
         r6(sqDistArr(col("cv"), col("sv"))).as("d2s"))
-      .withColumn("srk", row_number().over(wSup))
-      .filter(col("srk") === 1).select(col("cell"), col("cv"), col("super"))
+      .transform(TopK.perGroup(_, Seq(col("cell")), Seq(col("d2s").asc, col("super").asc), 1, "srk"))
+      .select(col("cell"), col("cv"), col("super"))
     // level-1: each VECTOR finds its nearest super
-    val wVs = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2s").asc, col("super").asc)
     val vSuper = e.crossJoin(broadcast(supers))
       .select(col("vec_id"), col("v"),
         col("super"), r6(sqDistArr(col("v"), col("sv"))).as("d2s"))
-      .withColumn("srk", row_number().over(wVs))
-      .filter(col("srk") === 1).select(col("vec_id"), col("v"), col("super"))
+      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2s").asc, col("super").asc), 1, "srk"))
+      .select(col("vec_id"), col("v"), col("super"))
     // level-2: argmin over ONLY the vector's super's cells
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cell").asc)
     vSuper.join(broadcast(cellSuper), Seq("super"))
       .select(col("vec_id"), col("v"), col("cell"),
         r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .withColumn("crk", row_number().over(wCell))
-      .filter(col("crk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2").asc, col("cell").asc), 1, "crk"))
       .select(col("vec_id"), col("v"), col("cell"))
   }
 
@@ -179,9 +173,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("cell"), col("vec_id").as("n_id"),
         r6(cosineArr(col("qv"), col("v"))).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    pairs.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perGroup(pairs, Seq(col("q_id")), Seq(col("cos").desc, col("n_id").asc), k)
       .select(col("q_id"), col("cell"), col("n_id"),
         r4(col("cos")).as("cosine"), col("rk"))
   }
@@ -203,9 +195,7 @@ object Similarity {
     val pairs = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         r6(cosineArr(col("qv"), col("v"))).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    pairs.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TOP_K)
+    TopK.perGroup(pairs, Seq(col("q_id")), Seq(col("cos").desc, col("n_id").asc), TOP_K)
       .select(col("q_id"), col("n_id"), r4(col("cos")).as("cosine"), col("rk"))
   }
 
@@ -381,9 +371,7 @@ object Similarity {
   def ivfTopK(e: DataFrame, queryPred: Column, seedIds: Seq[Long],
               probes: Int, k: Int): DataFrame = {
     val pairs = ivfPairs(e, queryPred, seedIds, probes)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    pairs.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perGroup(pairs, Seq(col("q_id")), Seq(col("cos").desc, col("n_id").asc), k)
       .select(col("q_id"), col("cell"), col("n_id"), r4(col("cos")).as("cosine"), col("rk"))
   }
 
@@ -441,12 +429,10 @@ object Similarity {
     // quota denominator = the ACTUAL cell count (the codebook grows
     // with the corpus), computed in-plan as a 1-row broadcast
     val nCells = cents.agg(count(lit(1)).as("n_cells"))
-    val wAsg = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cell").asc)
     val cells = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cell"),
         r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .withColumn("crk", row_number().over(wAsg)).filter(col("crk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2").asc, col("cell").asc), 1, "crk"))
       .select(col("vec_id"), col("cell"))
     val tot = cells.agg(count(lit(1)).as("n_total"))
     val cellN = cells.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
@@ -523,12 +509,10 @@ object Similarity {
     * r6-rounded value the assignment ordered by, so a stored row
     * replays the derive-side tie-break bit-for-bit. */
   private[graft] def cellAssignD(e: DataFrame, cents: DataFrame): DataFrame = {
-    val wAsg = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cell").asc)
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("v"), col("cell"),
         r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .withColumn("crk", row_number().over(wAsg)).filter(col("crk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2").asc, col("cell").asc), 1, "crk"))
       .select(col("vec_id"), col("v"), col("cell"), col("d2"))
   }
 
@@ -835,11 +819,10 @@ object Similarity {
       val pq = pqTopK(e, codes, cents, qPred, TOP_K)
         .select(col("q_id"), col("n_id"))
       val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
       val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
           sqDistArr(col("qv"), col("v")).as("d2"))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= TOP_K)
+        .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
         .select(col("q_id"), col("n_id"))
       val hits = exact.join(pq, Seq("q_id", "n_id")).count()
       // one scalar agg for both fixture counts (r15 — §2.6, the q151
@@ -867,13 +850,11 @@ object Similarity {
     * distances so ties are representation-stable — the q34
     * discipline). */
   private def assignCodes(sub: DataFrame, cents: DataFrame): DataFrame = {
-    val wAsg = Window.partitionBy(col("vec_id"), col("m"))
-      .orderBy(col("d2").asc, col("cell").asc)
     sub.join(broadcast(cents), Seq("m"))
       .select(col("vec_id"), col("m"), col("sv"), col("cell"),
         r6(sqDistArr(col("sv"), col("cv"))).as("d2"))
-      .withColumn("crk", row_number().over(wAsg))
-      .filter(col("crk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("vec_id"), col("m")),
+        Seq(col("d2").asc, col("cell").asc), 1, "crk"))
       .select(col("vec_id"), col("m"), col("sv"), col("cell"))
   }
 
@@ -922,9 +903,7 @@ object Similarity {
       .agg(sum(col("ld2")).as("ad2"), count(lit(1)).as("nm"))
       // only vectors with all M subspace terms (always true, belt+braces)
       .filter(col("nm") === PQ_M)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("ad2").asc, col("vec_id").asc)
-    approx.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perGroup(approx, Seq(col("q_id")), Seq(col("ad2").asc, col("vec_id").asc), k)
       .select(col("q_id"), col("vec_id").as("n_id"),
         r4(col("ad2")).as("approx_d2"), col("rk"))
   }
@@ -966,9 +945,7 @@ object Similarity {
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("ld2")).as("ad2"), count(lit(1)).as("nm"))
       .filter(col("nm") === PQ_M)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("ad2").asc, col("vec_id").asc)
-    ranked.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    TopK.perGroup(ranked, Seq(col("q_id")), Seq(col("ad2").asc, col("vec_id").asc), k)
       .select(col("q_id"), col("vec_id").as("n_id"),
         r4(col("ad2")).as("approx_d2"), col("rk"))
   }
@@ -1097,11 +1074,10 @@ object Similarity {
       val ann = ivfPqTopK(e, IVF_SEEDS, probes, qPred, TOP_K)
         .select(col("q_id"), col("n_id"))
       val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
       val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
           sqDistArr(col("qv"), col("v")).as("d2"))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= TOP_K)
+        .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
         .select(col("q_id"), col("n_id"))
       val hits = exact.join(ann, Seq("q_id", "n_id")).count()
       // one scalar agg for both fixture counts (r15 — §2.6)
@@ -1183,11 +1159,10 @@ object Similarity {
       val raw = ivfPqTopK(e, IVF_SEEDS, probes, qPred, TOP_K)
         .select(col("q_id"), col("n_id"), lit(0).as("is_res"))
       val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
       val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
           sqDistArr(col("qv"), col("v")).as("d2"))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= TOP_K)
+        .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
         .select(col("q_id"), col("n_id"))
       val hitRow = exact.join(res.unionByName(raw), Seq("q_id", "n_id"))
         .agg(sum(col("is_res")).as("res_hits"),
@@ -1249,14 +1224,10 @@ object Similarity {
     * exact probe and its IVF twin, so the swap changes ONLY the
     * neighbor source. */
   private def voteRollup(pairs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    val votes = pairs.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    val votes = TopK.perGroup(pairs, Seq(col("q_id")), Seq(col("cos").desc, col("n_id").asc), k)
       .groupBy(col("q_id"), col("true_label"), col("n_label"))
       .agg(count(lit(1)).as("nv"))
-    val wv = Window.partitionBy(col("q_id"))
-      .orderBy(col("nv").desc, col("n_label").asc)
-    votes.withColumn("vr", row_number().over(wv)).filter(col("vr") === 1)
+    TopK.perGroup(votes, Seq(col("q_id")), Seq(col("nv").desc, col("n_label").asc), 1, "vr")
       .groupBy(col("true_label"))
       .agg(count(lit(1)).as("n_queries"),
         sum(when(col("n_label") === col("true_label"), 1L).otherwise(0L))
@@ -1337,14 +1308,12 @@ object Similarity {
       .select(col("label"), r6(cosineArr(col("v"), col("sv"))).as("icos"))
       .groupBy(col("label"))
       .agg(sum(col("icos").cast("decimal(20,6)")).as("s"), count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("ccos").desc, col("nn_label").asc)
     val nn = cvec.join(
         broadcast(cvec.select(col("label").as("nn_label"), col("sv").as("sv_b"))),
         col("label") =!= col("nn_label"))
       .select(col("label"), col("nn_label"),
         r6(cosineArr(col("sv"), col("sv_b"))).as("ccos"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("label")), Seq(col("ccos").desc, col("nn_label").asc), 1))
     imean.join(nvec, Seq("label")).join(nn, Seq("label"))
       .select(col("label"), col("n_vecs"),
         r4(col("s").cast("double") / col("n")).as("intra_cos"),
@@ -1450,14 +1419,12 @@ object Similarity {
     * candidate pair stream `(a_id, a_label, n_id, n_label, cos)` —
     * shared by the exact miner and its IVF twin. */
   private def mineTriplets(pairs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("a_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
+    val byCos = Seq(col("cos").desc, col("n_id").asc)
     val pos = pairs.filter(col("n_label") === col("a_label"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      .transform(TopK.perGroup(_, Seq(col("a_id")), byCos, 1))
       .select(col("a_id"), col("n_id").as("pos_id"), col("cos").as("pos_cos"))
     val neg = pairs.filter(col("n_label") =!= col("a_label"))
-      .withColumn("neg_rank", row_number().over(w))
-      .filter(col("neg_rank") <= k)
+      .transform(TopK.perGroup(_, Seq(col("a_id")), byCos, k, "neg_rank"))
       .select(col("a_id"), col("a_label"), col("neg_rank"),
         col("n_id").as("neg_id"), col("cos").as("neg_cos"))
     neg.join(pos, Seq("a_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.functions.{MisraGriesAggregator, VectorFns}
+import graft.functions.{MisraGriesAggregator, TopK, VectorFns}
 import graft.functions.Rounding.r4
 
 /**
@@ -143,10 +143,7 @@ object TextOps {
       .crossJoin(broadcast(langs))
       .join(hits, Seq("doc_id", "plang"), "left")
       .na.fill(0L, Seq("hits"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("hits").desc, col("plang").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    TopK.perGroup(scored, Seq(col("doc_id")), Seq(col("hits").desc, col("plang").asc), 1)
       .groupBy(col("lang"), col("plang").as("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
   }
@@ -235,9 +232,8 @@ object TextOps {
     val train = bigrams(docs.filter(col("doc_id") % 5 === 0))
     val profile = train.groupBy(col("lang").as("plang"), col("bg"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("rk", row_number().over(Window.partitionBy(col("plang"))
-        .orderBy(col("cnt").desc, col("bg").asc)))
-      .filter(col("rk") <= BIGRAM_PROFILE_SIZE)
+      .transform(TopK.perGroup(_, Seq(col("plang")), Seq(col("cnt").desc, col("bg").asc),
+        BIGRAM_PROFILE_SIZE))
       .select(col("plang"), col("bg"))
     val langs = profile.select(col("plang")).distinct()
 
@@ -249,9 +245,7 @@ object TextOps {
       .crossJoin(broadcast(langs))
       .join(hits, Seq("doc_id", "plang"), "left")
       .na.fill(0L, Seq("score"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("plang").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    TopK.perGroup(scored, Seq(col("doc_id")), Seq(col("score").desc, col("plang").asc), 1)
       .groupBy(col("lang"), col("plang").as("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
   }
@@ -1049,11 +1043,8 @@ object TextOps {
         col("source"))
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("cnt").desc, col("tok").asc)
-    val head = counts
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= headTerms)
+    val head = TopK.perGroup(counts, Seq(col("source")),
+        Seq(col("cnt").desc, col("tok").asc), headTerms, "rank")
       .select(col("source"),
         r6(log(col("rank").cast("double"))).cast("decimal(20,6)").as("x"),
         r6(log(col("cnt").cast("double"))).cast("decimal(20,6)").as("y"))

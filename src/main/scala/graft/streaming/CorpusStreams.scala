@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.TopK
 
 /** One arriving document for [[CorpusStreams.quotaGateStream]]. */
 case class QuotaDoc(doc_id: Long, source: String, ts: java.sql.Timestamp)
@@ -330,11 +331,9 @@ object CorpusStreams {
   def refreshLm(spark: SparkSession, outDir: String): Unit = {
     import graft.operators.TextOps
     val docsPath = s"$outDir/sheet_docs"
-    val firstArrival = Window.partitionBy(col("doc_id"))
-      .orderBy(col("batch_id").asc)
     val docs = spark.read.option("basePath", docsPath).parquet(docsPath)
-      .withColumn("rn", row_number().over(firstArrival))
-      .filter(col("rn") === 1).drop("rn", "batch_id")
+      .transform(TopK.perGroup(_, Seq(col("doc_id")), Seq(col("batch_id").asc), 1, "rn"))
+      .drop("rn", "batch_id")
     val logp = docs.select(col("doc_id"), col("source"))
       .join(TextOps.lmQualityScores(docs)
         .select(col("doc_id"), col("avg_logp")), Seq("doc_id"), "left")
@@ -589,10 +588,7 @@ object CorpusStreams {
           broadcast(Similarity.supersOf(cents, seedIds, sm)))
         .select(col("cell"), col("cv"), col("super"), col("sv"),
           r6(sqDistArr(col("cv"), col("sv"))).as("d2s"))
-        .withColumn("srk", row_number().over(
-          Window.partitionBy(col("cell"))
-            .orderBy(col("d2s").asc, col("super").asc)))
-        .filter(col("srk") === 1)
+        .transform(TopK.perGroup(_, Seq(col("cell")), Seq(col("d2s").asc, col("super").asc), 1, "srk"))
         .select(col("super"), col("sv"), col("cell"), col("cv"))
         .collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.TopK
 
 /** Input row for the stateful sessionizer. */
 case class UserEvent(user_id: Long, ts: java.sql.Timestamp, event_type: String)
@@ -149,18 +150,16 @@ object EventStreams {
       .agg(graft.functions.Rounding.r6(sum(col("value"))).as("vol"))
       .select(col("window.start").as("w_start"), col("user_id"), col("vol"))
 
-  /** Batch finisher: bounded-heap top-k users per window (the q71
-    * shape — low-cardinality group key, so the heap aggregator beats
-    * a rank window that would single-partition each window's rows). */
-  def topKWithinWindows(batch: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new graft.functions.TopKAggregator(k))
-    batch.groupBy(col("w_start"))
-      .agg(topk(col("user_id"), col("vol")).as("top"))
-      .select(col("w_start"), posexplode(col("top").getField("items")))
-      .select(col("w_start"), col("col._1").as("user_id"),
-        graft.functions.Rounding.r4(col("col._2")).as("volume"),
-        (col("pos") + 1).cast("int").as("rk"))
-  }
+  /** Batch finisher: top-k users per window (the q71 shape —
+    * low-cardinality group key; see [[graft.functions.TopK.perGroup]]
+    * for the partial prune that keeps k rows per window per map
+    * partition before the shuffle). */
+  def topKWithinWindows(batch: DataFrame, k: Int): DataFrame =
+    batch.select(col("w_start"), col("user_id").cast("long").as("user_id"),
+        col("vol").cast("double").as("vol"))
+      .transform(TopK.perGroup(_, Seq(col("w_start")), Seq(col("vol").desc, col("user_id").asc), k))
+      .select(col("w_start"), col("user_id"),
+        graft.functions.Rounding.r4(col("vol")).as("volume"), col("rk"))
 
   /** Streaming trending top-k, end to end: two chained aggregations
     * are not allowed in one streaming query, so the second level (the

@@ -245,7 +245,6 @@ object ScaleProbe {
   def resAnn(dir: String): Unit = {
     val spark = graft.Session.local()
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.expressions.Window
     val S = graft.operators.Similarity
     val e0 = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
@@ -260,11 +259,11 @@ object ScaleProbe {
       val nCells = S.centsOf(e, S.IVF_SEEDS).count()
       val probes = S.ivfPqProbes(nCells)
       val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
       val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
           graft.functions.VectorFns.sqDistArr(col("qv"), col("v")).as("d2"))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
+        .transform(graft.functions.TopK.perGroup(_, Seq(col("q_id")),
+          Seq(col("d2").asc, col("n_id").asc), 10))
         .select(col("q_id"), col("n_id")).cache()
       val nq = q.count()
       def recallOf(ann: DataFrame): Double =

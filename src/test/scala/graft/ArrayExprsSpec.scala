@@ -30,15 +30,21 @@ class ArrayExprsSpec extends SparkSuite {
     assert(r.getDouble(1) == 25.0)
   }
 
+  // named for the aggregator TopK.perGroup replaced; same hand case
   test("TopKAggregator bounds the buffer and breaks ties by id") {
-    import graft.functions.{TopKAggregator, TopKBuf}
-    val agg = new TopKAggregator(2)
-    val r = Seq((5L, 1.0), (1L, 3.0), (2L, 3.0), (9L, 0.5))
-      .foldLeft(agg.zero)(agg.reduce)
-    assert(r.items == Seq((1L, 3.0), (2L, 3.0)))
-    val merged = agg.merge(r, TopKBuf(Seq((0L, 3.0))))
-    assert(merged.items == Seq((0L, 3.0), (1L, 3.0)))
-    assert(agg.merge(agg.zero, agg.zero).items.isEmpty)
+    val s = spark
+    import s.implicits._
+    import graft.functions.TopK
+    def top2(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      TopK.perGroup(df, Seq(col("g")), Seq(col("score").desc, col("id").asc), 2)
+        .orderBy("rk").select("id", "score").as[(Long, Double)].collect().toSeq
+    val part = Seq((0, 5L, 1.0), (0, 1L, 3.0), (0, 2L, 3.0), (0, 9L, 0.5))
+      .toDF("g", "id", "score").repartition(1)
+    assert(top2(part) == Seq((1L, 3.0), (2L, 3.0)))
+    // a second partition's partial (0, 3.0) merges in and wins the tie by id
+    val other = Seq((0, 0L, 3.0)).toDF("g", "id", "score").repartition(1)
+    assert(top2(part.union(other)) == Seq((0L, 3.0), (1L, 3.0)))
+    assert(top2(part.limit(0).union(other.limit(0))).isEmpty)
   }
 
   test("null input propagates to null output") {

@@ -1,44 +1,48 @@
 package graft
 
 import scala.util.Random
-import graft.functions.{TopKAggregator, TopKBuf}
+import org.apache.spark.sql.functions.col
+import graft.functions.TopK
 
 /** Randomized-property guards (seeded — fully reproducible) for the
-  * foundational pieces every oracle row rides on: the bounded-heap
-  * top-k aggregator's algebra (its correctness at scale DEPENDS on
-  * merge order-insensitivity — partial buffers combine in arbitrary
-  * shuffle order), the cross-engine rounding convention, and the
+  * foundational pieces every oracle row rides on: the per-group top-k
+  * primitive (its correctness at scale DEPENDS on the partial
+  * per-partition prune merging to the exact answer whatever rows each
+  * partition holds), the cross-engine rounding convention, and the
   * batch sessionizer against a brute-force model. */
 class PropertySpec extends SparkSuite {
 
-  private def randPairs(rnd: Random, n: Int): Seq[(Long, Double)] =
-    Seq.fill(n)((rnd.nextInt(50).toLong, rnd.nextInt(21).toDouble / 4.0 - 2.5))
-
-  private def viaAgg(k: Int, xs: Seq[(Long, Double)]): Seq[(Long, Double)] = {
-    val agg = new TopKAggregator(k)
-    xs.foldLeft(agg.zero)((b, x) => agg.reduce(b, x)).items
-  }
-  private def expected(k: Int, xs: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    xs.sortBy { case (id, s) => (-s, id) }.take(k)
-
+  // named for the aggregator TopK.perGroup replaced: "reduce" is the
+  // per-partition prune, "merge" the final limit over the shuffled partials
   test("TopKAggregator: reduce = exact sorted top-k; merge order-insensitive") {
+    val s = spark
+    import s.implicits._
+    def top(df: org.apache.spark.sql.DataFrame, k: Int): Seq[(Int, Long, Double, Int)] =
+      TopK.perGroup(df, Seq(col("g")), Seq(col("score").desc, col("id").asc), k)
+        .as[(Int, Long, Double, Int)].collect().toSeq.sortBy(r => (r._1, r._4))
+    def part(rows: Seq[(Int, Long, Double)]) = rows.toDF("g", "id", "score").repartition(1)
     val rnd = new Random(42)
-    for (_ <- 1 to 300) {
-      val xs = randPairs(rnd, rnd.nextInt(30))
-      val ys = randPairs(rnd, rnd.nextInt(30))
-      assert(viaAgg(3, xs) == expected(3, xs))
-      val agg = new TopKAggregator(3)
-      val a = TopKBuf(viaAgg(3, xs)); val b = TopKBuf(viaAgg(3, ys))
-      assert(agg.merge(a, b).items == agg.merge(b, a).items)
-      assert(agg.merge(a, b).items == expected(3, xs ++ ys))
-      // splitting anywhere and merging equals one-shot reduction
-      val all = xs ++ ys
-      if (all.nonEmpty) {
-        val cut = rnd.nextInt(all.size + 1)
-        val (l, r) = all.splitAt(cut)
-        assert(agg.merge(TopKBuf(viaAgg(3, l)), TopKBuf(viaAgg(3, r))).items ==
-          viaAgg(3, all))
+    // a hand case first: k = 2 bounds the group, and the three-way tie
+    // at 3.0 breaks by id
+    val hand = Seq((0, 5L, 1.0), (0, 1L, 3.0), (0, 2L, 3.0), (0, 9L, 0.5), (0, 0L, 3.0))
+    // scores on a 21-value grid force ties; ids may repeat in a group
+    val inputs = (hand, 2) +: Seq.fill(12)((
+      Seq.fill(rnd.nextInt(120))((rnd.nextInt(6), rnd.nextInt(50).toLong,
+        rnd.nextInt(21).toDouble / 4.0 - 2.5)),
+      1 + rnd.nextInt(5)))
+    for ((rows, k) <- inputs) {
+      val want = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (_, xs) =>
+        xs.sortBy { case (_, id, sc) => (-sc, id) }.take(k).zipWithIndex
+          .map { case ((g, id, sc), i) => (g, id, sc, i + 1) }
       }
+      for (n <- Seq(1, 3, 7))
+        assert(top(rows.toDF("g", "id", "score").repartition(n), k) == want,
+          s"k=$k partitions=$n")
+      // split anywhere into two partitions: either merge order equals
+      // the one-shot answer
+      val (l, r) = rows.splitAt(rnd.nextInt(rows.size + 1))
+      assert(top(part(l).union(part(r)), k) == want, s"k=$k split=${l.size}")
+      assert(top(part(r).union(part(l)), k) == want, s"k=$k split=${l.size} swapped")
     }
   }
 

@@ -47,6 +47,11 @@ class RecommenderSpec extends SparkSuite {
     assert(got == want)
   }
 
+  test("itemKnnTopK rejects kItems = 0 instead of returning an empty frame") {
+    intercept[IllegalArgumentException](
+      Recommender.itemKnnTopK(tiny, lit(true), kNeighbors = 2, kItems = 0))
+  }
+
   test("itemSimsDimsum at threshold 0 equals the exact item-item cosine") {
     val s = spark
     import s.implicits._
