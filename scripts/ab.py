@@ -1,0 +1,121 @@
+#!/usr/bin/env python3
+"""A/B the benchmark between two checkouts, in alternating pairs.
+
+    python3 scripts/ab.py BASE CHANGE --workload fold_eval --seeds 61-70
+    python3 scripts/ab.py BASE CHANGE --workload corpus_dedup --seeds 61,63,65 --json ab.json
+
+BASE and CHANGE are two checkouts of the repository (for example a
+`git clone` of the parent commit and the working tree). For each seed the
+script runs `python3 perfbench/run.py --workload W --seed S --seconds N
+--trace 0` once in each checkout, alternating which side goes first from
+pair to pair, and reads the JSON object each run prints last. It then
+prints, for every end-to-end metric of CHANGE's BENCHMARK.json, each
+side's median and quartiles, the number of pairs each side won, and
+whether the gap between the medians exceeds BASE's interquartile range;
+then each side's failed and attempted operations and incorrect runs.
+
+Each checkout builds and runs its own perfbench/ and keeps its build in
+its own .bench_build/; this script only reads their output and never
+writes under perfbench/. A run that exits non-zero is reported and
+counted as a lost pair for that side. Standard library only.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def parse_seeds(text):
+    seeds = []
+    for part in text.split(","):
+        lo, _, hi = part.partition("-")
+        seeds += range(int(lo), int(hi or lo) + 1)
+    return seeds
+
+
+def run(checkout, workload, seed, seconds):
+    """One untraced run; returns its result object, or None if it failed."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
+    if p.returncode != 0 or not lines:
+        sys.stderr.write(f"[ab] {checkout} seed {seed} exited {p.returncode}\n"
+                         f"{p.stderr[-2000:]}\n")
+        return None
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4)
+    return q[0], q[2]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("base")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="e.g. 61-70 or 61,63,65")
+    ap.add_argument("--seconds", type=float, default=5)
+    ap.add_argument("--json", help="also write every run's result here")
+    a = ap.parse_args()
+    sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
+    with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+
+    pairs = []
+    for n, seed in enumerate(parse_seeds(a.seeds)):
+        order = ["base", "change"] if n % 2 == 0 else ["change", "base"]
+        pair = {"seed": seed, "first": order[0]}
+        for side in order:
+            pair[side] = run(sides[side], a.workload, seed, a.seconds)
+        pairs.append(pair)
+        summary = "  ".join(
+            f"{s} job_s={pair[s]['metrics']['job_s']['value']:.3f}" if pair[s] else f"{s} FAILED"
+            for s in sides)
+        print(f"[ab] pair {n + 1} seed {seed} ({order[0]} first): {summary}", flush=True)
+    if a.json:
+        with open(a.json, "w") as f:
+            json.dump(pairs, f, indent=1)
+
+    print(f"\n{a.workload}: {len(pairs)} pairs, base = {sides['base']}, "
+          f"change = {sides['change']}")
+    print(f"{'metric':<20}{'base median [q1, q3]':>30}{'change median [q1, q3]':>30}"
+          f"{'wins b/c':>10}  gap > base IQR")
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        vals = {s: [p[s]["metrics"][name]["value"] if p[s] else None for p in pairs]
+                for s in sides}
+        wins = {"base": 0, "change": 0}
+        for b, c in zip(vals["base"], vals["change"]):
+            if b is None and c is None:
+                continue
+            if b is None or c is None:
+                wins["change" if b is None else "base"] += 1
+            elif b != c:
+                wins["change" if (c < b) == lower else "base"] += 1
+        stats = {}
+        for s in sides:
+            xs = [x for x in vals[s] if x is not None]
+            stats[s] = (statistics.median(xs), *quartiles(xs)) if xs else None
+        text = {s: "-" if stats[s] is None else "{:.4g} [{:.4g}, {:.4g}]".format(*stats[s])
+                for s in sides}
+        b, c = stats["base"], stats["change"]
+        gap = "-" if b is None or c is None else "yes" if abs(c[0] - b[0]) > b[2] - b[1] else "no"
+        print(f"{name:<20}{text['base']:>30}{text['change']:>30}"
+              f"{str(wins['base']) + '/' + str(wins['change']):>10}  {gap}")
+    for s in ("base", "change"):
+        ok = [p[s] for p in pairs if p[s]]
+        print(f"{s}: failed {sum(r['failed'] for r in ok)} of {sum(r['attempted'] for r in ok)}"
+              f" operations, {sum(not r['correct'] for r in ok)} incorrect runs,"
+              f" {len(pairs) - len(ok)} runs that did not finish")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

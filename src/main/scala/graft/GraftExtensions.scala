@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.optimizer.ReassignLambdaVariableID
 import graft.functions.{DotProduct, SquaredDistance}
 
 /**
@@ -19,10 +20,19 @@ import graft.functions.{DotProduct, SquaredDistance}
  * doesn't expose) as `bloom_agg` / `bloom_contains` — the build-once
  * probe-everywhere sketch that [[graft.operators.Skew.bloomPrune]]
  * uses for semi-join reduction.
+ *
+ * And it renumbers lambda variables in the plan the session cache
+ * looks up (Catalyst's own `ReassignLambdaVariableID`, which the
+ * optimizer runs later anyway). A typed Dataset's array decoders draw
+ * those ids from a global counter, so without it two builds of one
+ * typed plan never match each other's cache entry — the session
+ * cache over [[graft.functions.Gram.pairs]] (`itemSimsCached`) would
+ * be rebuilt by every query that reads it.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlanNormalizationRule(_ => ReassignLambdaVariableID)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.Rounding.{r4, r6}
-import graft.functions.TopK
+import graft.functions.{Gram, TopK}
 
 /**
  * Collaborative-filtering kNN recommenders (SURVEY.md §2.10 R1-R5,
@@ -17,9 +17,15 @@ import graft.functions.TopK
  * of collected matrices.
  *
  * Scale design: every stage is a keyed shuffle — no all-pairs
- * crossJoin anywhere. Pair similarities come from a self-equi-join on
- * the shared dimension (item for user-user, user for item-item), so
- * only co-rated pairs materialize (Σ n_k² over keys, not N²). Per-user
+ * crossJoin anywhere. All-pairs co-rating aggregates come from
+ * [[graft.functions.Gram.pairs]] over the shared dimension (user for
+ * item-item, item for user-user): a blocked sparse Gram product whose
+ * block tasks finish every pair inside the partition, so only the
+ * sorted per-key profiles cross the shuffle (Σ n_k·min(n_k, B)
+ * entries for B shuffle partitions, never more than the Σ n_k² rows a
+ * self-join would emit) and only co-rated pairs materialize. Cohort-
+ * restricted pair stages stay cohort-sized self-joins, and so does
+ * the half table [[userDotsHalf]] (see there). Per-user
  * norm/mean dimensions are broadcast. Cosine ranks are computed on
  * values rounded to 6 dp with a deterministic id tie-break so top-k
  * selection is stable across engines and accumulation orders; final
@@ -284,7 +290,7 @@ object Recommender {
   /** User-user similarities `(u, v, sim)` under any [[Kernel]],
     * 6-dp rounded — the reference's similarity SPI surface.
     *
-    * By default pairs are CO-RATED pairs only (the keyed self-join on
+    * By default pairs are CO-RATED pairs only (the pair stage keyed on
     * item_id): a pair sharing no item never materializes. That is the
     * scale posture — the dense complement is |U|² and not computable at
     * catalog scale. For neighbor selection it is EXACT for Cosine and
@@ -328,7 +334,10 @@ object Recommender {
     * kernel runs over the same ratings pay the big keyed self-join
     * shuffle ONCE instead of N times. Must be built over the same
     * capped ratings the consumer uses (the default un-capped form
-    * here). */
+    * here). It stays a self-join on purpose: [[Gram.pairs]] emits
+    * both halves, and computing both to keep one measured no faster on
+    * the sf0.1 user-side queries that read this table (q16, q30, q59,
+    * q63). */
   def userDotsHalf(ratings: DataFrame): DataFrame = {
     val a = ratings.select(col("user_id").as("u"), col("item_id"), col("rating").as("ra"))
     val b = ratings.select(col("user_id").as("v"), col("item_id"), col("rating").as("rb"))
@@ -383,7 +392,6 @@ object Recommender {
   private def coRatedDots(r: DataFrame,
                           restrict: Option[DataFrame => DataFrame],
                           dotsSource: Option[DataFrame]): DataFrame = {
-    val b = r.select(col("user_id").as("v"), col("item_id"), col("rating").as("rb"))
     (dotsSource, restrict) match {
       case (Some(half), narrow) =>
         // shared pre-aggregated half table ([[userDotsHalf]], caller
@@ -401,20 +409,15 @@ object Recommender {
         // cohort run: only (target, *) pairs exist — direct form
         narrow(r)
           .select(col("user_id").as("u"), col("item_id"), col("rating").as("ra"))
-          .join(b, Seq("item_id"))
+          .join(r.select(col("user_id").as("v"), col("item_id"), col("rating").as("rb")),
+            Seq("item_id"))
           .filter(col("u") =!= col("v"))
           .groupBy(col("u"), col("v"))
           .agg(sum(col("ra") * col("rb")).as("dot"), count(lit(1)).as("co"))
       case (None, None) =>
-        // all-users run: aggregate each UNORDERED pair once (u < v
-        // halves the agg input) and mirror the result
-        val a = r.select(col("user_id").as("u"), col("item_id"), col("rating").as("ra"))
-        val half = a.join(b, Seq("item_id"))
-          .filter(col("u") < col("v"))
-          .groupBy(col("u"), col("v"))
-          .agg(sum(col("ra") * col("rb")).as("dot"), count(lit(1)).as("co"))
-        half.union(half.select(col("v").as("u"), col("u").as("v"),
-          col("dot"), col("co")))
+        // all-users run: the mirrored pairs straight from the kernel
+        Gram.pairs(r, "item_id", "user_id", "rating")
+          .select(col("i").as("u"), col("j").as("v"), col("dot"), col("co"))
     }
   }
 
@@ -585,13 +588,18 @@ object Recommender {
           .select(col("v"))
       case _ =>
         val tCut = prefix(cut - 1)._2
+        // an empty cohort has no target to widen the prefix for: its
+        // cohort min/max read null and the margin is moot
         val delta = kernel match {
           case Kernel.Pearson =>
             val tMin = scalars
               .join(broadcast(cohortU.select(col("u").as("v"))), Seq("v"), "left_semi")
-              .agg(min(col("t"))).collect()(0).getDouble(0)
-            val cMin = bigN * tMin
-            if (cMin > 0) 2e-6 / cMin else Double.PositiveInfinity
+              .agg(min(col("t"))).collect()(0)
+            if (tMin.isNullAt(0)) 0.0
+            else {
+              val cMin = bigN * tMin.getDouble(0)
+              if (cMin > 0) 2e-6 / cMin else Double.PositiveInfinity
+            }
           case _ =>
             val flagged = moments.join(
               broadcast(cohortU.select(col("u").as("user_id"), lit(1).as("in_c"))),
@@ -600,8 +608,11 @@ object Recommender {
               max(col("q").cast("double")).as("q_all"),
               max(when(col("in_c") === 1, col("q").cast("double"))).as("q_coh"))
               .collect()(0)
-            val q0 = row.getDouble(0) + row.getDouble(1)
-            4e-6 * math.sqrt(q0) * (1.0 + math.sqrt(q0)) * (1.0 + math.sqrt(q0))
+            if (row.isNullAt(1)) 0.0
+            else {
+              val q0 = row.getDouble(0) + row.getDouble(1)
+              4e-6 * math.sqrt(q0) * (1.0 + math.sqrt(q0)) * (1.0 + math.sqrt(q0))
+            }
         }
         val threshold = tCut + delta
         if (threshold.isInfinite || threshold.isNaN)
@@ -614,7 +625,7 @@ object Recommender {
 
   /** Heavy-key cap for the quadratic pair stages: truncate each user's
     * profile to their top-`maxItems` rows by (rating desc, item_id asc)
-    * BEFORE any self-join on user_id. The per-user pair fan-out is
+    * BEFORE any pair stage keyed on user_id. The per-user pair fan-out is
     * Σᵤ n(u)² — unbounded on power users (a 10k-item user alone emits
     * ~50M pairs into one task); with the cap it is ≤ |U|·maxItems².
     * `Int.MaxValue` (the default everywhere) keeps the exact path. */
@@ -649,7 +660,13 @@ object Recommender {
     * zero-inclusive N (here the USER catalog) to an externally
     * configured count — the reference's `_numberOfUsers`, which also
     * counts users absent from the training fold; default is
-    * countDistinct over the input. */
+    * countDistinct over the input.
+    *
+    * The pair aggregates come mirrored from [[Gram.pairs]] keyed on
+    * user_id: the shuffle carries each user's sorted profile once per
+    * item block it touches (Σ_u n_u·min(n_u, B) entries), each block
+    * task holds its share plus O(|items|) accumulators, and every row
+    * of one `i` comes out of one task. */
   def itemSims(ratings: DataFrame,
                kernel: Kernel = Kernel.Cosine,
                maxItemsPerUser: Int = Int.MaxValue,
@@ -659,15 +676,7 @@ object Recommender {
       sum(col("rating")).as("s"),
       sum(col("rating") * col("rating")).as("q"),
       count(lit(1)).as("n"))
-    val a = r.select(col("user_id"), col("item_id").as("i"), col("rating").as("ra"))
-    val b = r.select(col("user_id"), col("item_id").as("j"), col("rating").as("rb"))
-    // symmetric kernel: one agg per unordered pair, mirrored after
-    val half = a.join(b, Seq("user_id"))
-      .filter(col("i") < col("j"))
-      .groupBy(col("i"), col("j"))
-      .agg(sum(col("ra") * col("rb")).as("dot"), count(lit(1)).as("co"))
-    val withMoments = half
-      .union(half.select(col("j").as("i"), col("i").as("j"), col("dot"), col("co")))
+    val withMoments = Gram.pairs(r, "user_id", "item_id", "rating")
       .join(broadcast(moments.select(col("item_id").as("i"), col("s").as("sa"),
         col("q").as("qa"), col("n").as("na"))), Seq("i"))
       .join(broadcast(moments.select(col("item_id").as("j"), col("s").as("sb"),
@@ -915,12 +924,54 @@ object Recommender {
         r4(abs(col("actual") - (col("umean") + col("num") / col("den")))).as("abs_err"))
   }
 
+  /** The measured exact↔DIMSUM crossover for item-item sims, in
+    * pair-dot products Σ_u n_u², measured when the exact stage was a
+    * self-join that shuffled one row per product (BASELINE §round-10,
+    * `scale_probe_r10_knn_*.json`): at sf0.1's
+    * 26.9 M pair-dots the exact kernel and the sampled estimator
+    * price inside each other's band; at sf1's 269 M the exact kernel
+    * pays ~10× while DIMSUM's sampling cap holds its growth to ~3×.
+    * The gate flips between the two measured points, at the volume
+    * where the exact join's Σ n² term starts to dominate the fixed
+    * scan+moment work both sides share. */
+  val DIMSUM_MIN_PAIRDOTS: Long = 100000000L
+
+  /** [[itemSimsAuto]]'s pure decision rule, exposed so the boundary
+    * is unit-testable without building either plan: sample iff the
+    * exact pair stage would emit at least
+    * [[DIMSUM_MIN_PAIRDOTS]] pair-dot rows. */
+  def resolveDimsum(pairDots: Long): Boolean =
+    pairDots >= DIMSUM_MIN_PAIRDOTS
+
+  /** Item-item sims with the pair stage SIZED instead of assumed (the
+    * q93 `triangleCountsAuto` posture applied to the R5 kernel): one
+    * bounded scalar agg prices the exact pair stage's work
+    * (Σ_u n_u² products — computable from per-user counts WITHOUT
+    * building any pair), then the gate picks the exact kernel below
+    * the measured crossover and the DIMSUM estimator above it. The registered q17
+    * (exact) and q17b (DIMSUM) stay fixed for hash-compat; Auto is
+    * the library default for new callers, like Content's
+    * CandidateSource.Auto. Returns mirrored 6-dp `(i, j, sim)` —
+    * the `simsSource` contract. The sizing agg and the chosen kernel
+    * both read `ratings` as given: callers own caching, as for every
+    * library call (see [[itemSimsCached]]). */
+  def itemSimsAuto(ratings: DataFrame,
+                   threshold: Double = 0.3): DataFrame = {
+    val pairDots = ratings.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("c"))
+      .agg(sum(col("c") * col("c")).cast("long")).collect()(0).getLong(0)
+    if (resolveDimsum(pairDots))
+      mirrorSims(itemSimsDimsum(ratings, threshold))
+        .select(col("i"), col("j"), r6(col("sim")).as("sim"))
+    else itemSims(ratings)
+  }
+
   /** The 100-TB similarity path SURVEY §2.9 K1 names: DIMSUM sampling
     * (Zadeh & Goel's magnitude-proportional row sampling) over the
     * user×item interaction matrix — probabilistic magnitude pruning
     * that bounds shuffle size independently of the co-rating fan-out,
-    * where the exact self-join pair-dot (userKnnTopK/itemKnnTopK)
-    * grows with Σ n_k².
+    * where the exact pair-dot (userKnnTopK/itemKnnTopK) grows with
+    * Σ n_k².
     *
     * Rebuilt round 6 as a DETERMINISTIC DataFrame pipeline (the
     * repo-wide hash-sampling discipline, never rand()) replacing
@@ -941,48 +992,11 @@ object Recommender {
     * quantized to 6 dp so both engines share the literal; norms come
     * from exact integer ten-thousandths sums (order-independent).
     * θ < 1e-6 disables sampling: the output IS the exact cosine.
+    * The kept rows' pair dots come from [[Gram.pairs]] keyed on
+    * user_id (mirrored, then `i < j` kept), so the shuffle carries the
+    * sampled profiles, Σ_u k_u·min(k_u, B) entries for k_u kept rows,
+    * and a block task holds its share plus O(|items|) accumulators.
     * Returns (i, j, sim) with i < j, sim unrounded (seams round r6). */
-  /** The measured exact↔DIMSUM crossover for item-item sims, in
-    * pair-dot rows Σ_u n_u² — the exact self-join's shuffle volume
-    * (BASELINE §round-10, `scale_probe_r10_knn_*.json`): at sf0.1's
-    * 26.9 M pair-dots the exact kernel and the sampled estimator
-    * price inside each other's band; at sf1's 269 M the exact kernel
-    * pays ~10× while DIMSUM's sampling cap holds its growth to ~3×.
-    * The gate flips between the two measured points, at the volume
-    * where the exact join's Σ n² term starts to dominate the fixed
-    * scan+moment work both sides share. */
-  val DIMSUM_MIN_PAIRDOTS: Long = 100000000L
-
-  /** [[itemSimsAuto]]'s pure decision rule, exposed so the boundary
-    * is unit-testable without building either plan: sample iff the
-    * exact pair stage would emit at least
-    * [[DIMSUM_MIN_PAIRDOTS]] pair-dot rows. */
-  def resolveDimsum(pairDots: Long): Boolean =
-    pairDots >= DIMSUM_MIN_PAIRDOTS
-
-  /** Item-item sims with the pair stage SIZED instead of assumed (the
-    * q93 `triangleCountsAuto` posture applied to the R5 kernel): one
-    * bounded scalar agg prices the exact self-join's shuffle
-    * (Σ_u n_u² — computable from per-user counts WITHOUT building the
-    * join), then the gate picks the exact kernel below the measured
-    * crossover and the DIMSUM estimator above it. The registered q17
-    * (exact) and q17b (DIMSUM) stay fixed for hash-compat; Auto is
-    * the library default for new callers, like Content's
-    * CandidateSource.Auto. Returns mirrored 6-dp `(i, j, sim)` —
-    * the `simsSource` contract. The sizing agg and the chosen kernel
-    * both read `ratings` as given: callers own caching, as for every
-    * library call (see [[itemSimsCached]]). */
-  def itemSimsAuto(ratings: DataFrame,
-                   threshold: Double = 0.3): DataFrame = {
-    val pairDots = ratings.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("c"))
-      .agg(sum(col("c") * col("c")).cast("long")).collect()(0).getLong(0)
-    if (resolveDimsum(pairDots))
-      mirrorSims(itemSimsDimsum(ratings, threshold))
-        .select(col("i"), col("j"), r6(col("sim")).as("sim"))
-    else itemSims(ratings)
-  }
-
   def itemSimsDimsum(ratings: DataFrame, threshold: Double): DataFrame = {
     val sgQ: Double =
       if (threshold < 1e-6) Double.PositiveInfinity
@@ -1005,12 +1019,8 @@ object Recommender {
     val kept = withP.filter(
       Dedup.baseHash(concat_ws(":", col("user_id"), col("item_id"),
         lit("dimsum"))) < col("p_q"))
-    val a = kept.select(col("user_id"), col("item_id").as("i"), col("rating").as("ra"))
-    val b = kept.select(col("user_id"), col("item_id").as("j"), col("rating").as("rb"))
-    a.join(b, Seq("user_id"))
+    Gram.pairs(kept, "user_id", "item_id", "rating")
       .filter(col("i") < col("j"))
-      .groupBy(col("i"), col("j"))
-      .agg(sum(col("ra") * col("rb")).as("dot"))
       .join(broadcast(norms.select(col("item_id").as("i"), col("cnorm").as("ca"))), Seq("i"))
       .join(broadcast(norms.select(col("item_id").as("j"), col("cnorm").as("cb"))), Seq("j"))
       .select(col("i"), col("j"),
@@ -1043,8 +1053,8 @@ object Recommender {
   /** User-user sims with the pair stage SIZED instead of assumed —
     * [[itemSimsAuto]] mirrored onto the user side (VERDICT r10 next
     * #1): one bounded scalar agg prices the exact [[userDotsHalf]]
-    * self-join's shuffle volume (Σ_i raters_i², computable from
-    * per-ITEM counts WITHOUT building the join), then the gate picks
+    * pair stage's work (Σ_i raters_i² products, computable from
+    * per-ITEM counts WITHOUT building any pair), then the gate picks
     * the exact cosine kernel below the measured crossover and the
     * transposed DIMSUM estimator above it. The crossover constant is
     * shared with the item side ([[DIMSUM_MIN_PAIRDOTS]]): both

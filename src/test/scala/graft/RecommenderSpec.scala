@@ -198,6 +198,16 @@ class RecommenderSpec extends SparkSuite {
     assert(math.abs(denseSims(3) - 1.0 / (1.0 + math.sqrt(26.0))) < 1e-6)
   }
 
+  test("dense user-kNN over an empty cohort returns no rows, as the sparse path does") {
+    Seq(Kernel.Pearson, Kernel.InvEuclidean).foreach { k =>
+      Seq(false, true).foreach { dense =>
+        val got = Recommender.userKnnTopK(tiny, kNeighbors = 2, kItems = 2,
+          targetUsers = Some(lit(false)), kernel = k, dense = dense)
+        assert(got.count() == 0, s"$k dense = $dense")
+      }
+    }
+  }
+
   test("Pearson catalogSize pins the zero-inclusive N to the configured catalog") {
     val s = spark
     import s.implicits._
