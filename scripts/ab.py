@@ -10,9 +10,10 @@ script runs `python3 perfbench/run.py --workload W --seed S --seconds N
 --trace 0` once in each checkout, alternating which side goes first from
 pair to pair, and reads the JSON object each run prints last. It then
 prints, for every end-to-end metric of CHANGE's BENCHMARK.json, each
-side's median and quartiles, the number of pairs each side won, and
-whether the gap between the medians exceeds BASE's interquartile range;
-then each side's failed and attempted operations and incorrect runs.
+side's median and quartiles, the number of pairs each side won, whether
+the gap between the medians exceeds BASE's interquartile range, and a
+regression verdict against the metric's `bound` (see `verdict`); then
+each side's failed and attempted operations and incorrect runs.
 
 Each checkout builds and runs its own perfbench/ and keeps its build in
 its own .bench_build/; this script only reads their output and never
@@ -55,6 +56,35 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(base, change, bound, lower):
+    """The regression verdict for one end-to-end metric, from each side's
+    run values (None for a run that did not finish) and the metric's
+    relative `bound`:
+
+    worse       CHANGE's median is worse than BASE's by more than the bound
+                (or no CHANGE run finished);
+    unresolved  BASE's IQR/median exceeds the bound, and not every CHANGE
+                run beats every BASE run, so the runs spread too widely
+                to tell (or no BASE run finished);
+    ok          otherwise.
+    """
+    base = [x for x in base if x is not None]
+    change = [x for x in change if x is not None]
+    if not change:
+        return "worse" if base else "unresolved"
+    if not base:
+        return "unresolved"
+    bm, cm = statistics.median(base), statistics.median(change)
+    scale = abs(bm) or float("inf")
+    if ((cm - bm) if lower else (bm - cm)) / scale > bound:
+        return "worse"
+    q1, q3 = quartiles(base)
+    beats_all = max(change) < min(base) if lower else min(change) > max(base)
+    if (q3 - q1) / scale > bound and not beats_all:
+        return "unresolved"
+    return "ok"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("base")
@@ -86,7 +116,7 @@ def main():
     print(f"\n{a.workload}: {len(pairs)} pairs, base = {sides['base']}, "
           f"change = {sides['change']}")
     print(f"{'metric':<20}{'base median [q1, q3]':>30}{'change median [q1, q3]':>30}"
-          f"{'wins b/c':>10}  gap > base IQR")
+          f"{'wins b/c':>10}  gap > base IQR  verdict (bound)")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         vals = {s: [p[s]["metrics"][name]["value"] if p[s] else None for p in pairs]
@@ -107,8 +137,10 @@ def main():
                 for s in sides}
         b, c = stats["base"], stats["change"]
         gap = "-" if b is None or c is None else "yes" if abs(c[0] - b[0]) > b[2] - b[1] else "no"
+        v = verdict(vals["base"], vals["change"], m["bound"], lower)
         print(f"{name:<20}{text['base']:>30}{text['change']:>30}"
-              f"{str(wins['base']) + '/' + str(wins['change']):>10}  {gap}")
+              f"{str(wins['base']) + '/' + str(wins['change']):>10}  {gap:<14}  "
+              f"{v} ({m['bound']:g})")
     for s in ("base", "change"):
         ok = [p[s] for p in pairs if p[s]]
         print(f"{s}: failed {sum(r['failed'] for r in ok)} of {sum(r['attempted'] for r in ok)}"

@@ -23,10 +23,14 @@ Does two things, in order:
                   AND the series' own band_or_regression == "band" ) )
    — the CPU arm: process-CPU is insensitive to ambient host
    contention, so a wall shift with flat CPU is the host-day band,
-   not a regression (VERDICT r11 next #7 / r12 #6).  Adopt -> commit
-   the new series with the arithmetic in the message; reject ->
-   `git checkout` the committed reference back.  Either way the
-   decision line is printed for BASELINE.md.
+   not a regression (VERDICT r11 next #7 / r12 #6).  Floors are only
+   ratio-compared at equal core counts (the artifacts' `cpus`): when
+   the counts differ, or either artifact does not record one, the
+   comparison is `incomparable` and the new series is adopted iff it
+   finished every repeat with no query errors.  Adopt -> commit the
+   new series with the arithmetic in the message; reject -> `git
+   checkout` the committed reference back.  Either way the decision
+   line is printed for BASELINE.md.
 """
 import json
 import statistics
@@ -72,15 +76,19 @@ def floors_of(blob, key):
     return {q: v for q, v in f.items() if isinstance(v, (int, float)) and v > 0}
 
 
-def adjudicate(round_no, dry):
-    tree_differs = subprocess.run(
-        ["git", "diff", "--quiet", "HEAD", "--", "bench_results.json"]
-    ).returncode != 0
-    if not tree_differs:
-        print("[bench] bench_results.json matches HEAD — nothing to adjudicate")
-        return
-    ref = json.loads(run("git", "show", "HEAD:bench_results.json"))
-    new = json.load(open("bench_results.json"))
+def decide(round_no, ref, new):
+    """(adopt, decision line) for the series `new` against the reference
+    `ref`, both parsed bench_results.json objects."""
+    if ref.get("cpus") is None or ref.get("cpus") != new.get("cpus"):
+        finished = (new.get("repeats_done", 0) >= new.get("repeats_target", float("inf"))
+                    and not new.get("errors"))
+        return finished, (
+            f"r{round_no} bench adjudication: incomparable — series at "
+            f"{new.get('cpus', '?')} cpus vs reference at {ref.get('cpus', '?')} cpus, "
+            f"floors not compared; {new.get('repeats_done', 0)}/"
+            f"{new.get('repeats_target', '?')} repeats, {len(new.get('errors') or {})} "
+            f"query errors -> " + ("ADOPTED (complete series)" if finished
+                                   else "REJECTED (restored)"))
     wr, wn = floors_of(ref, "floors"), floors_of(new, "floors")
     cr, cn = floors_of(ref, "floors_cpu"), floors_of(new, "floors_cpu")
     shared_w = sorted(q for q in wr if q in wn)
@@ -97,11 +105,23 @@ def adjudicate(round_no, dry):
     cpu_arm = cpu_med <= CPU_TOL and verdict == "band"
     adopt = rep_new >= rep_ref and (wall_arm or cpu_arm)
     arm = ("wall" if wall_arm else "cpu" if cpu_arm else "none")
-    line = (f"r{round_no} bench adjudication: {len(wn)}q/{rep_new}rep series vs "
-            f"{len(wr)}q/{rep_ref}rep reference — shared wall-floor median "
-            f"{wall_med:.3f}, CPU median {cpu_med:.3f} (n={len(shared_c)}), "
-            f"verdict '{verdict}' -> "
-            + (f"ADOPTED via the {arm} arm" if adopt else "REJECTED (restored)"))
+    return adopt, (f"r{round_no} bench adjudication: {len(wn)}q/{rep_new}rep series vs "
+                   f"{len(wr)}q/{rep_ref}rep reference — shared wall-floor median "
+                   f"{wall_med:.3f}, CPU median {cpu_med:.3f} (n={len(shared_c)}), "
+                   f"verdict '{verdict}' -> "
+                   + (f"ADOPTED via the {arm} arm" if adopt else "REJECTED (restored)"))
+
+
+def adjudicate(round_no, dry):
+    tree_differs = subprocess.run(
+        ["git", "diff", "--quiet", "HEAD", "--", "bench_results.json"]
+    ).returncode != 0
+    if not tree_differs:
+        print("[bench] bench_results.json matches HEAD — nothing to adjudicate")
+        return
+    ref = json.loads(run("git", "show", "HEAD:bench_results.json"))
+    new = json.load(open("bench_results.json"))
+    adopt, line = decide(round_no, ref, new)
     print("[bench] " + line)
     print("[bench] record this line in BASELINE.md")
     if dry:

@@ -1,0 +1,42 @@
+"""Tests for the regression verdict of scripts/ab.py.
+
+    python3 -m unittest discover -s scripts
+"""
+import unittest
+
+from ab import verdict
+
+
+class VerdictTest(unittest.TestCase):
+    # a quiet base: median 10.0, quartiles about [9.9, 10.1]
+    quiet = [9.8, 9.9, 10.0, 10.0, 10.1, 10.2]
+
+    def test_within_the_bound_is_ok(self):
+        self.assertEqual(verdict(self.quiet, [x * 1.2 for x in self.quiet], 0.25, True), "ok")
+        self.assertEqual(verdict(self.quiet, [x * 0.8 for x in self.quiet], 0.25, False), "ok")
+
+    def test_median_worse_by_more_than_the_bound(self):
+        self.assertEqual(verdict(self.quiet, [x * 1.3 for x in self.quiet], 0.25, True), "worse")
+        # higher is better: a 30% drop is worse, a 30% rise is not
+        self.assertEqual(verdict(self.quiet, [x * 0.7 for x in self.quiet], 0.25, False), "worse")
+        self.assertEqual(verdict(self.quiet, [x * 1.3 for x in self.quiet], 0.25, False), "ok")
+
+    def test_a_wide_base_leaves_a_close_change_unresolved(self):
+        wide = [5.0, 7.0, 10.0, 10.0, 13.0, 15.0]  # IQR/median > 0.5
+        self.assertEqual(verdict(wide, [9.0, 10.0, 11.0, 12.0], 0.25, True), "unresolved")
+        # unless every change run beats every base run
+        self.assertEqual(verdict(wide, [4.0, 4.5, 4.8], 0.25, True), "ok")
+        self.assertEqual(verdict(wide, [16.0, 17.0], 0.25, False), "ok")
+
+    def test_the_worse_median_wins_over_a_wide_base(self):
+        wide = [5.0, 7.0, 10.0, 10.0, 13.0, 15.0]
+        self.assertEqual(verdict(wide, [13.0, 14.0, 15.0], 0.25, True), "worse")
+
+    def test_runs_that_did_not_finish(self):
+        self.assertEqual(verdict(self.quiet, [None, None], 0.25, True), "worse")
+        self.assertEqual(verdict([None], [1.0], 0.25, True), "unresolved")
+        self.assertEqual(verdict(self.quiet, [None] + self.quiet, 0.25, True), "ok")
+
+
+if __name__ == "__main__":
+    unittest.main()

@@ -48,6 +48,14 @@ object Bench {
   def priorCpuFloors(json: String): Map[String, Double] =
     priorFloorsOf(json, "runs_cpu")
 
+  /** The core count (`cpus`) a prior artifact was measured at; None
+    * for artifacts that do not record it. */
+  def priorCores(json: String): Option[Int] = {
+    import org.json4s._
+    implicit val fmts: Formats = DefaultFormats
+    (jackson.JsonMethods.parse(json) \ "cpus").extractOpt[Int]
+  }
+
   private def priorFloorsOf(json: String, field: String): Map[String, Double] = {
     import org.json4s._
     implicit val fmts: Formats = DefaultFormats
@@ -67,12 +75,18 @@ object Bench {
     * kernel/memory churn — medians recover); STABLE otherwise.
     * `warming` until two repeats exist (a single band-inflated repeat
     * must not read as a regression); `no_prior` with nothing to
-    * compare against. */
+    * compare against; `incomparable` when the prior series ran on
+    * another core count than this one (`priorCores` vs `cores`), or
+    * did not record its count — floors from 8 cores say nothing about
+    * a plan on 32. */
   def diagnose(prior: Map[String, Double], cur: Map[String, Double],
                repeatWalls: Seq[Double],
                priorCpu: Map[String, Double] = Map.empty,
-               curCpu: Map[String, Double] = Map.empty): String = {
+               curCpu: Map[String, Double] = Map.empty,
+               priorCores: Option[Int] = None,
+               cores: Option[Int] = None): String = {
     if (repeatWalls.size < 2) return "warming"
+    if (prior.nonEmpty && priorCores != cores) return "incomparable"
     val considered = prior.filter(_._2 >= 1.0).keySet.intersect(cur.keySet).toSeq
     if (considered.isEmpty) "no_prior"
     else {
@@ -195,6 +209,8 @@ object Bench {
       try priorFloors(priorJson) catch { case _: Throwable => Map.empty }
     val priorCpu: Map[String, Double] =
       try priorCpuFloors(priorJson) catch { case _: Throwable => Map.empty }
+    val priorCoreCount: Option[Int] =
+      try priorCores(priorJson) catch { case _: Throwable => None }
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val runs = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
     val runsCpu = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
@@ -280,7 +296,7 @@ object Bench {
         if (good.isEmpty) None else Some(n -> good.min)
       }.toMap
       val diag = diagnose(prior, curFloors, cpuAttr.map(_._1).toSeq,
-        priorCpu, curCpuFloors)
+        priorCpu, curCpuFloors, priorCoreCount, Some(Session.cpus))
       val floorsJson = names.flatMap { case (n, _) =>
         curFloors.get(n).map(v => "\"" + n + "\":" + f3(v)) }
         .mkString("{", ",", "}")
@@ -297,7 +313,7 @@ object Bench {
         .mkString("{", ",", "}")
       val censusJson = cacheCensus.map { case (n, m, dk) => s"[$n,$m,$dk]" }
         .mkString("[", ",", "]")
-      val fileJson = s"""{"metric":"total","unit":"sec","sf":"${esc(sfDir)}",""" +
+      val fileJson = s"""{"metric":"total","unit":"sec","sf":"${esc(sfDir)}","cpus":${Session.cpus},""" +
         s""""repeats_done":$r,"repeats_target":$repeats,""" +
         s""""cached_rdds_mem_disk":$censusJson,""" +
         s""""band_or_regression":"$diag","floors":$floorsJson,""" +
@@ -335,7 +351,7 @@ object Bench {
       // be able to push the final line past the tail-capture window.
       val lastAttr = cpuAttr.last match { case (w, o, h, g, s) =>
         s"[${f3(w)},${f3(o)},${f3(h)},${f3(g)},${f3(s)}]" }
-      println(s"""{"metric":"total","unit":"sec","sf":"${esc(sfDir)}","n_queries":${names.size},"repeats_done":$r,"repeats":$repeats,"n_errors":${errors.size},"band_or_regression":"$diag","cpu_attr_last":$lastAttr,"queries_file":"${esc(outFile)}","queries":$sq,"value":${f3(total)}}""")
+      println(s"""{"metric":"total","unit":"sec","sf":"${esc(sfDir)}","cpus":${Session.cpus},"n_queries":${names.size},"repeats_done":$r,"repeats":$repeats,"n_errors":${errors.size},"band_or_regression":"$diag","cpu_attr_last":$lastAttr,"queries_file":"${esc(outFile)}","queries":$sq,"value":${f3(total)}}""")
       Console.out.flush()
       val elapsedS = (System.nanoTime() - wall0) / 1e9
       if (r >= 3 && r < repeats && elapsedS > budgetS) {

@@ -46,8 +46,8 @@ private[graft] final case class GramPair(i: Long, j: Long, dot: Double, co: Long
  * volume over all tasks is Σ_k n_k·min(n_k, B) entries for B blocks,
  * at most Σ_k n_k² — never more than the join form's joined rows — and
  * a task holds about 1/B of it. Callers size that volume as they would
- * the join (`Recommender.itemSimsAuto` keeps Σ n_k² under 1e8 on its
- * exact branch).
+ * the join (`Recommender.userSimsAuto`, which `itemSimsAuto` runs over
+ * the transposed ratings, keeps Σ n_k² under 1e8 on its exact branch).
  *
  * Rows whose key or item is null are dropped, as the equi-join drops
  * them; a null value fails the task with a message naming the column.

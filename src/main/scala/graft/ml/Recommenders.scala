@@ -110,9 +110,10 @@ class KnnRecommenderModel private[ml] (override val uid: String,
     }
   }
 
-  /** Dense cohort sims are a user-based concept (the item-side pair
-    * table has no dense rebuild) — fail loudly instead of silently
-    * ignoring the param on an item-based model. */
+  /** Dense cohort sims are exposed on user-based models only: the
+    * item-based paths rank on the co-rated item pairs alone — fail
+    * loudly instead of silently ignoring the param on an item-based
+    * model. */
   private def requireDenseIsUserBased(): Unit =
     require(!$(denseSims) || $(userBased),
       "denseSims = true applies to user-based models only")
@@ -121,14 +122,13 @@ class KnnRecommenderModel private[ml] (override val uid: String,
     * column; extra columns ignored). */
   override def transform(targets: Dataset[_]): DataFrame = {
     requireDenseIsUserBased()
+    val cohort = Recommender.semiJoin(targets.toDF())
     if ($(userBased))
-      Recommender.userKnnTopKFor(train, targets.toDF(),
-        $(kNeighbors), $(kItems), kernel,
-        dense = $(denseSims), catalogSize = catalogOpt)
+      Recommender.userKnnTopKRestricted(train, $(kNeighbors), $(kItems),
+        Some(cohort), kernel, dense = $(denseSims), catalogSize = catalogOpt)
     else
-      Recommender.itemKnnTopKFor(train, targets.toDF(),
-        $(kNeighbors), $(kItems), maxItemsPerUser = $(maxItemsPerUser),
-        kernel = kernel, catalogSize = catalogOpt)
+      Recommender.itemKnnTopKRestricted(train, cohort, $(kNeighbors), $(kItems),
+        None, $(maxItemsPerUser), kernel, catalogOpt)
   }
 
   /** Rating prediction for held-out `(u, item_id|i, actual)` pairs —

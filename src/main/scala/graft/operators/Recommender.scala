@@ -17,19 +17,23 @@ import graft.functions.{Gram, TopK}
  * of collected matrices.
  *
  * Scale design: every stage is a keyed shuffle — no all-pairs
- * crossJoin anywhere. All-pairs co-rating aggregates come from
- * [[graft.functions.Gram.pairs]] over the shared dimension (user for
- * item-item, item for user-user): a blocked sparse Gram product whose
- * block tasks finish every pair inside the partition, so only the
- * sorted per-key profiles cross the shuffle (Σ n_k·min(n_k, B)
- * entries for B shuffle partitions, never more than the Σ n_k² rows a
- * self-join would emit) and only co-rated pairs materialize. Cohort-
- * restricted pair stages stay cohort-sized self-joins, and so does
- * the half table [[userDotsHalf]] (see there). Per-user
- * norm/mean dimensions are broadcast. Cosine ranks are computed on
- * values rounded to 6 dp with a deterministic id tie-break so top-k
- * selection is stable across engines and accumulation orders; final
- * scores round to 4 dp (the repo-wide oracle convention).
+ * crossJoin anywhere. There is one similarity builder, the user side
+ * ([[userSims]], [[userSimsAuto]]); every item-side similarity is that
+ * builder run over the transposed ratings (the reference's item-based
+ * mode transposes the matrix the same way, BaseRecommender.scala:
+ * 127-131). All-pairs co-rating aggregates come from
+ * [[graft.functions.Gram.pairs]] over the shared dimension: a blocked
+ * sparse Gram product whose block tasks finish every pair inside the
+ * partition, so only the sorted per-key profiles cross the shuffle
+ * (Σ n_k·min(n_k, B) entries for B shuffle partitions, never more
+ * than the Σ n_k² rows a self-join would emit) and only co-rated pairs
+ * materialize. Cohort-restricted pair stages stay cohort-sized
+ * self-joins, and so does the half table [[userDotsHalf]] (see
+ * there). Per-entity moment dimensions are broadcast. Cosine ranks
+ * are computed on values rounded to 6 dp with a deterministic id
+ * tie-break so top-k selection is stable across engines and
+ * accumulation orders; final scores round to 4 dp (the repo-wide
+ * oracle convention).
  */
 /** The similarity-kernel SPI (SURVEY §2.9 K1-K4) for the kNN
   * pipelines — the rebuild of the reference's `setSimilarity`
@@ -119,16 +123,8 @@ object Recommender {
   private def q16b(spark: SparkSession, dir: String): DataFrame = {
     val r = Tables.ratingsCached(spark, dir)
     userKnnTopK(r, K_NEIGHBORS, K_ITEMS,
-      simsSource = Some(mirrorUserSims(userSimsDimsum(r, threshold = 0.3))))
+      simsSource = Some(mirrorSims(userSimsDimsum(r, threshold = 0.3))))
   }
-
-  /** Mirror a `u < v` half user-sims table into the both-directions
-    * 6-dp form the kNN pipelines rank on — [[mirrorSims]]' user-side
-    * twin, shared by q16b and [[userSimsAuto]] so the mirroring and
-    * rounding discipline has one source of truth. */
-  def mirrorUserSims(half: DataFrame): DataFrame =
-    half.union(half.select(col("v").as("u"), col("u").as("v"), col("sim")))
-      .select(col("u"), col("v"), r6(col("sim")).as("sim"))
 
   /** The reference's Pearson user-kNN workload shape (Main.scala:
     * 354-356: `recSys.setSimilarity(new PearsonSimilarity)`) for the
@@ -190,19 +186,9 @@ object Recommender {
     userKnnTopK(ratings, kNeighbors, kItems,
       simsSource = Some(userSimsAuto(ratings, threshold)))
 
-  /** [[userKnnTopK]] for a DataFrame of target users (`user_id`
-    * column) — the Estimator/Model `transform` surface; the cohort
-    * narrows via a broadcast semi-join instead of a predicate. */
-  def userKnnTopKFor(ratings: DataFrame, targets: DataFrame,
-                     kNeighbors: Int, kItems: Int,
-                     kernel: Kernel = Kernel.Cosine,
-                     dense: Boolean = false,
-                     catalogSize: Option[Long] = None): DataFrame =
-    userKnnTopKRestricted(ratings, kNeighbors, kItems, Some(semiJoin(targets)),
-      kernel, dense = dense, catalogSize = catalogSize)
-
-  /** Broadcast-semi-join restriction to `targets.user_id`. */
-  private def semiJoin(targets: DataFrame): DataFrame => DataFrame =
+  /** Broadcast-semi-join restriction to `targets.user_id` — the cohort
+    * form of the Estimator/Model surface and of [[itemPredictOn]]. */
+  private[graft] def semiJoin(targets: DataFrame): DataFrame => DataFrame =
     df => df.join(broadcast(targets.select(col("user_id")).distinct()),
       Seq("user_id"), "left_semi")
 
@@ -365,7 +351,8 @@ object Recommender {
 
   /** Apply [[kernelSim]] to any pair table `(u, v, dot, co)` — the
     * moments/bigN joins + 6-dp emit shared by the sparse, dense-pruned
-    * and pairs-on-demand ([[userPredictOn]] dense) sims builders. */
+    * and pairs-on-demand ([[userPredictOn]] dense) sims builders, and
+    * through the transposed ratings by every item-side one. */
   private def kernelOverPairs(pairs: DataFrame, moments: DataFrame,
                               r: DataFrame, kernel: Kernel,
                               catalogSize: Option[Long]): DataFrame = {
@@ -638,26 +625,43 @@ object Recommender {
     * its top-`maxRaters` rows by (rating desc, user_id asc) before the
     * user-user pair join — the user-side fan-out is Σᵢ m(i)², unbounded
     * on viral items exactly as [[capPerUser]]'s is on power users.
-    * `Int.MaxValue` (default everywhere) keeps the exact path. */
+    * `Int.MaxValue` (default everywhere) keeps the exact path; a cap
+    * returns only the `(user_id, item_id, rating)` columns. */
   def capPerItem(ratings: DataFrame, maxRaters: Int): DataFrame =
     if (maxRaters == Int.MaxValue) ratings
-    else TopK.perGroup(ratings, Seq(col("item_id")),
-      Seq(col("rating").desc, col("user_id").asc), maxRaters, "cap_rk").drop("cap_rk")
+    else transposed(capPerUser(transposed(ratings), maxRaters))
 
-  /** Mirror an `i < j` half similarity table (e.g. [[itemSimsDimsum]]
-    * output) into the both-directions form the kNN pipelines join on. */
-  def mirrorSims(half: DataFrame): DataFrame =
-    half.union(half.select(col("j").as("i"), col("i").as("j"), col("sim")))
+  /** The ratings with the roles of `user_id` and `item_id` swapped:
+    * item profiles over the user catalog. Every item-side similarity is
+    * the user-side builder over this. */
+  private def transposed(r: DataFrame): DataFrame =
+    r.select(col("item_id").as("user_id"), col("user_id").as("item_id"), col("rating"))
+
+  /** User-side `(u, v, sim)` over [[transposed]] ratings, read back as
+    * the item pairs `(i, j, sim)`. */
+  private def itemPairs(sims: DataFrame): DataFrame =
+    sims.select(col("u").as("i"), col("v").as("j"), col("sim"))
+
+  /** Mirror a half similarity table `(a, b, sim)` with `a < b` (the
+    * [[itemSimsDimsum]] and [[userSimsDimsum]] outputs) into the
+    * both-directions 6-dp form the kNN pipelines rank on, keeping its
+    * column names. */
+  def mirrorSims(half: DataFrame): DataFrame = {
+    val Array(a, b, _*) = half.columns
+    half.union(half.select(col(b).as(a), col(a).as(b), col("sim")))
+      .select(col(a), col(b), r6(col("sim")).as("sim"))
+  }
 
   /** The item-item similarity table — mirrored `(i, j, sim)`, 6-dp
-    * rounded, under any [[Kernel]] (profiles transpose: item vectors
-    * over the USER catalog, so K2's zero-inclusive mean runs over
-    * |users| positions). The cosine instance is the sims source
-    * q17/q33 share and the exact twin of [[itemSimsDimsum]]. With
-    * `maxItemsPerUser` set, similarities are exact kernels over the
-    * TRUNCATED profiles (moments computed on the capped rows, so the
-    * capped table is self-consistent). `catalogSize` pins K2's
-    * zero-inclusive N (here the USER catalog) to an externally
+    * rounded, under any [[Kernel]]: [[userSims]] over the
+    * [[transposed]] ratings, so item vectors run over the USER catalog
+    * and K2's zero-inclusive mean over |users| positions. The cosine
+    * instance is the sims source q17/q33 share and the exact twin of
+    * [[itemSimsDimsum]]. With `maxItemsPerUser` set, similarities are
+    * exact kernels over the TRUNCATED profiles ([[capPerUser]], which
+    * is the transposed [[capPerItem]]; moments computed on the capped
+    * rows, so the capped table is self-consistent). `catalogSize` pins
+    * K2's zero-inclusive N (here the USER catalog) to an externally
     * configured count — the reference's `_numberOfUsers`, which also
     * counts users absent from the training fold; default is
     * countDistinct over the input.
@@ -670,27 +674,9 @@ object Recommender {
   def itemSims(ratings: DataFrame,
                kernel: Kernel = Kernel.Cosine,
                maxItemsPerUser: Int = Int.MaxValue,
-               catalogSize: Option[Long] = None): DataFrame = {
-    val r = capPerUser(ratings, maxItemsPerUser)
-    val moments = r.groupBy("item_id").agg(
-      sum(col("rating")).as("s"),
-      sum(col("rating") * col("rating")).as("q"),
-      count(lit(1)).as("n"))
-    val withMoments = Gram.pairs(r, "user_id", "item_id", "rating")
-      .join(broadcast(moments.select(col("item_id").as("i"), col("s").as("sa"),
-        col("q").as("qa"), col("n").as("na"))), Seq("i"))
-      .join(broadcast(moments.select(col("item_id").as("j"), col("s").as("sb"),
-        col("q").as("qb"), col("n").as("nb"))), Seq("j"))
-    val withN = kernel match {
-      case Kernel.Pearson => catalogSize match {
-        case Some(c) => withMoments.withColumn("bigN", lit(c.toDouble))
-        case None => withMoments.crossJoin(
-          broadcast(r.agg(countDistinct(col("user_id")).cast("double").as("bigN"))))
-      }
-      case _ => withMoments
-    }
-    withN.select(col("i"), col("j"), r6(kernelSim(kernel)).as("sim"))
-  }
+               catalogSize: Option[Long] = None): DataFrame =
+    itemPairs(userSims(transposed(ratings), kernel,
+      maxRatersPerItem = maxItemsPerUser, catalogSize = catalogSize))
 
   /** Session-cached sims over the shared ratings view — CacheManager
     * plan-dedup gives q17 and q33's item child ONE materialization.
@@ -744,24 +730,16 @@ object Recommender {
     itemKnnTopKRestricted(ratings, _.filter(targetUsers), kNeighbors, kItems,
       simsSource, maxItemsPerUser, kernel, catalogSize)
 
-  /** [[itemKnnTopK]] for a DataFrame of target users — the
-    * Estimator/Model `transform` surface. */
-  def itemKnnTopKFor(ratings: DataFrame, targets: DataFrame,
-                     kNeighbors: Int, kItems: Int,
-                     simsSource: Option[DataFrame] = None,
-                     maxItemsPerUser: Int = Int.MaxValue,
-                     kernel: Kernel = Kernel.Cosine,
-                     catalogSize: Option[Long] = None): DataFrame =
-    itemKnnTopKRestricted(ratings, semiJoin(targets), kNeighbors, kItems,
-      simsSource, maxItemsPerUser, kernel, catalogSize)
-
-  private def itemKnnTopKRestricted(ratings: DataFrame,
-                                    narrow: DataFrame => DataFrame,
-                                    kNeighbors: Int, kItems: Int,
-                                    simsSource: Option[DataFrame],
-                                    maxItemsPerUser: Int,
-                                    kernel: Kernel,
-                                    catalogSize: Option[Long] = None): DataFrame = {
+  /** [[itemKnnTopK]] with the cohort as a narrowing function — a
+    * predicate filter, or [[semiJoin]] for the Estimator/Model
+    * surface. */
+  private[graft] def itemKnnTopKRestricted(ratings: DataFrame,
+                                           narrow: DataFrame => DataFrame,
+                                           kNeighbors: Int, kItems: Int,
+                                           simsSource: Option[DataFrame],
+                                           maxItemsPerUser: Int,
+                                           kernel: Kernel,
+                                           catalogSize: Option[Long] = None): DataFrame = {
     val r = ratings
     val sims = simsSource.getOrElse(itemSims(r, kernel, maxItemsPerUser, catalogSize))
 
@@ -815,12 +793,9 @@ object Recommender {
     * scoring end to end — rows, schema AND hashes must match, no
     * tolerance verdict needed. */
   private def q17b(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Rounding.{r6 => rr6}
     val r = Tables.ratingsCached(spark, dir)
-    val sims = mirrorSims(itemSimsDimsum(r, threshold = 0.3))
-      .select(col("i"), col("j"), rr6(col("sim")).as("sim"))
     itemKnnTopK(r, col("user_id") % 20 === 0, K_ITEM_NEIGHBORS, K_ITEMS,
-      simsSource = Some(sims))
+      simsSource = Some(mirrorSims(itemSimsDimsum(r, threshold = 0.3))))
   }
 
   /** R2: user-based rating prediction for the `user_id % 17 = 3`
@@ -936,35 +911,27 @@ object Recommender {
     * scan+moment work both sides share. */
   val DIMSUM_MIN_PAIRDOTS: Long = 100000000L
 
-  /** [[itemSimsAuto]]'s pure decision rule, exposed so the boundary
-    * is unit-testable without building either plan: sample iff the
-    * exact pair stage would emit at least
+  /** [[userSimsAuto]]'s pure decision rule (and so [[itemSimsAuto]]'s),
+    * exposed so the boundary is unit-testable without building either
+    * plan: sample iff the exact pair stage would emit at least
     * [[DIMSUM_MIN_PAIRDOTS]] pair-dot rows. */
   def resolveDimsum(pairDots: Long): Boolean =
     pairDots >= DIMSUM_MIN_PAIRDOTS
 
-  /** Item-item sims with the pair stage SIZED instead of assumed (the
-    * q93 `triangleCountsAuto` posture applied to the R5 kernel): one
-    * bounded scalar agg prices the exact pair stage's work
-    * (Σ_u n_u² products — computable from per-user counts WITHOUT
-    * building any pair), then the gate picks the exact kernel below
-    * the measured crossover and the DIMSUM estimator above it. The registered q17
-    * (exact) and q17b (DIMSUM) stay fixed for hash-compat; Auto is
+  /** Item-item sims with the pair stage SIZED instead of assumed:
+    * [[userSimsAuto]] over the [[transposed]] ratings, so its one
+    * scalar agg prices Σ_u n_u² products from per-user counts and the
+    * gate picks [[itemSims]] below the measured crossover and the
+    * DIMSUM estimator ([[itemSimsDimsum]]) above it. The registered
+    * q17 (exact) and q17b (DIMSUM) stay fixed for hash-compat; Auto is
     * the library default for new callers, like Content's
     * CandidateSource.Auto. Returns mirrored 6-dp `(i, j, sim)` —
     * the `simsSource` contract. The sizing agg and the chosen kernel
     * both read `ratings` as given: callers own caching, as for every
     * library call (see [[itemSimsCached]]). */
   def itemSimsAuto(ratings: DataFrame,
-                   threshold: Double = 0.3): DataFrame = {
-    val pairDots = ratings.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("c"))
-      .agg(sum(col("c") * col("c")).cast("long")).collect()(0).getLong(0)
-    if (resolveDimsum(pairDots))
-      mirrorSims(itemSimsDimsum(ratings, threshold))
-        .select(col("i"), col("j"), r6(col("sim")).as("sim"))
-    else itemSims(ratings)
-  }
+                   threshold: Double = 0.3): DataFrame =
+    itemPairs(userSimsAuto(transposed(ratings), threshold))
 
   /** The 100-TB similarity path SURVEY §2.9 K1 names: DIMSUM sampling
     * (Zadeh & Goel's magnitude-proportional row sampling) over the
@@ -1044,26 +1011,23 @@ object Recommender {
     * side — and the sampling cap bounds it independently of viral-item
     * fan-out. */
   def userSimsDimsum(ratings: DataFrame, threshold: Double): DataFrame =
-    itemSimsDimsum(
-      ratings.select(col("item_id").as("user_id"),
-        col("user_id").as("item_id"), col("rating")),
-      threshold)
+    itemSimsDimsum(transposed(ratings), threshold)
       .select(col("i").as("u"), col("j").as("v"), col("sim"))
 
-  /** User-user sims with the pair stage SIZED instead of assumed —
-    * [[itemSimsAuto]] mirrored onto the user side (VERDICT r10 next
-    * #1): one bounded scalar agg prices the exact [[userDotsHalf]]
-    * pair stage's work (Σ_i raters_i² products, computable from
-    * per-ITEM counts WITHOUT building any pair), then the gate picks
-    * the exact cosine kernel below the measured crossover and the
-    * transposed DIMSUM estimator above it. The crossover constant is
-    * shared with the item side ([[DIMSUM_MIN_PAIRDOTS]]): both
-    * orientations pay the same Σ n² pair-agg regime, just keyed on the
-    * opposite column — the user-side sf0.1/sf1 probe (BASELINE §r11)
-    * confirms the exact/estimator cost bands mirror the item-side
-    * measurement. The registered q16 (exact) and q16b (DIMSUM) stay
-    * fixed for hash-compat; Auto is the library default for new
-    * callers. Returns mirrored 6-dp `(u, v, sim)` — the
+  /** User-user sims with the pair stage SIZED instead of assumed (the
+    * q93 `triangleCountsAuto` posture applied to the kNN kernel) — the
+    * one exact↔DIMSUM gate; [[itemSimsAuto]] is this over the
+    * transposed ratings. One bounded scalar agg prices the exact pair
+    * stage's work (Σ_i raters_i² products, computable from per-ITEM
+    * counts WITHOUT building any pair), then the gate picks the exact
+    * cosine kernel below the measured crossover
+    * ([[DIMSUM_MIN_PAIRDOTS]]) and the transposed DIMSUM estimator
+    * above it. Both orientations pay the same Σ n² pair-agg regime,
+    * just keyed on the opposite column — the user-side sf0.1/sf1 probe
+    * (BASELINE §r11) confirms the exact/estimator cost bands mirror the
+    * item-side measurement. The registered q16 (exact) and q16b
+    * (DIMSUM) stay fixed for hash-compat; Auto is the library default
+    * for new callers. Returns mirrored 6-dp `(u, v, sim)` — the
     * [[userKnnTopK]] `simsSource` contract. */
   def userSimsAuto(ratings: DataFrame,
                    threshold: Double = 0.3): DataFrame = {
@@ -1071,7 +1035,7 @@ object Recommender {
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c") * col("c")).cast("long")).collect()(0).getLong(0)
     if (resolveDimsum(pairDots))
-      mirrorUserSims(userSimsDimsum(ratings, threshold))
+      mirrorSims(userSimsDimsum(ratings, threshold))
     else userSims(ratings)
   }
 
@@ -1131,7 +1095,9 @@ object Recommender {
     * [[Kernel]], the shared cache, or the DIMSUM approximation — the
     * same seam as [[itemKnnTopK]]; the built-in default is the
     * cohort-restricted cosine (cheaper than a full item×item table
-    * when the cohort is small). */
+    * when the cohort is small): the cohort-restricted user-side
+    * builder over the [[transposed]] ratings, narrowed to the cohort's
+    * items. */
   def itemPredictOn(ratings: DataFrame, cohort0: DataFrame,
                     kNeighbors: Int,
                     maxItemsPerUser: Int = Int.MaxValue,
@@ -1140,23 +1106,9 @@ object Recommender {
     val r = ratings
     // the cap bounds the pair fan-out of the SIMILARITY estimate only
     // ([[capPerUser]]); neighbor scoring below still sees full profiles
-    val rs = capPerUser(r, maxItemsPerUser)
-    val cohortItems = cohort.select(col("i")).distinct()
-    val sims = simsSource.getOrElse {
-      val inorm = rs.groupBy("item_id").agg(
-        sqrt(sum(col("rating") * col("rating"))).as("inorm"))
-      val a = rs.join(cohortItems, rs("item_id") === cohortItems("i"))
-        .select(col("user_id"), col("item_id").as("i"), col("rating").as("ra"))
-      val b = rs.select(col("user_id"), col("item_id").as("j"), col("rating").as("rb"))
-      val dots = a.join(b, Seq("user_id"))
-        .filter(col("i") =!= col("j"))
-        .groupBy(col("i"), col("j"))
-        .agg(sum(col("ra") * col("rb")).as("dot"))
-      dots
-        .join(broadcast(inorm.select(col("item_id").as("i"), col("inorm").as("ni"))), Seq("i"))
-        .join(broadcast(inorm.select(col("item_id").as("j"), col("inorm").as("nj"))), Seq("j"))
-        .select(col("i"), col("j"), r6(col("dot") / (col("ni") * col("nj"))).as("sim"))
-    }
+    val sims = simsSource.getOrElse(itemPairs(userSimsRestricted(transposed(r),
+      Kernel.Cosine, Some(semiJoin(cohort.select(col("i").as("user_id")))),
+      maxRatersPerItem = maxItemsPerUser)))
 
     // neighbors of (u, i): items j the user actually rated
     val rated = r.select(col("user_id").as("u"), col("item_id").as("j"), col("rating").as("r_uj"))

@@ -92,6 +92,26 @@ class BenchDiagnosisSpec extends AnyFunSuite {
       == "band")
   }
 
+  test("floors from another core count, or an unrecorded one, read incomparable") {
+    val cur = Map("q_heavy" -> 10.3, "q_mid" -> 2.1, "q_tiny" -> 0.22)
+    val shifted = Map("q_heavy" -> 17.0, "q_mid" -> 3.5, "q_tiny" -> 0.22)
+    // an 8-core prior against a 4-core series: never stable, never regression
+    assert(Bench.diagnose(prior, cur, Seq(30.0, 31.5),
+      priorCores = Some(8), cores = Some(4)) == "incomparable")
+    assert(Bench.diagnose(prior, shifted, Seq(40.0, 41.0),
+      priorCores = Some(8), cores = Some(4)) == "incomparable")
+    // a prior artifact that does not record its core count
+    assert(Bench.diagnose(prior, shifted, Seq(40.0, 41.0),
+      priorCores = None, cores = Some(4)) == "incomparable")
+    // equal core counts compare floors as before
+    assert(Bench.diagnose(prior, cur, Seq(30.0, 31.5),
+      priorCores = Some(4), cores = Some(4)) == "stable")
+    assert(Bench.diagnose(prior, shifted, Seq(40.0, 41.0),
+      priorCores = Some(4), cores = Some(4)) == "regression")
+    assert(Bench.priorCores("""{"cpus":32,"runs":[]}""") == Some(32))
+    assert(Bench.priorCores(priorJson).isEmpty)
+  }
+
   test("no prior artifact or no comparable queries reads no_prior") {
     assert(Bench.diagnose(Map.empty, Map("q" -> 1.0), Seq(1.0, 1.0)) == "no_prior")
     // prior exists but only sub-1s floors -> nothing comparable

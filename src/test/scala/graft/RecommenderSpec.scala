@@ -174,6 +174,29 @@ class RecommenderSpec extends SparkSuite {
         assert(math.abs(sim - want) < 1e-6, s"$k ($u,$v): $sim vs $want")
       }
     }
+    // the item side: the fixture's item vectors densified over users
+    // {1,2,3}, so K2's zero-inclusive mean runs over the user catalog
+    val items = Map(
+      1 -> Array(5.0, 4.0, 0.0),
+      2 -> Array(3.0, 2.0, 5.0),
+      3 -> Array(0.0, 4.0, 3.0),
+      4 -> Array(0.0, 0.0, 1.0))
+    val coRated = Set((1, 2), (1, 3), (2, 3), (2, 4), (3, 4))
+    def itemCase(k: Kernel, catalog: Option[Long]): Unit = {
+      val got = Recommender.itemSims(tiny, k, catalogSize = catalog)
+        .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
+      assert(got.keySet == coRated ++ coRated.map(_.swap), s"item $k pairs")
+      // a configured catalog adds users who rated nothing: zero positions
+      val pad = catalog.fold(0)(_.toInt - 3)
+      def vec(i: Int) = items(i) ++ Array.fill(pad)(0.0)
+      got.foreach { case ((i, j), sim) =>
+        val want = wantSim(k, vec(i), vec(j))
+        assert(math.abs(sim - want) < 1e-6, s"item $k $catalog ($i,$j): $sim vs $want")
+      }
+    }
+    for (k <- Seq(Kernel.Cosine, Kernel.Pearson, Kernel.Jaccard, Kernel.InvEuclidean))
+      itemCase(k, None)
+    itemCase(Kernel.Pearson, Some(5L))
   }
 
   test("dense sims: a no-overlap K4 pair outranks a distant co-rated one") {
@@ -307,6 +330,23 @@ class RecommenderSpec extends SparkSuite {
         simsSource = Some(Recommender.itemSims(tiny)))
       .collect().map(_.toSeq).toSet
     assert(direct.nonEmpty && direct == viaSims)
+    // maxItemsPerUser: the built-in default is the cosine over the
+    // capped profiles, as is a full itemSims over the same cap. Over
+    // every fixture row, cap 2 truncates users 2 and 3 and so changes
+    // the (2, 1) prediction
+    val all = tiny.select(col("user_id").as("u"), col("item_id").as("i"),
+      col("rating").as("actual"))
+    val byCap = Seq(Int.MaxValue, 2).map { cap =>
+      val default = Recommender.itemPredictOn(tiny, all, kNeighbors = 2,
+          maxItemsPerUser = cap)
+        .collect().map(_.toSeq).toSet
+      val viaCapped = Recommender.itemPredictOn(tiny, all, kNeighbors = 2,
+          simsSource = Some(Recommender.itemSims(tiny, maxItemsPerUser = cap)))
+        .collect().map(_.toSeq).toSet
+      assert(default.nonEmpty && default == viaCapped, s"cap $cap")
+      default
+    }
+    assert(byCap(0) != byCap(1), "cap 2 must change the fixture's predictions")
   }
 
   test("heavy-key cap: no-op above max profile size, ≈ exact at moderate cap") {
