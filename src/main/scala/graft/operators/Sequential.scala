@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.functions.TopK
-import graft.functions.VectorFns._
+import graft.functions.{Nearest, TopK}
 import graft.functions.Rounding.{r4, r6}
 
 /**
@@ -185,7 +184,7 @@ object Sequential {
     *
     * Scale design: centroids are k×dim ≈ tiny and ride a broadcast;
     * assignment is a narrow map over the corpus (k distance evals per
-    * row, argmin via min_by-shaped window) and the centroid update is
+    * row, the row-local `Nearest` argmin) and the centroid update is
     * one keyed agg on (cluster, pos) — no iteration state ever
     * collects beyond the k centroids themselves. */
   private def q34(spark: SparkSession, dir: String): DataFrame = {
@@ -198,15 +197,11 @@ object Sequential {
     * `(vec_id, v: array<double>)` DataFrame; returns the final
     * per-vector assignment with its squared distance. */
   def kmeansAssign(vecs: DataFrame, seedIds: Seq[Long], iters: Int): DataFrame = {
-    val sqDist = sqDistArr _
-
-    def assign(centroids: DataFrame): DataFrame = {
-      val pairs = vecs.crossJoin(broadcast(centroids))
-        .select(col("vec_id"), col("v"), col("cluster"),
-          r6(sqDist(col("v"), col("cv"))).as("d2"))
-      TopK.perGroup(pairs, Seq(col("vec_id")), Seq(col("d2").asc, col("cluster").asc), 1)
-        .select(col("vec_id"), col("v"), col("cluster"), col("d2"))
-    }
+    def assign(centroids: DataFrame): DataFrame =
+      vecs.crossJoin(broadcast(Nearest.book(centroids, "cluster")))
+        .select(col("vec_id"), col("v"), Nearest.nearest(col("v"), col("book")).as("w"))
+        .select(col("vec_id"), col("v"), col("w").getField("id").as("cluster"),
+          col("w").getField("d2").as("d2"))
     def recenter(assigned: DataFrame): DataFrame =
       assigned.select(col("cluster"), posexplode(col("v")))
         .groupBy(col("cluster"), col("pos"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.functions.TopK
+import graft.functions.{Nearest, TopK}
 import graft.functions.VectorFns._
 import graft.functions.Rounding.{r4, r6}
 
@@ -126,37 +126,39 @@ object Similarity {
           % sm === 0)
       .select(col("cell").as("super"), col("cv").as("sv"))
 
+  /** The two-level codebook as ONE [[Nearest.book]] row of supers,
+    * each carrying `cells`, the entries of the cells whose nearest
+    * super it is. Assembled from one collected row of attached cells
+    * (supers × cells filter work, once per build). */
+  private[graft] def superBook(cents: DataFrame, seedIds: Seq[Long], sm: Long): DataFrame =
+    cents.crossJoin(broadcast(Nearest.book(supersOf(cents, seedIds, sm), "super", "sv")))
+      .select(col("book"), struct(col("cell").as("id"), col("cv"),
+        Nearest.nearest(col("cv"), col("book")).getField("id").as("super")).as("c"))
+      .groupBy(col("book")) // one group: the supers' book
+      .agg(sort_array(collect_list(col("c"))).as("cells"))
+      .select(transform(col("book"), s => struct(s.getField("id").as("id"),
+        s.getField("cv").as("cv"),
+        filter(col("cells"), c => c.getField("super") === s.getField("id")).as("cells")))
+        .as("book"))
+
+  /** The nearest cell of `v` among its nearest super's cells, as
+    * `struct(d2, id)`; null if that super holds no cell. */
+  private[graft] def nearestCell2(v: Column, superBook: Column): Column =
+    Nearest.nearest(v, Nearest.nearest(v, superBook, keep = Seq("cells")).getField("cells"))
+
   /** TWO-LEVEL nearest-cell assignment (q42b's stages, factored out so
     * the incremental/streaming semdedup paths can swap it in for
-    * [[cellAssign]]): each cell attaches to its nearest super, each
-    * vector argmins over the ~√cells supers and then only over THAT
-    * super's cells — N·O(√cells) work instead of N·cells. Both
-    * argmins use the r6(d2)-asc, id-asc discipline. With sm = 1 every
-    * cell is a super and the result IS the flat [[cellAssign]] (the
-    * exactness witness AnnRecallSpec pins). Same output schema as
-    * [[cellAssign]]: `(vec_id, v, cell)`. */
+    * [[cellAssign]]): each vector argmins over the ~√cells supers of
+    * one broadcast [[superBook]] row, then only over THAT super's
+    * cells — N·O(√cells) row-local work instead of N·cells. With
+    * sm = 1 every cell is a super and the result IS the flat
+    * [[cellAssign]] (the exactness witness AnnRecallSpec pins). Same
+    * output schema as [[cellAssign]]: `(vec_id, v, cell)`. */
   private[graft] def cellAssign2(e: DataFrame, cents: DataFrame,
-                                 seedIds: Seq[Long], sm: Long): DataFrame = {
-    val supers = supersOf(cents, seedIds, sm)
-    // level-1: each CELL attaches to its nearest super (tiny × tiny)
-    val cellSuper = cents.crossJoin(broadcast(supers))
-      .select(col("cell"), col("cv"), col("super"),
-        r6(sqDistArr(col("cv"), col("sv"))).as("d2s"))
-      .transform(TopK.perGroup(_, Seq(col("cell")), Seq(col("d2s").asc, col("super").asc), 1, "srk"))
-      .select(col("cell"), col("cv"), col("super"))
-    // level-1: each VECTOR finds its nearest super
-    val vSuper = e.crossJoin(broadcast(supers))
+                                 seedIds: Seq[Long], sm: Long): DataFrame =
+    e.crossJoin(broadcast(superBook(cents, seedIds, sm)))
       .select(col("vec_id"), col("v"),
-        col("super"), r6(sqDistArr(col("v"), col("sv"))).as("d2s"))
-      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2s").asc, col("super").asc), 1, "srk"))
-      .select(col("vec_id"), col("v"), col("super"))
-    // level-2: argmin over ONLY the vector's super's cells
-    vSuper.join(broadcast(cellSuper), Seq("super"))
-      .select(col("vec_id"), col("v"), col("cell"),
-        r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2").asc, col("cell").asc), 1, "crk"))
-      .select(col("vec_id"), col("v"), col("cell"))
-  }
+        nearestCell2(col("v"), col("book")).getField("id").as("cell"))
 
   def ivf2TopK(e: DataFrame, queryPred: Column, seedIds: Seq[Long],
                k: Int, superMod: Option[Long] = None): DataFrame = {
@@ -349,8 +351,8 @@ object Similarity {
   /** IVF-style ANN — the bucketed scale path next to q22's exact
     * broadcast baseline: a corpus-growing codebook ([[centsOf]]: 8
     * base seeds ∪ 1/[[IVF_SEED_MOD]] hash-picked extras)
-    * coarse-quantizes the corpus into cells (one broadcast + keyed
-    * argmin, the same assign shape as Sequential.kmeansAssign); each
+    * coarse-quantizes the corpus into cells (the row-local
+    * [[Nearest]] argmin, as in Sequential.kmeansAssign); each
     * query searches ONLY its own cell (probe=1). At 100 TB the cell
     * assignment is the partition key and occupancy stays
     * ≈IVF_SEED_MOD, so a query's probe scan is O(MOD) regardless of
@@ -361,9 +363,8 @@ object Similarity {
 
   /** Reusable library surface: multiprobe IVF ANN over a
     * `(vec_id, v: array<double>)` corpus. The codebook coarse-
-    * quantizes every vector into its nearest cell (one broadcast +
-    * keyed argmin); each query vector (selected by `queryPred`)
-    * searches its `probes` NEAREST cells — probe-1 is the q42 shape
+    * quantizes every vector into its nearest cell ([[Nearest]]);
+    * each query vector (selected by `queryPred`) searches its `probes` NEAREST cells — probe-1 is the q42 shape
     * (1/k of the corpus per query), and each extra probe buys recall
     * for proportional extra scan, the standard IVF trade (recall is
     * quantified against the exact baseline in AnnRecallSpec). Cell
@@ -383,19 +384,15 @@ object Similarity {
     * (≈ IVF_SEED_MOD per cell at any corpus size), never the corpus. */
   def ivfPairs(e: DataFrame, queryPred: Column, seedIds: Seq[Long],
                probes: Int): DataFrame = {
-    val cents = centsOf(e, seedIds)
-    val wAsg = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cell").asc)
-    val ranked = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cell"),
-        r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .withColumn("crk", row_number().over(wAsg))
-    val cells = ranked.filter(col("crk") === 1)
-      .select(col("vec_id"), col("v"), col("cell"))
+    val booked = e.crossJoin(broadcast(Nearest.book(centsOf(e, seedIds), "cell")))
+    val cells = booked.select(col("vec_id"), col("v"),
+      Nearest.nearest(col("v"), col("book")).getField("id").as("cell"))
     // a query probes its `probes` nearest cells; a corpus vector lives
     // in exactly its nearest — so probe-1 searches the query's own cell
-    val qprobe = ranked.filter(queryPred && col("crk") <= probes)
-      .select(col("cell"), col("vec_id").as("q_id"), col("v").as("qv"))
+    val qprobe = booked.filter(queryPred)
+      .select(explode(Nearest.ranked(col("v"), col("book"), probes)).as("w"),
+        col("vec_id").as("q_id"), col("v").as("qv"))
+      .select(col("w").getField("id").as("cell"), col("q_id"), col("qv"))
     cells.join(qprobe, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("cell"), col("vec_id").as("n_id"),
@@ -418,7 +415,7 @@ object Similarity {
     * `(vec_id, cell, cell_n, cell_rank, kept)` — under-quota cells
     * keep everything, over-quota cells keep exactly the quota.
     *
-    * Scale shape: assignment is the broadcast-codebook keyed argmin;
+    * Scale shape: assignment is the row-local [[cellAssign]];
     * the draw-order window partitions BY CELL, so window state is
     * cell occupancy O(N/k), never the corpus (the codebook grows with
     * the corpus, same as q105); the corpus total rides a 1-row
@@ -429,11 +426,7 @@ object Similarity {
     // quota denominator = the ACTUAL cell count (the codebook grows
     // with the corpus), computed in-plan as a 1-row broadcast
     val nCells = cents.agg(count(lit(1)).as("n_cells"))
-    val cells = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cell"),
-        r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2").asc, col("cell").asc), 1, "crk"))
-      .select(col("vec_id"), col("cell"))
+    val cells = cellAssign(e, cents).select(col("vec_id"), col("cell"))
     val tot = cells.agg(count(lit(1)).as("n_total"))
     val cellN = cells.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
     val draw = Dedup.baseHash(
@@ -464,7 +457,7 @@ object Similarity {
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023: cluster
     * the embedding space, then near-dup ONLY within clusters): coarse
-    * k-means cell assignment (the q42 codebook + keyed argmin), exact
+    * k-means cell assignment (the q42 codebook + row-local argmin), exact
     * within-cell cosine pairs, and a deterministic keep-min-id policy —
     * a vector is dropped iff a smaller-id vector in its cell sits at
     * cosine ≥ `tau`. Greedy per-pair (a chain a~b~c drops both b and c
@@ -475,30 +468,26 @@ object Similarity {
     *
     * Scale shape: the only pairwise stage is the within-cell
     * self-join — Σ_cell n² with the cell as partition key, the q42/LSH
-    * bucket posture. At 100 TB the codebook grows (more cells) so cell
+    * bucket posture, with no vector-keyed exchange. At 100 TB the codebook grows (more cells) so cell
     * occupancy stays O(corpus/k); the all-pairs semantic dedup the
     * paper replaces never happens. */
   def semanticDedup(e: DataFrame, seedIds: Seq[Long], tau: Double): DataFrame = {
     val cells = cellAssign(e, centsOf(e, seedIds))
-    val dups = cells.select(col("cell"), col("vec_id").as("id_a"), col("v").as("va"))
-      .join(cells.select(col("cell"), col("vec_id").as("id_b"), col("v").as("vb")),
-        Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_b").as("vec_id"),
-        r6(cosineArr(col("va"), col("vb"))).as("cos"))
-      .filter(col("cos") >= tau)
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("n_better_dups"))
-    cells.select(col("vec_id"), col("cell"))
-      .join(dups, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("n_better_dups"), lit(0L)).as("n_better_dups"),
-        (coalesce(col("n_better_dups"), lit(0L)) === 0).cast("int").as("kept"))
+    val b = cells.select(col("cell"), col("vec_id"), col("v").as("vb"))
+    val a = cells.select(col("cell").as("cell_a"), col("vec_id").as("id_a"), col("v").as("va"))
+    // grouped by (cell, vec_id): the cell-keyed join already clusters it
+    b.join(a, col("cell") === col("cell_a") && col("id_a") < col("vec_id") &&
+        r6(cosineArr(col("va"), col("vb"))) >= tau, "left")
+      .groupBy(col("cell"), col("vec_id"))
+      .agg(count(col("id_a")).as("n_better_dups"))
+      .select(col("vec_id"), col("cell"), col("n_better_dups"),
+        (col("n_better_dups") === 0).cast("int").as("kept"))
   }
 
   /** Nearest-cell coarse assignment against an explicit codebook —
-    * the q42/q105 argmin (r6(d2) asc, cell asc) factored out so the
-    * incremental/streaming paths assign against a STANDING corpus's
-    * codebook rather than their own. */
+    * the q42/q105 argmin ([[Nearest]], over one broadcast book row)
+    * factored out so the incremental/streaming paths assign against a
+    * STANDING corpus's codebook rather than their own. */
   private[graft] def cellAssign(e: DataFrame, cents: DataFrame): DataFrame =
     cellAssignD(e, cents).select(col("vec_id"), col("v"), col("cell"))
 
@@ -508,13 +497,11 @@ object Similarity {
     * cells without re-scanning the old codebook. d2 is the same
     * r6-rounded value the assignment ordered by, so a stored row
     * replays the derive-side tie-break bit-for-bit. */
-  private[graft] def cellAssignD(e: DataFrame, cents: DataFrame): DataFrame = {
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cell"),
-        r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .transform(TopK.perGroup(_, Seq(col("vec_id")), Seq(col("d2").asc, col("cell").asc), 1, "crk"))
-      .select(col("vec_id"), col("v"), col("cell"), col("d2"))
-  }
+  private[graft] def cellAssignD(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(broadcast(Nearest.book(cents, "cell")))
+      .select(col("vec_id"), col("v"), Nearest.nearest(col("v"), col("book")).as("w"))
+      .select(col("vec_id"), col("v"), col("w").getField("id").as("cell"),
+        col("w").getField("d2").as("d2"))
 
   /** EXACT incremental maintenance of the semantic-dedup cell index
     * across a compaction — the embedding-side twin of
@@ -531,9 +518,9 @@ object Similarity {
     *    still the argmin over the surviving old cells (dropping
     *    non-winning candidates can't change a minimum), so only the
     *    ADDED cells can dethrone it — one row-local `least` of the
-    *    stored (d2, cell) against an array_min over the added
-    *    codebook, which rides in as a single broadcast array row: no
-    *    shuffle, no window, no old-codebook rescan;
+    *    stored (d2, cell) against the [[Nearest]] argmin over the
+    *    added codebook, which rides in as a single broadcast book
+    *    row: no shuffle, no window, no old-codebook rescan;
     *  - untouched vectors whose cell was REMOVED (orphans, expected
     *    ≈[[IVF_SEED_MOD]] per removed cell): full argmin vs the new
     *    codebook — a small set by construction;
@@ -563,20 +550,17 @@ object Similarity {
     val orphans = survivors.join(removedCells, Seq("cell"), "left_semi")
       .select(col("vec_id"), col("v"))
     val settled = survivors.join(removedCells, Seq("cell"), "left_anti")
-    // the added codebook as ONE broadcast array row: the standing
-    // side's challenge stays row-local (array_min of an empty added
-    // set is null, and least() skips nulls — the old pair stands)
-    val addedArr = addedCents
-      .agg(collect_list(struct(col("cv"), col("cell"))).as("added"))
-    val challenged = settled.crossJoin(broadcast(addedArr))
+    // the added codebook as ONE broadcast book row: the standing
+    // side's challenge stays row-local (an empty added set has no
+    // book row, the left join leaves `book` null, the nearest of it
+    // is null, and least() skips nulls — the old pair stands)
+    val challenged = settled
+      .join(broadcast(Nearest.book(addedCents, "cell")), lit(true), "left")
       .select(col("vec_id"), col("v"),
-        least(
-          struct(col("d2"), col("cell")),
-          array_min(transform(col("added"), a =>
-            struct(r6(sqDistArr(col("v"), a.getField("cv"))).as("d2"),
-              a.getField("cell").as("cell"))))).as("w"))
+        least(struct(col("d2"), col("cell").as("id")),
+          Nearest.nearest(col("v"), col("book"))).as("w"))
       .select(col("vec_id"), col("v"),
-        col("w").getField("cell").as("cell"),
+        col("w").getField("id").as("cell"),
         col("w").getField("d2").as("d2"))
     val newAssign = challenged
       .unionByName(cellAssignD(orphans, newCents))
@@ -803,9 +787,9 @@ object Similarity {
     * the finer-grained recall curve stays in AnnRecallSpec.
     *
     * Scale shape: codebooks are M·K tiny rows (broadcast); training
-    * and assignment are keyed argmins over the exploded (vec,
-    * subspace) stream; the ADC join is codes ⋈ broadcast LUT on
-    * (m, cell) + one keyed sum per (query, vec). The exact baseline
+    * and assignment are row-local [[Nearest]] argmins over the
+    * exploded (vec, subspace) stream; the ADC join is codes ⋈
+    * broadcast LUT on (m, cell) + one keyed sum per (query, vec). The exact baseline
     * is the audit side of the contract, priced like q22. */
   private def q99(spark: SparkSession, dir: String): DataFrame = {
     // cache scope: the recall audit reads e four times (train, codes,
@@ -845,18 +829,14 @@ object Similarity {
       .select(col("vec_id"), col("m"),
         slice(col("v"), col("m") * PQ_SUBDIM + 1, lit(PQ_SUBDIM)).as("sv"))
 
-  /** Nearest-centroid assignment per (vec, subspace): broadcast the
-    * M·K codebook, keyed argmin with smallest-cell ties (r6-quantized
-    * distances so ties are representation-stable — the q34
-    * discipline). */
-  private def assignCodes(sub: DataFrame, cents: DataFrame): DataFrame = {
-    sub.join(broadcast(cents), Seq("m"))
-      .select(col("vec_id"), col("m"), col("sv"), col("cell"),
-        r6(sqDistArr(col("sv"), col("cv"))).as("d2"))
-      .transform(TopK.perGroup(_, Seq(col("vec_id"), col("m")),
-        Seq(col("d2").asc, col("cell").asc), 1, "crk"))
-      .select(col("vec_id"), col("m"), col("sv"), col("cell"))
-  }
+  /** Nearest-centroid assignment per (vec, subspace): the M·K
+    * codebook as one broadcast [[Nearest.book]] row per subspace,
+    * joined on `m`, and the row-local [[Nearest]] argmin (r6-quantized
+    * distances, smallest-cell ties — the q34 discipline). */
+  private def assignCodes(sub: DataFrame, cents: DataFrame): DataFrame =
+    sub.join(broadcast(Nearest.book(cents, "cell", keys = Seq("m"))), Seq("m"))
+      .select(col("vec_id"), col("m"), col("sv"),
+        Nearest.nearest(col("sv"), col("book")).getField("id").as("cell"))
 
   /** Train the per-subspace codebooks with [[PQ_LLOYD_ROUNDS]]
     * deterministic Lloyd rounds (r6-quantized per-dim means, the
@@ -918,23 +898,21 @@ object Similarity {
     * set retains of PQ's ranking. */
   /** Shared coarse-quantizer stage of both IVF×PQ variants: the
     * corpus's nearest-cell assignment and each query's `probes`
-    * nearest cells, from ONE ranked broadcast-codebook argmin — a
-    * tie-break or rounding change here changes both variants
-    * together, never one silently. */
+    * nearest cells, from ONE broadcast codebook row and the row-local
+    * [[Nearest]] rule — a tie-break or rounding change there changes
+    * both variants together, never one silently. */
   private def coarseAssign(e: DataFrame, seedIds: Seq[Long], probes: Int,
       queryPred: Column): (DataFrame, DataFrame, DataFrame) = {
     val cents = centsOf(e, seedIds)
       .select(col("cell").as("ivf_cell"), col("cv"))
-    val wAsg = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("ivf_cell").asc)
-    val ranked = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("ivf_cell"),
-        r6(sqDistArr(col("v"), col("cv"))).as("d2"))
-      .withColumn("crk", row_number().over(wAsg))
+    val booked = e.crossJoin(broadcast(Nearest.book(cents, "ivf_cell")))
     (cents,
-      ranked.filter(col("crk") === 1).select(col("vec_id"), col("ivf_cell")),
-      ranked.filter(queryPred && col("crk") <= probes)
-        .select(col("vec_id").as("q_id"), col("ivf_cell")))
+      booked.select(col("vec_id"),
+        Nearest.nearest(col("v"), col("book")).getField("id").as("ivf_cell")),
+      booked.filter(queryPred)
+        .select(col("vec_id").as("q_id"),
+          explode(Nearest.ranked(col("v"), col("book"), probes)).as("w"))
+        .select(col("q_id"), col("w").getField("id").as("ivf_cell")))
   }
 
   /** Shared ADC ranking tail: sum the per-(query, candidate) LUT

@@ -78,13 +78,21 @@ object Tables {
     * the right join shape there anyway. The map-only and
     * single-shuffle plans (q72, q108, q109, q111) read the plain
     * `table(spark, dir, "documents")` scan instead: the spread would
-    * only add an exchange to them. */
+    * only add an exchange to them. The scan's split count is read
+    * once per (session, dir) — it is a property of the files, and
+    * reading it builds the scan's RDD — so a directory rewritten in
+    * place keeps its first count for the session's life. */
   def documents(spark: SparkSession, dir: String): DataFrame = {
     val raw = table(spark, dir, "documents")
     val n = spark.sessionState.conf.numShufflePartitions
-    if (raw.rdd.getNumPartitions >= n) raw
+    val splits = docSplits.synchronized(docSplits.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, Int]()))
+      .computeIfAbsent(dir, _ => raw.rdd.getNumPartitions)
+    if (splits >= n) raw
     else raw.repartition(n, col("doc_id"))
   }
+  private val docSplits =
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, Int]]()
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /**

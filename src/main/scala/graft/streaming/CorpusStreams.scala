@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.TopK
+import graft.functions.{Nearest, TopK}
 
 /** One arriving document for [[CorpusStreams.quotaGateStream]]. */
 case class QuotaDoc(doc_id: Long, source: String, ts: java.sql.Timestamp)
@@ -536,10 +536,11 @@ object CorpusStreams {
     * The stream side is row-LOCAL until the replay guard: the codebook
     * is the one bounded artifact collected to the driver (k×dim
     * doubles — the SOM "collect the centroids, never the points"
-    * shape) and rides the plan as an array literal, so nearest-cell
-    * assignment is an `array_min` over per-centroid r6(d²) structs —
-    * the EXACT comparator of the batch argmin (r6(d2) asc, cell asc),
-    * no shuffle and no stream aggregation. The within-cell verify is
+    * shape) and rides the plan as an array literal
+    * (`Nearest.literal`, the batch path's codebook row), so
+    * nearest-cell assignment is the same row-local `Nearest` argmin
+    * the batch path runs (r6(d2) asc, cell asc), no shuffle and no
+    * stream aggregation. The within-cell verify is
     * one stream-static equi-join on the cell id; the standing cells
     * are a precomputed index the driver refreshes on corpus
     * compaction. `dropDuplicatesWithinWatermark` absorbs crash-replay
@@ -562,52 +563,21 @@ object CorpusStreams {
     val group =
       if (pinGroup.isEmpty) GateIndexes.autoGroup("semdedup") else pinGroup
     import graft.operators.Similarity
-    import graft.functions.VectorFns.{cosineArr, sqDistArr}
-    import graft.functions.Rounding.r6
     val cents = Similarity.centsOf(standing, seedIds)
-    val cb = cents.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
-    require(cb.nonEmpty, "standing corpus yields an empty codebook")
+    val (flat, nCells) = Nearest.literal(Nearest.book(cents, "cell"))
+    require(nCells > 0, "standing corpus yields an empty codebook")
     // the stream side follows the SAME flat↔two-level gate as the
     // batch twin (Similarity.cellAssignAuto, VERDICT r11 next #3):
     // the codebook is already on the driver, so the decision scalar
-    // is free. Below the crossover the per-row argmin rides one flat
-    // array_min over |cells| structs; above it the q42b two-level
-    // rule is inlined as a NESTED literal — supers each carrying
-    // their attached cells — so a row pays O(√cells) supers + one
-    // super's cell list, still row-LOCAL (no shuffle, no stream agg).
-    // The cell→super attach is computed once at gate build on the
-    // dimension-sized codebook and collected with it.
-    val useTwoLevel =
-      twoLevel.getOrElse(Similarity.resolveIvf2(cb.length.toLong))
-    val assignExpr: Column = if (!useTwoLevel) {
-      flatAssignExpr(cb)
-    } else {
-      val sm = Similarity.superModOf(cb.length.toLong)
-      val attach = cents.crossJoin(
-          broadcast(Similarity.supersOf(cents, seedIds, sm)))
-        .select(col("cell"), col("cv"), col("super"), col("sv"),
-          r6(sqDistArr(col("cv"), col("sv"))).as("d2s"))
-        .transform(TopK.perGroup(_, Seq(col("cell")), Seq(col("d2s").asc, col("super").asc), 1, "srk"))
-        .select(col("super"), col("sv"), col("cell"), col("cv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1),
-          r.getInt(2), r.getSeq[Double](3)))
-      val supCol = array(attach.groupBy(s => (s._1, s._2)).toSeq
-        .sortBy(_._1._1)
-        .map { case ((sup, sv), cells) =>
-          struct(typedlit(sv).as("sv"), lit(sup).as("super"),
-            array(cells.sortBy(_._3).map { c =>
-              struct(typedlit(c._4).as("cv"), lit(c._3).as("cell"))
-            }.toSeq: _*).as("cells")) }: _*)
-      val bestSuper = array_min(transform(supCol, s =>
-        struct(r6(sqDistArr(col("v"), s.getField("sv"))).as("d2s"),
-          s.getField("super").as("super"),
-          s.getField("cells").as("cells"))))
-      array_min(transform(bestSuper.getField("cells"), c =>
-        struct(r6(sqDistArr(col("v"), c.getField("cv"))).as("d2"),
-          c.getField("cell").as("cell")))).getField("cell")
-    }
+    // is free. Above the crossover the q42b rule rides the collected
+    // super book — a row pays O(√cells) supers + one super's cells,
+    // still row-LOCAL (no shuffle, no stream agg).
+    val useTwoLevel = twoLevel.getOrElse(Similarity.resolveIvf2(nCells.toLong))
+    val sm = Similarity.superModOf(nCells.toLong)
+    val assignExpr: Column =
+      if (!useTwoLevel) Nearest.nearest(col("v"), flat).getField("id")
+      else Similarity.nearestCell2(col("v"),
+        Nearest.literal(Similarity.superBook(cents, seedIds, sm))._1).getField("id")
     // the static side of a stream-static join RE-EXECUTES every
     // micro-batch — left unpersisted, each batch would re-run the
     // O(N·cells) assignment cross-join over the whole standing corpus,
@@ -621,27 +591,11 @@ object CorpusStreams {
     // drivers that rebuild gates must call `releaseGateIndexes()`
     // after retiring the old query (the index is registered below).
     val standingCells = GateIndexes.pin(
-      (if (useTwoLevel)
-        Similarity.cellAssign2(standing, cents, seedIds,
-          Similarity.superModOf(cb.length.toLong))
+      (if (useTwoLevel) Similarity.cellAssign2(standing, cents, seedIds, sm)
       else Similarity.cellAssign(standing, cents))
       .select(col("cell"), col("vec_id").as("existing_vec_id"),
         col("v").as("vb")), group)
     semdedupGateCore(vecs, assignExpr, standingCells, tau, watermark)
-  }
-
-  /** The flat nearest-cell expression both semdedup gates inline: the
-    * codebook as an array literal, one row-local `array_min` over
-    * per-centroid r6(d²) structs — the exact batch comparator
-    * (r6(d2) asc, cell asc). */
-  private def flatAssignExpr(cb: Array[(Int, Seq[Double])]): Column = {
-    import graft.functions.VectorFns.sqDistArr
-    import graft.functions.Rounding.r6
-    val cbCol = array(cb.map { case (cell, cv) =>
-      struct(typedlit(cv).as("cv"), lit(cell).as("cell")) }.toSeq: _*)
-    array_min(transform(cbCol, c =>
-      struct(r6(sqDistArr(col("v"), c.getField("cv"))).as("d2"),
-        c.getField("cell").as("cell")))).getField("cell")
   }
 
   /** Shared tail of the semdedup gates: assign each arriving vector,
@@ -681,13 +635,13 @@ object CorpusStreams {
       pinGroup: String = ""): DataFrame = {
     val group =
       if (pinGroup.isEmpty) GateIndexes.autoGroup("semdedup-idx") else pinGroup
-    val cb = cents.collect()
-      .map(r => (r.getAs[Int]("cell"), r.getSeq[Double](r.fieldIndex("cv"))))
-    require(cb.nonEmpty, "persisted semdedup index has an empty codebook")
+    val (book, nCells) = Nearest.literal(Nearest.book(cents, "cell"))
+    require(nCells > 0, "persisted semdedup index has an empty codebook")
     val standingCells = GateIndexes.pin(
       standingAssign.select(col("cell"), col("vec_id").as("existing_vec_id"),
         col("v").as("vb")), group)
-    semdedupGateCore(vecs, flatAssignExpr(cb), standingCells, tau, watermark)
+    semdedupGateCore(vecs, Nearest.nearest(col("v"), book).getField("id"),
+      standingCells, tau, watermark)
   }
 
   /** Per-batch LM quality scoring on ingest — q153

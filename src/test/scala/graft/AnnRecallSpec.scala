@@ -426,8 +426,9 @@ class AnnRecallSpec extends SparkSuite {
       .queryExecution.executedPlan.toString
     // supers, the cell→super attach and the per-super cell lists are
     // all dimension-sized broadcasts; the embedding side must never
-    // sort-merge — its only exchanges are the vec_id-keyed window
-    // shuffles (per-vector argmins, the N·O(√cells) cost the gate buys)
+    // sort-merge — both per-vector argmins (the N·O(√cells) cost the
+    // gate buys) are row-local over one broadcast super-book row, so
+    // the embedding side has no exchange at all, vec-keyed or other
     assert(!plan.contains("SortMergeJoin"),
       s"two-level assignment must not sort-merge any codebook leg:\n$plan")
     assert("BroadcastHashJoin".r.findAllIn(plan).length

@@ -105,6 +105,16 @@ class SemanticDedupSpec extends SparkSuite {
       "within-cell pairing must be a keyed join, never a cartesian")
   }
 
+  test("plan shape: cell assignment is row-local, no vec_id-keyed exchange") {
+    val sp = spark
+    import sp.implicits._
+    val e = (1L to 50L).map(i => (i, Seq(i * 0.1, -i * 0.05))).toDF("vec_id", "v")
+    val plan = Similarity.semanticDedup(e, Seq(1L, 2L), 0.9)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning(vec_id"),
+      s"the nearest-cell argmin must not shuffle by vector:\n$plan")
+  }
+
   test("vectors in different cells never pair") {
     val sp = spark
     import sp.implicits._
