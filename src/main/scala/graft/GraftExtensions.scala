@@ -2,15 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.optimizer.ReassignLambdaVariableID
-import graft.functions.{DotProduct, SquaredDistance}
+import graft.functions.{DotProduct, Shingles, SquaredDistance}
 
 /**
- * Session extension registering the native vector kernels as SQL
- * functions, so `spark.sql("... vec_dot(a, b) ...")` works anywhere
- * the DataFrame helpers ([[graft.functions.ArrayExprs]]) do — the
+ * Session extension registering the native vector and shingle kernels
+ * ([[graft.functions.ArrayExprs]]) as SQL functions, so
+ * `spark.sql("... vec_dot(a, b) ...")` or `shingles(tokens, 3)` works
+ * anywhere the DataFrame helpers in [[graft.functions.VectorFns]] do — the
  * standard `SparkSessionExtensions` integration point
  * (`spark.sql.extensions=graft.GraftExtensions`), injected without
  * touching any session internals.
@@ -41,6 +42,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("vec_sqdist"),
       new ExpressionInfo(classOf[SquaredDistance].getName, "vec_sqdist"),
       (children: Seq[Expression]) => SquaredDistance(children(0), children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("shingles"),
+      new ExpressionInfo(classOf[Shingles].getName, "shingles"),
+      (children: Seq[Expression]) => children match {
+        case Seq(toks, Literal(n: Int, _)) => Shingles(toks, n)
+        case _ => throw new IllegalArgumentException(
+          "shingles(tokens, n) needs an integer literal n")
+      }))
     ext.injectFunction((
       new FunctionIdentifier("bloom_agg"),
       new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_agg"),

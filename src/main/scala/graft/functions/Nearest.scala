@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
 import graft.functions.Rounding.r6
 
@@ -44,6 +45,15 @@ object Nearest {
     * empty book. */
   def nearest(v: Column, book: Column, keep: Seq[String] = Nil): Column =
     array_min(scored(v, book, keep))
+
+  /** The `id` of a [[nearest]] struct `w` over a book known to be
+    * non-empty — a [[book]] row joined to the row (a book row is never
+    * empty) or a non-empty [[literal]] — typed non-nullable: the argmin
+    * exists (a null entry id fails the task). Without it, a join on the
+    * id infers `isnotnull(id)` and pushes a second copy of the argmin
+    * below the projection, into the crossJoin's condition or a filter. */
+  def id(w: Column): Column =
+    GraftShims.toColumn(AssertNotNull(GraftShims.toExpression(w.getField("id"))))
 
   /** The `k` nearest entries, nearest first. */
   def ranked(v: Column, book: Column, k: Int): Column = {

@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.functions._
 
 /**
- * Column-level vector/text kernels, expressed with codegen'd built-ins
- * and higher-order functions (`zip_with`, `aggregate`, `transform`,
- * `filter`) instead of Scala UDFs, so Catalyst keeps full visibility
- * and whole-stage codegen stays unbroken.
+ * Column-level vector/text kernels, expressed with codegen'd built-ins,
+ * the native expressions of [[ArrayExprs]] and higher-order functions
+ * (`aggregate`, `filter`) instead of Scala UDFs, so Catalyst keeps
+ * full visibility and whole-stage codegen stays unbroken.
  *
  * These replace the reference's driver-side similarity SPI
  * (reference similarity/BaseSimilarity.scala:20-22 and the kernels at
@@ -54,10 +54,9 @@ object VectorFns {
 
   /** Word n-gram shingles over a token array: each shingle is the
     * space-joined window of `n` consecutive tokens. Empty array when
-    * the document is shorter than `n` tokens. */
+    * the document is shorter than `n` tokens or the array is null. A
+    * native expression ([[Shingles]]) that evaluates `toks` once per
+    * row; `n` must be at least 1. */
   def shingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    GraftShims.toColumn(Shingles(GraftShims.toExpression(toks), n))
 }

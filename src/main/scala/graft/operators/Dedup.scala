@@ -160,14 +160,12 @@ object Dedup {
   /** Long (doc_id, s) DISTINCT-shingle stream for any docs frame —
     * the input shape [[minhashBands]]'s batch groupBy form consumes
     * (one row per (doc, shingle), exactly [[shingleSet]]'s contract
-    * but over a caller-supplied frame). Built explode-then-distinct,
-    * NOT via [[docShingleSets]]' array form: the per-doc
-    * array_distinct chain re-inlines the regex/HOF pipeline and
-    * measured ~3× the long form's wall on a corpus-scale derive
-    * (the array form earns its keep only where row-locality matters
-    * — streams and per-doc joins). Same rows either way: explode
-    * drops empty arrays exactly as the size>0 filter does, and
-    * per-doc array_distinct ≡ global (doc_id, s) distinct. */
+    * but over a caller-supplied frame). Built explode-then-distinct
+    * rather than by exploding [[docShingleSets]]' arrays: the array
+    * form earns its keep only where row-locality matters — streams
+    * and per-doc joins. Same rows either way: explode drops empty
+    * arrays exactly as the size>0 filter does, and per-doc
+    * array_distinct ≡ global (doc_id, s) distinct. */
   def shingleStream(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       explode(VectorFns.shingles(VectorFns.tokens(normText(col("text"))), 3))
@@ -178,11 +176,15 @@ object Dedup {
     * twin of [[shingleSet]]'s long form (one row per doc instead of
     * one per shingle; docs shorter than 3 tokens drop out in both).
     * The row-local form is what a STREAM can compute without any
-    * aggregation state. */
-  def docShingleSets(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      array_distinct(VectorFns.shingles(
-        VectorFns.tokens(normText(col("text"))), 3)).as("sh_set"))
+    * aggregation state. `keep` columns of `docs` ride along after
+    * `doc_id`. The set leaves a one-element `explode`, so the
+    * non-empty filter reads the generated column: over a projected
+    * alias the optimizer would push the filter below the projection
+    * with the alias inlined, shingling every document twice. */
+  def docShingleSets(docs: DataFrame, keep: Seq[String] = Nil): DataFrame =
+    docs.select((col("doc_id") +: keep.map(col)) :+
+        explode(array(array_distinct(VectorFns.shingles(
+          VectorFns.tokens(normText(col("text"))), 3)))).as("sh_set"): _*)
       .filter(size(col("sh_set")) > 0)
       .withColumn("n_sh", size(col("sh_set")).cast("long"))
 
@@ -552,7 +554,7 @@ object Dedup {
     when(length(s) > 0,
       array_distinct(concat(array(s),
         transform(sequence(lit(1), length(s)),
-          i => concat(s.substr(lit(1), i - 1), s.substr(i + 1, length(s)))))))
+          i => concat(s.substr(lit(1), i - 1), s.substr(i + 1, lit(Int.MaxValue)))))))
       .otherwise(array(s))
 
   /** Edit-distance fuzzy matching (FastSS): candidate pairs meet only

@@ -200,7 +200,7 @@ object Sequential {
     def assign(centroids: DataFrame): DataFrame =
       vecs.crossJoin(broadcast(Nearest.book(centroids, "cluster")))
         .select(col("vec_id"), col("v"), Nearest.nearest(col("v"), col("book")).as("w"))
-        .select(col("vec_id"), col("v"), col("w").getField("id").as("cluster"),
+        .select(col("vec_id"), col("v"), Nearest.id(col("w")).as("cluster"),
           col("w").getField("d2").as("d2"))
     def recenter(assigned: DataFrame): DataFrame =
       assigned.select(col("cluster"), posexplode(col("v")))

@@ -128,17 +128,21 @@ object Similarity {
 
   /** The two-level codebook as ONE [[Nearest.book]] row of supers,
     * each carrying `cells`, the entries of the cells whose nearest
-    * super it is. Assembled from one collected row of attached cells
-    * (supers × cells filter work, once per build). */
+    * super it is, sorted by id. Assembled from one collected row of
+    * attached cells (supers × cells filter work, once per build). Each
+    * super sorts only its own cells: the collected list sits inside the
+    * per-super lambda, so sorting it there would sort all cells once
+    * per super. */
   private[graft] def superBook(cents: DataFrame, seedIds: Seq[Long], sm: Long): DataFrame =
     cents.crossJoin(broadcast(Nearest.book(supersOf(cents, seedIds, sm), "super", "sv")))
       .select(col("book"), struct(col("cell").as("id"), col("cv"),
-        Nearest.nearest(col("cv"), col("book")).getField("id").as("super")).as("c"))
+        Nearest.id(Nearest.nearest(col("cv"), col("book"))).as("super")).as("c"))
       .groupBy(col("book")) // one group: the supers' book
-      .agg(sort_array(collect_list(col("c"))).as("cells"))
+      .agg(collect_list(col("c")).as("cells"))
       .select(transform(col("book"), s => struct(s.getField("id").as("id"),
         s.getField("cv").as("cv"),
-        filter(col("cells"), c => c.getField("super") === s.getField("id")).as("cells")))
+        sort_array(filter(col("cells"), c => c.getField("super") === s.getField("id")))
+          .as("cells")))
         .as("book"))
 
   /** The nearest cell of `v` among its nearest super's cells, as
@@ -386,7 +390,7 @@ object Similarity {
                probes: Int): DataFrame = {
     val booked = e.crossJoin(broadcast(Nearest.book(centsOf(e, seedIds), "cell")))
     val cells = booked.select(col("vec_id"), col("v"),
-      Nearest.nearest(col("v"), col("book")).getField("id").as("cell"))
+      Nearest.id(Nearest.nearest(col("v"), col("book"))).as("cell"))
     // a query probes its `probes` nearest cells; a corpus vector lives
     // in exactly its nearest — so probe-1 searches the query's own cell
     val qprobe = booked.filter(queryPred)
@@ -500,7 +504,7 @@ object Similarity {
   private[graft] def cellAssignD(e: DataFrame, cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(Nearest.book(cents, "cell")))
       .select(col("vec_id"), col("v"), Nearest.nearest(col("v"), col("book")).as("w"))
-      .select(col("vec_id"), col("v"), col("w").getField("id").as("cell"),
+      .select(col("vec_id"), col("v"), Nearest.id(col("w")).as("cell"),
         col("w").getField("d2").as("d2"))
 
   /** EXACT incremental maintenance of the semantic-dedup cell index
@@ -836,7 +840,7 @@ object Similarity {
   private def assignCodes(sub: DataFrame, cents: DataFrame): DataFrame =
     sub.join(broadcast(Nearest.book(cents, "cell", keys = Seq("m"))), Seq("m"))
       .select(col("vec_id"), col("m"), col("sv"),
-        Nearest.nearest(col("sv"), col("book")).getField("id").as("cell"))
+        Nearest.id(Nearest.nearest(col("sv"), col("book"))).as("cell"))
 
   /** Train the per-subspace codebooks with [[PQ_LLOYD_ROUNDS]]
     * deterministic Lloyd rounds (r6-quantized per-dim means, the
@@ -908,7 +912,7 @@ object Similarity {
     val booked = e.crossJoin(broadcast(Nearest.book(cents, "ivf_cell")))
     (cents,
       booked.select(col("vec_id"),
-        Nearest.nearest(col("v"), col("book")).getField("id").as("ivf_cell")),
+        Nearest.id(Nearest.nearest(col("v"), col("book"))).as("ivf_cell")),
       booked.filter(queryPred)
         .select(col("vec_id").as("q_id"),
           explode(Nearest.ranked(col("v"), col("book"), probes)).as("w"))

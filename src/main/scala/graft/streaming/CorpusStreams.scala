@@ -575,7 +575,7 @@ object CorpusStreams {
     val useTwoLevel = twoLevel.getOrElse(Similarity.resolveIvf2(nCells.toLong))
     val sm = Similarity.superModOf(nCells.toLong)
     val assignExpr: Column =
-      if (!useTwoLevel) Nearest.nearest(col("v"), flat).getField("id")
+      if (!useTwoLevel) Nearest.id(Nearest.nearest(col("v"), flat))
       else Similarity.nearestCell2(col("v"),
         Nearest.literal(Similarity.superBook(cents, seedIds, sm))._1).getField("id")
     // the static side of a stream-static join RE-EXECUTES every
@@ -640,7 +640,7 @@ object CorpusStreams {
     val standingCells = GateIndexes.pin(
       standingAssign.select(col("cell"), col("vec_id").as("existing_vec_id"),
         col("v").as("vb")), group)
-    semdedupGateCore(vecs, Nearest.nearest(col("v"), book).getField("id"),
+    semdedupGateCore(vecs, Nearest.id(Nearest.nearest(col("v"), book)),
       standingCells, tau, watermark)
   }
 

@@ -337,13 +337,7 @@ object EventStreams {
     // ONE linear flow on the stream (two derivations of the same
     // stream joined together would be a stream-stream self-join):
     // shingle set, signatures and bands all ride the same rows
-    val stream = docs
-      .select(col("doc_id"), col("ts"),
-        array_distinct(graft.functions.VectorFns.shingles(
-          graft.functions.VectorFns.tokens(Dedup.normText(col("text"))), 3))
-          .as("sh_set"))
-      .filter(size(col("sh_set")) > 0)
-      .withColumn("n_sh", size(col("sh_set")).cast("long"))
+    val stream = Dedup.docShingleSets(docs, Seq("ts"))
       .select(col("doc_id"), col("ts"), col("sh_set"), col("n_sh"),
         explode(Dedup.bandStructs(col("sh_set"))).as("band"))
       .select(col("doc_id"), col("ts"), col("sh_set"), col("n_sh"),

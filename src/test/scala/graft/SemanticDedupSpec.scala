@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ArrayMin
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -113,6 +115,20 @@ class SemanticDedupSpec extends SparkSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning(vec_id"),
       s"the nearest-cell argmin must not shuffle by vector:\n$plan")
+  }
+
+  test("plan shape: each side of the cell-keyed join computes the argmin once") {
+    val sp = spark
+    import sp.implicits._
+    val e = (1L to 50L).map(i => (i, Seq(i * 0.1, -i * 0.05))).toDF("vec_id", "v")
+    val df = Similarity.semanticDedup(e, Seq(1L, 2L), 0.9)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    // one array_min per side, each in its assignment projection: none
+    // pushed into the crossJoin's condition by an inferred isnotnull(cell)
+    val argmins = new AdaptiveSparkPlanHelper {}.flatMap(plan)(p =>
+      p.expressions.flatMap(_.collect { case _: ArrayMin => p.nodeName }))
+    assert(argmins == Seq("Project", "Project"), s"argmin evaluated in $argmins:\n$plan")
   }
 
   test("vectors in different cells never pair") {
