@@ -15,6 +15,12 @@ the gap between the medians exceeds BASE's interquartile range, and a
 regression verdict against the metric's `bound` (see `verdict`); then
 each side's failed and attempted operations and incorrect runs.
 
+A run times as many passes as fit in its seconds, so a faster side may
+fit one more pass, which moves metrics such as the peak heap. Each pair
+line prints both sides' `attempted` passes, and each metric also gets
+the medians over only the pairs whose sides ran equally many passes
+(see `equal_pass_pairs`).
+
 Each checkout builds and runs its own perfbench/ and keeps its build in
 its own .bench_build/; this script only reads their output and never
 writes under perfbench/. A run that exits non-zero is reported and
@@ -54,6 +60,13 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4)
     return q[0], q[2]
+
+
+def equal_pass_pairs(pairs):
+    """The pairs whose two runs both finished and timed equally many
+    passes (`attempted`)."""
+    return [p for p in pairs
+            if p["base"] and p["change"] and p["base"]["attempted"] == p["change"]["attempted"]]
 
 
 def verdict(base, change, bound, lower):
@@ -106,7 +119,8 @@ def main():
             pair[side] = run(sides[side], a.workload, seed, a.seconds)
         pairs.append(pair)
         summary = "  ".join(
-            f"{s} job_s={pair[s]['metrics']['job_s']['value']:.3f}" if pair[s] else f"{s} FAILED"
+            f"{s} job_s={pair[s]['metrics']['job_s']['value']:.3f} "
+            f"attempted={pair[s]['attempted']}" if pair[s] else f"{s} FAILED"
             for s in sides)
         print(f"[ab] pair {n + 1} seed {seed} ({order[0]} first): {summary}", flush=True)
     if a.json:
@@ -115,8 +129,10 @@ def main():
 
     print(f"\n{a.workload}: {len(pairs)} pairs, base = {sides['base']}, "
           f"change = {sides['change']}")
+    equal = equal_pass_pairs(pairs)
     print(f"{'metric':<20}{'base median [q1, q3]':>30}{'change median [q1, q3]':>30}"
-          f"{'wins b/c':>10}  gap > base IQR  verdict (bound)")
+          f"{'wins b/c':>10}  gap > base IQR  verdict (bound)"
+          f"  medians b/c over the {len(equal)} equal-pass pairs")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         vals = {s: [p[s]["metrics"][name]["value"] if p[s] else None for p in pairs]
@@ -138,9 +154,11 @@ def main():
         b, c = stats["base"], stats["change"]
         gap = "-" if b is None or c is None else "yes" if abs(c[0] - b[0]) > b[2] - b[1] else "no"
         v = verdict(vals["base"], vals["change"], m["bound"], lower)
+        eq = "-" if not equal else "{:.4g} / {:.4g}".format(
+            *(statistics.median(p[s]["metrics"][name]["value"] for p in equal) for s in sides))
         print(f"{name:<20}{text['base']:>30}{text['change']:>30}"
               f"{str(wins['base']) + '/' + str(wins['change']):>10}  {gap:<14}  "
-              f"{v} ({m['bound']:g})")
+              f"{v + ' (' + format(m['bound'], 'g') + ')':<16}  {eq}")
     for s in ("base", "change"):
         ok = [p[s] for p in pairs if p[s]]
         print(f"{s}: failed {sum(r['failed'] for r in ok)} of {sum(r['attempted'] for r in ok)}"

@@ -1,10 +1,10 @@
-"""Tests for the regression verdict of scripts/ab.py.
+"""Tests for the regression verdict and the pair filter of scripts/ab.py.
 
     python3 -m unittest discover -s scripts
 """
 import unittest
 
-from ab import verdict
+from ab import equal_pass_pairs, verdict
 
 
 class VerdictTest(unittest.TestCase):
@@ -36,6 +36,22 @@ class VerdictTest(unittest.TestCase):
         self.assertEqual(verdict(self.quiet, [None, None], 0.25, True), "worse")
         self.assertEqual(verdict([None], [1.0], 0.25, True), "unresolved")
         self.assertEqual(verdict(self.quiet, [None] + self.quiet, 0.25, True), "ok")
+
+
+class EqualPassPairsTest(unittest.TestCase):
+    @staticmethod
+    def run_of(attempted):
+        return {"attempted": attempted, "metrics": {}}
+
+    def test_keeps_only_finished_pairs_with_equal_pass_counts(self):
+        pairs = [
+            {"seed": 1, "base": self.run_of(2), "change": self.run_of(2)},
+            {"seed": 2, "base": self.run_of(1), "change": self.run_of(2)},  # change fit one more
+            {"seed": 3, "base": None, "change": self.run_of(1)},  # base did not finish
+            {"seed": 4, "base": self.run_of(3), "change": self.run_of(3)},
+        ]
+        self.assertEqual([p["seed"] for p in equal_pass_pairs(pairs)], [1, 4])
+        self.assertEqual(equal_pass_pairs(pairs[1:3]), [])
 
 
 if __name__ == "__main__":

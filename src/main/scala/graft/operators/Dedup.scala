@@ -19,6 +19,12 @@ import graft.functions.Rounding.r4
  * Murmur3) with 16 affine permutations mod 2^31-1; every step is
  * integer arithmetic, so results are bit-stable across engines and
  * partitionings.
+ *
+ * One shingle set per document: [[docShingleSets]] is the only code
+ * that turns text into a shingle set. The band signatures are built
+ * from it (batch: [[shingleStream]] into [[minhashBands]]; row-local:
+ * [[bandStructs]]), and every exact-Jaccard verify — q20, q95 and the
+ * streaming ingest gate — is [[verifyJaccard]] over two of its sets.
  */
 object Dedup {
 
@@ -95,14 +101,6 @@ object Dedup {
   def baseHash(c: Column): Column =
     conv(substring(md5(c), 1, 7), 16, 10).cast("long")
 
-  /** Distinct word-3-shingles per doc (doc_id, s); docs shorter than 3
-    * tokens drop out in both engines identically. */
-  private def shingleSet(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode(VectorFns.shingles(VectorFns.tokens(normText(col("text"))), 3)).as("s"))
-      .distinct()
-
   /** Exact dedup: group by md5 of the normalized text; one row per
     * distinct content with the canonical (minimum) id and the member
     * list. The groupBy-hash shape is the 100-TB path — the hash is the
@@ -116,32 +114,31 @@ object Dedup {
         concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
           x => x.cast("string"))).as("doc_ids_csv"))
 
-  /** MinHash signatures banded for LSH: 16 affine permutations
-    * (aᵢ·h + bᵢ) mod 2³¹-1 over the shingle base hashes, min per doc,
-    * grouped into 4 bands of 4 rows; band_hash = md5 of the joined
-    * band slice. Emits (doc_id, band_id, band_hash) — the bucket key
-    * for the q20 join. */
-  /** Session-cached [[shingleSet]] — the (doc_id, s) distinct 3-shingle
-    * stream every MinHash consumer (q19/q20/q50/q95/q126/q140 via
-    * [[neardupPairsCached]], q149's fixture) is algebra over. One
-    * corpus tokenize pass per session instead of one per query (r14;
-    * the deconGramsCached twin on the dedup side). */
-  private[graft] def shingleSetCached(spark: SparkSession, dir: String): DataFrame =
-    shingleSet(spark, dir).cache()
+  /** Session-cached [[docShingleSets]] of the corpus — the per-doc
+    * shingle sets every MinHash consumer is algebra over: the band
+    * table ([[bandsCached]]) and the exact-Jaccard verify of q20/q95
+    * ([[verifyJaccard]]). One corpus tokenize pass per session instead
+    * of one per query. */
+  private[graft] def shingleSetsCached(spark: SparkSession, dir: String): DataFrame =
+    docShingleSets(Tables.documents(spark, dir)).cache()
 
-  /** Session-cached corpus band table — [[minhashBands]] over
-    * [[shingleSetCached]]. Band signatures are pure per-doc functions,
-    * so any doc-predicate slice of this table (q95's old/new split,
-    * q149's old-snapshot fixture) is bit-identical to deriving the
-    * bands from the sliced docs. */
+  /** Session-cached corpus band table — [[minhashBands]] over the
+    * explode of [[shingleSetsCached]]. Band signatures are pure per-doc
+    * functions, so any doc-predicate slice of this table (q95's old/new
+    * split, q149's old-snapshot fixture) is bit-identical to deriving
+    * the bands from the sliced docs. */
   private[graft] def bandsCached(spark: SparkSession, dir: String): DataFrame =
-    minhashBands(shingleSetCached(spark, dir)).cache()
+    minhashBands(explodeSets(shingleSetsCached(spark, dir))).cache()
 
   private def q19(spark: SparkSession, dir: String): DataFrame =
     bandsCached(spark, dir)
 
-  /** Reusable library surface: band signatures for any (doc_id, s)
-    * shingle DataFrame. */
+  /** MinHash signatures banded for LSH: 16 affine permutations
+    * (aᵢ·h + bᵢ) mod 2³¹-1 over the shingle base hashes, min per doc,
+    * grouped into 4 bands of 4 rows; band_hash = md5 of the joined
+    * band slice. Emits (doc_id, band_id, band_hash) — the bucket key
+    * for the q20 join. Reusable library surface: band signatures for
+    * any (doc_id, s) shingle DataFrame. */
   def minhashBands(sh: DataFrame): DataFrame = {
     val h = sh.select(col("doc_id"), baseHash(col("s")).as("h0"))
     val mins = (0 until NUM_PERMS).map { i =>
@@ -157,30 +154,28 @@ object Dedup {
         col("band.band_hash").as("band_hash"))
   }
 
-  /** Long (doc_id, s) DISTINCT-shingle stream for any docs frame —
-    * the input shape [[minhashBands]]'s batch groupBy form consumes
-    * (one row per (doc, shingle), exactly [[shingleSet]]'s contract
-    * but over a caller-supplied frame). Built explode-then-distinct
-    * rather than by exploding [[docShingleSets]]' arrays: the array
-    * form earns its keep only where row-locality matters — streams
-    * and per-doc joins. Same rows either way: explode drops empty
-    * arrays exactly as the size>0 filter does, and per-doc
-    * array_distinct ≡ global (doc_id, s) distinct. */
+  /** Long (doc_id, s) distinct-shingle stream for any docs frame —
+    * the input shape [[minhashBands]]' batch groupBy form consumes:
+    * [[docShingleSets]]' arrays exploded, one row per (doc, shingle).
+    * Each array is already distinct, so no (doc_id, s) distinct
+    * exchange runs, and the rows keep the docs frame's partitioning —
+    * a docs frame hash-partitioned on doc_id feeds minhashBands'
+    * groupBy(doc_id) without a shuffle. */
   def shingleStream(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(VectorFns.shingles(VectorFns.tokens(normText(col("text"))), 3))
-        .as("s"))
-      .distinct()
+    explodeSets(docShingleSets(docs))
 
-  /** Per-doc DISTINCT shingle set as an ARRAY column — the map-only
-    * twin of [[shingleSet]]'s long form (one row per doc instead of
-    * one per shingle; docs shorter than 3 tokens drop out in both).
-    * The row-local form is what a STREAM can compute without any
-    * aggregation state. `keep` columns of `docs` ride along after
-    * `doc_id`. The set leaves a one-element `explode`, so the
-    * non-empty filter reads the generated column: over a projected
-    * alias the optimizer would push the filter below the projection
-    * with the alias inlined, shingling every document twice. */
+  private def explodeSets(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("sh_set")).as("s"))
+
+  /** Per-doc DISTINCT word-3-shingle set as an ARRAY column, with its
+    * size `n_sh` — the only place text becomes a shingle set (docs
+    * shorter than 3 tokens drop out, in both engines identically). One
+    * row per doc and no aggregation, so a STREAM computes it with no
+    * state. `keep` columns of `docs` ride along after `doc_id`. The
+    * set leaves a one-element `explode`, so the non-empty filter reads
+    * the generated column: over a projected alias the optimizer would
+    * push the filter below the projection with the alias inlined,
+    * shingling every document twice. */
   def docShingleSets(docs: DataFrame, keep: Seq[String] = Nil): DataFrame =
     docs.select((col("doc_id") +: keep.map(col)) :+
         explode(array(array_distinct(VectorFns.shingles(
@@ -194,9 +189,7 @@ object Dedup {
     * output (spec-pinned), zero exchanges, and therefore legal inside
     * a streaming map stage where an aggregation would need state.
     * This is the ingest-side shape: signatures are a property of the
-    * document alone, so they never required a shuffle — the batch
-    * groupBy form exists because the long (doc, shingle) stream also
-    * feeds the exact-Jaccard verify. */
+    * document alone, so they never required a shuffle. */
   def mapOnlyBands(docs: DataFrame): DataFrame =
     docShingleSets(docs)
       .select(col("doc_id"), explode(bandStructs(col("sh_set"))).as("band"))
@@ -206,17 +199,43 @@ object Dedup {
   /** The row-local signature core of [[mapOnlyBands]]: an ARRAY of
     * (band_id, band_hash) structs over a `sh_set` array column —
     * composable into any map stage (the streaming gate inlines it so
-    * the whole signature ride stays one linear flow on the stream). */
-  def bandStructs(shSet: Column): Column = {
-    val sigs = (0 until NUM_PERMS).map { i =>
-      array_min(transform(shSet,
-        s => (baseHash(s) * lit(2L * i + 1) + lit(7919L * i + 13)) % P31))
-    }
-    array((0 until NUM_BANDS).map { b =>
-      val slice = (0 until NUM_PERMS / NUM_BANDS).map(r => sigs(b * 4 + r))
-      struct(lit(b).as("band_id"), md5(concat_ws("_", slice: _*)).as("band_hash"))
-    }: _*)
+    * the whole signature ride stays one linear flow on the stream).
+    * Each shingle is hashed once: the base-hash array is bound to one
+    * lambda variable (a one-element `transform`), and the 16
+    * permutations run over that array of longs. */
+  def bandStructs(shSet: Column): Column =
+    transform(array(transform(shSet, baseHash(_))), hs => {
+      val sigs = (0 until NUM_PERMS).map { i =>
+        array_min(transform(hs, h => (h * lit(2L * i + 1) + lit(7919L * i + 13)) % P31))
+      }
+      array((0 until NUM_BANDS).map { b =>
+        val slice = (0 until NUM_PERMS / NUM_BANDS).map(r => sigs(b * 4 + r))
+        struct(lit(b).as("band_id"), md5(concat_ws("_", slice: _*)).as("band_hash"))
+      }: _*)
+    }).getItem(0)
+
+  /** The exact-Jaccard verify every near-dup path shares. `cand` holds
+    * candidate pairs and already carries the first doc's set as
+    * `set_a`/`n_a` (see [[withSets]]); the second doc, keyed by column
+    * `b`, takes its set from `sets` ([[docShingleSets]]' shape).
+    * Returns `cand`'s other columns plus `jaccard` = r4(n_inter /
+    * (n_a + n_b − n_inter)), n_inter = |set_a ∩ set_b|. Both arrays
+    * hold distinct shingles, so the intersection size is the row count
+    * a join of the long (doc, shingle) forms on (doc, s) would give,
+    * and a pair with no shared shingle reads 0. */
+  def verifyJaccard(cand: DataFrame, sets: DataFrame, b: String): DataFrame = {
+    val out = cand.columns.filterNot(Set("set_a", "n_a")).map(col)
+    withSets(cand, sets, b, "b")
+      .withColumn("n_inter", size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
+      .select(out :+ r4(col("n_inter").cast("double") /
+        (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"): _*)
   }
+
+  /** `df` joined (inner) with the shingle set of the doc keyed by its
+    * column `key`, as `set_<side>`/`n_<side>`. */
+  def withSets(df: DataFrame, sets: DataFrame, key: String, side: String): DataFrame =
+    df.join(sets.select(col("doc_id").as(key), col("sh_set").as(s"set_$side"),
+      col("n_sh").as(s"n_$side")), Seq(key))
 
   /** Session-cached verified pair table — q20 and q50 both consume it
     * (q50's clusters are a threshold filter + components over the SAME
@@ -310,7 +329,7 @@ object Dedup {
     * shingle Jaccard. Emits every candidate pair with its verified
     * similarity so downstream thresholds stay a filter, not a re-join. */
   private def verifiedNeardupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingleSetCached(spark, dir)
+    val sets = shingleSetsCached(spark, dir)
     val bands = bandsCached(spark, dir)
     val cand = bands.as("a")
       .join(bands.as("b"),
@@ -319,19 +338,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("s")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    cand.join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(counts.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), Seq("doc_a"))
-      .join(counts.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        r4(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
+    verifyJaccard(withSets(cand, sets, "doc_a", "a"), sets, "doc_b")
   }
 
   /** Near-dup CLUSTERS: connected components over the verified q20
@@ -420,7 +427,7 @@ object Dedup {
       // unbounded suffix (matches the oracle's substr(source, 4)) —
       // a bounded length would silently drift if source ids grow
       expr("substring(source, 4)").cast("int").as("src_id"))
-    val sh = shingleSetCached(spark, dir)
+    val sets = shingleSetsCached(spark, dir)
     val bands = bandsCached(spark, dir).join(srcs, Seq("doc_id"))
     val newB = bands.filter(col("src_id") >= INCREMENTAL_SPLIT)
       .select(col("doc_id").as("new_doc_id"), col("band_id"), col("band_hash"))
@@ -428,22 +435,7 @@ object Dedup {
       .select(col("doc_id").as("existing_doc_id"), col("band_id"), col("band_hash"))
     val cand = newB.join(oldB, Seq("band_id", "band_hash"))
       .select(col("new_doc_id"), col("existing_doc_id")).distinct()
-    val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("new_doc_id"), col("s")), Seq("new_doc_id"))
-      .join(sh.select(col("doc_id").as("existing_doc_id"), col("s")),
-        Seq("existing_doc_id", "s"))
-      .groupBy(col("new_doc_id"), col("existing_doc_id"))
-      .agg(count(lit(1)).as("n_inter"))
-    cand.join(inter, Seq("new_doc_id", "existing_doc_id"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(counts.select(col("doc_id").as("new_doc_id"), col("n_sh").as("n_a")),
-        Seq("new_doc_id"))
-      .join(counts.select(col("doc_id").as("existing_doc_id"), col("n_sh").as("n_b")),
-        Seq("existing_doc_id"))
-      .select(col("new_doc_id"), col("existing_doc_id"),
-        r4(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
+    verifyJaccard(withSets(cand, sets, "new_doc_id", "a"), sets, "existing_doc_id")
       .filter(col("jaccard") >= CLUSTER_JACCARD)
   }
 

@@ -476,7 +476,9 @@ object Similarity {
     * occupancy stays O(corpus/k); the all-pairs semantic dedup the
     * paper replaces never happens. */
   def semanticDedup(e: DataFrame, seedIds: Seq[Long], tau: Double): DataFrame = {
-    val cells = cellAssign(e, centsOf(e, seedIds))
+    // one cell-keyed exchange under both join sides: ReuseExchange
+    // then runs the argmin once per vector, not once per side
+    val cells = cellAssign(e, centsOf(e, seedIds)).repartition(col("cell"))
     val b = cells.select(col("cell"), col("vec_id"), col("v").as("vb"))
     val a = cells.select(col("cell").as("cell_a"), col("vec_id").as("id_a"), col("v").as("va"))
     // grouped by (cell, vec_id): the cell-keyed join already clusters it

@@ -283,10 +283,12 @@ object EventStreams {
     * HOFs, no aggregation), two stream-STATIC equi-joins against the
     * standing band index and shingle sets (broadcast-able dims the
     * driver refreshes on corpus compaction), and the exact-Jaccard
-    * verify as row-local array_intersect arithmetic — the q95 numbers
-    * precisely (parity spec'd). `dropDuplicatesWithinWatermark` on the
-    * pair key absorbs band-collision fan-out and crash-replay
-    * redelivery; its state is watermark-bounded.
+    * verify as row-local array_intersect arithmetic —
+    * [[graft.operators.Dedup.verifyJaccard]], the function q20 and q95
+    * verify with, so the numbers are q95's precisely (parity spec'd).
+    * `dropDuplicatesWithinWatermark` on the pair key absorbs
+    * band-collision fan-out and crash-replay redelivery; its state is
+    * watermark-bounded.
     *
     * At 100 TB the standing index is the big side and it is STATIC —
     * the stream never shuffles it; each micro-batch pays bands×docs
@@ -313,7 +315,6 @@ object EventStreams {
                                standingBandRows: DataFrame, watermark: String,
                                pinGroup: String = ""): DataFrame = {
     import graft.operators.Dedup
-    import graft.functions.Rounding.r4
     // "" → a fresh never-reused group per gate BUILD: two live
     // neardup gates sharing a default group would let releasing the
     // retired one unpersist the live one's standing index. Callers
@@ -332,26 +333,20 @@ object EventStreams {
       .select(col("doc_id").as("existing_doc_id"),
         col("band_id"), col("band_hash")), group)
     val standingSets = GateIndexes.pin(standingShingleSets
-      .select(col("doc_id").as("existing_doc_id"),
-        col("sh_set").as("sh_old"), col("n_sh").as("n_b")), group)
+      .select(col("doc_id"), col("sh_set"), col("n_sh")), group)
     // ONE linear flow on the stream (two derivations of the same
     // stream joined together would be a stream-stream self-join):
-    // shingle set, signatures and bands all ride the same rows
+    // shingle set, signatures and bands all ride the same rows, so
+    // the stream side's set reaches the verify as set_a/n_a
     val stream = Dedup.docShingleSets(docs, Seq("ts"))
-      .select(col("doc_id"), col("ts"), col("sh_set"), col("n_sh"),
+      .select(col("doc_id"), col("ts"), col("sh_set").as("set_a"), col("n_sh").as("n_a"),
         explode(Dedup.bandStructs(col("sh_set"))).as("band"))
-      .select(col("doc_id"), col("ts"), col("sh_set"), col("n_sh"),
+      .select(col("doc_id"), col("ts"), col("set_a"), col("n_a"),
         col("band.band_id").as("band_id"), col("band.band_hash").as("band_hash"))
-    stream
+    val cand = stream
       .join(standingBands, Seq("band_id", "band_hash"))
-      .join(standingSets, Seq("existing_doc_id"))
-      .select(col("doc_id"), col("existing_doc_id"), col("ts"),
-        size(array_intersect(col("sh_set"), col("sh_old"))).cast("long")
-          .as("n_inter"),
-        col("n_sh").as("n_a"), col("n_b"))
-      .select(col("doc_id"), col("existing_doc_id"), col("ts"),
-        r4(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
+      .select(col("doc_id"), col("existing_doc_id"), col("ts"), col("set_a"), col("n_a"))
+    Dedup.verifyJaccard(cand, standingSets, "existing_doc_id")
       .filter(col("jaccard") >= Dedup.CLUSTER_JACCARD)
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("doc_id", "existing_doc_id")

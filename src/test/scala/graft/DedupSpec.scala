@@ -1,10 +1,30 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Md5, StringSplit}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.r4
 import graft.operators.Dedup
 
 /** MinHash/normalization unit coverage for the dedup family. */
 class DedupSpec extends SparkSuite {
+
+  /** Every physical node of `p`, through AQE stages, reused exchanges
+    * and the plans of the cached relations it scans. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+    case q: QueryStageExec => allNodes(q.plan)
+    case r: ReusedExchangeExec => r +: allNodes(r.child)
+    case m: InMemoryTableScanExec => m +: allNodes(m.relation.cachedPlan)
+    case other => other +: other.children.flatMap(allNodes)
+  }
+
+  private def refersToShingle(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+    keys.exists(_.references.exists(_.name == "s"))
 
   test("connectedComponents labels a chain, a pair and a singleton") {
     val s = spark
@@ -207,6 +227,91 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(mapOnly == longForm)
     assert(mapOnly.nonEmpty)
+  }
+
+  test("verifyJaccard equals the long-form (doc, s) double-join verify, zero-overlap pair included") {
+    val s = spark
+    import s.implicits._
+    val dir = "/root/testdata/sf0.001"
+    val sets = Dedup.shingleSetsCached(spark, dir)
+    val bands = Dedup.bandsCached(spark, dir)
+    val banded = bands.as("a").join(bands.as("b"),
+        col("a.band_id") === col("b.band_id") &&
+          col("a.band_hash") === col("b.band_hash") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val setOf = sets.collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    val ids = setOf.keys.toSeq.sorted
+    val zero = (for (a <- ids.iterator; b <- ids.iterator
+                     if a < b && (setOf(a) & setOf(b)).isEmpty) yield (a, b)).next()
+    val cand = banded.union(Seq(zero).toDF("doc_a", "doc_b")).distinct()
+    val got = Dedup.verifyJaccard(Dedup.withSets(cand, sets, "doc_a", "a"), sets, "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // the reference: distinct (doc_id, s) rows from the text, intersections
+    // counted by joining them twice on (doc, s), per-doc sizes by a groupBy
+    val sh = graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), explode(graft.functions.VectorFns.shingles(
+        graft.functions.VectorFns.tokens(Dedup.normText(col("text"))), 3)).as("s"))
+      .distinct()
+    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+    val inter = cand
+      .join(sh.select(col("doc_id").as("doc_a"), col("s")), Seq("doc_a"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
+    val want = cand.join(inter, Seq("doc_a", "doc_b"), "left")
+      .na.fill(0L, Seq("n_inter"))
+      .join(counts.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), Seq("doc_a"))
+      .join(counts.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"), r4(col("n_inter").cast("double") /
+        (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(got == want)
+    assert(got(zero) == 0.0, s"zero-overlap pair $zero")
+    assert(got.size > 1, "sf0.001 has banded candidates")
+  }
+
+  test("plan shape: q20/q95 join no shingle rows; bandsCached tokenizes once; shingleStream shuffles nothing") {
+    val dir = "/root/testdata/sf0.001"
+    for (q <- Seq("q20_neardup_pairs", "q95_incremental_dedup")) {
+      val df = Dedup.queries(q)(spark, dir)
+      df.collect()
+      val keyed = allNodes(df.queryExecution.executedPlan).collect {
+        case j: BaseJoinExec if refersToShingle(j.leftKeys ++ j.rightKeys) => j.nodeName
+      }
+      assert(keyed.isEmpty, s"$q joins on the shingle column in $keyed")
+    }
+    val bands = Dedup.bandsCached(spark, dir)
+    bands.count()
+    val nodes = allNodes(bands.queryExecution.executedPlan)
+    val splits = nodes.flatMap(_.expressions).map(_.collect { case e: StringSplit => e }.size).sum
+    assert(splits == 1, s"bandsCached tokenizes $splits times")
+    val shingleKeyed = nodes.collect {
+      case e: ShuffleExchangeExec if refersToShingle(e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning => h.expressions
+        case _ => Nil
+      }) => e.outputPartitioning
+    }
+    assert(shingleKeyed.isEmpty, s"bandsCached shuffles on the shingle: $shingleKeyed")
+    // the long stream on its own (as perfbench checkpoints it) over docs
+    // with no doc_id partitioning (an RDD source) is map-only
+    val s = spark
+    import s.implicits._
+    val docs = s.sparkContext.parallelize(Seq((1L, "a b c d"), (2L, "b c d e")))
+      .toDF("doc_id", "text")
+    val stream = Dedup.shingleStream(docs)
+    stream.collect()
+    val exchanges = allNodes(stream.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning.toString
+    }
+    assert(exchanges.isEmpty, s"shingleStream shuffles: $exchanges")
+  }
+
+  test("bandStructs hashes each shingle once: one per-shingle md5 plus one per band") {
+    val s = spark
+    import s.implicits._
+    val docs = s.sparkContext.parallelize(Seq((1L, "a b c d e"))).toDF("doc_id", "text")
+    val plan = Dedup.mapOnlyBands(docs).queryExecution.optimizedPlan
+    val md5s = plan.flatMap(_.expressions).map(_.collect { case e: Md5 => e }.size).sum
+    assert(md5s == 1 + Dedup.NUM_BANDS, s"$md5s md5 expressions:\n$plan")
   }
 
   test("q126 impact report is exactly q50's clusters aggregated with real token masses") {

@@ -124,11 +124,13 @@ class SemanticDedupSpec extends SparkSuite {
     val df = Similarity.semanticDedup(e, Seq(1L, 2L), 0.9)
     df.collect()
     val plan = df.queryExecution.executedPlan
-    // one array_min per side, each in its assignment projection: none
-    // pushed into the crossJoin's condition by an inferred isnotnull(cell)
+    // one array_min, in the assignment projection under the cell
+    // exchange both sides share (the second side reuses the exchange),
+    // and none pushed into the crossJoin's condition by an inferred
+    // isnotnull(cell)
     val argmins = new AdaptiveSparkPlanHelper {}.flatMap(plan)(p =>
       p.expressions.flatMap(_.collect { case _: ArrayMin => p.nodeName }))
-    assert(argmins == Seq("Project", "Project"), s"argmin evaluated in $argmins:\n$plan")
+    assert(argmins == Seq("Project"), s"argmin evaluated in $argmins:\n$plan")
   }
 
   test("vectors in different cells never pair") {
