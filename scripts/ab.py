@@ -3,6 +3,7 @@
 
     python3 scripts/ab.py BASE CHANGE --workload fold_eval --seeds 61-70
     python3 scripts/ab.py BASE CHANGE --workload corpus_dedup --seeds 61,63,65 --json ab.json
+    python3 scripts/ab.py BASE CHANGE --workload fold_eval,corpus_dedup --seeds 61-66
 
 BASE and CHANGE are two checkouts of the repository (for example a
 `git clone` of the parent commit and the working tree). For each seed the
@@ -14,6 +15,12 @@ side's median and quartiles, the number of pairs each side won, whether
 the gap between the medians exceeds BASE's interquartile range, and a
 regression verdict against the metric's `bound` (see `verdict`); then
 each side's failed and attempted operations and incorrect runs.
+
+`--workload` takes a comma list: the pairs of each workload run in turn,
+over the same seeds, and each workload gets its own table, printed as
+soon as its pairs are done. With `--json`, a single workload writes its
+list of pairs; a comma list writes an object of such lists keyed by
+workload.
 
 A run times as many passes as fit in its seconds, so a faster side may
 fit one more pass, which moves metrics such as the peak heap. Each pair
@@ -98,36 +105,27 @@ def verdict(base, change, bound, lower):
     return "ok"
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("base")
-    ap.add_argument("change")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, help="e.g. 61-70 or 61,63,65")
-    ap.add_argument("--seconds", type=float, default=5)
-    ap.add_argument("--json", help="also write every run's result here")
-    a = ap.parse_args()
-    sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
-    with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
-
+def run_pairs(sides, workload, seeds, seconds):
+    """Runs one pair per seed, alternating which side goes first."""
     pairs = []
-    for n, seed in enumerate(parse_seeds(a.seeds)):
+    for n, seed in enumerate(seeds):
         order = ["base", "change"] if n % 2 == 0 else ["change", "base"]
         pair = {"seed": seed, "first": order[0]}
         for side in order:
-            pair[side] = run(sides[side], a.workload, seed, a.seconds)
+            pair[side] = run(sides[side], workload, seed, seconds)
         pairs.append(pair)
         summary = "  ".join(
             f"{s} job_s={pair[s]['metrics']['job_s']['value']:.3f} "
             f"attempted={pair[s]['attempted']}" if pair[s] else f"{s} FAILED"
             for s in sides)
-        print(f"[ab] pair {n + 1} seed {seed} ({order[0]} first): {summary}", flush=True)
-    if a.json:
-        with open(a.json, "w") as f:
-            json.dump(pairs, f, indent=1)
+        print(f"[ab] {workload} pair {n + 1} seed {seed} ({order[0]} first): {summary}",
+              flush=True)
+    return pairs
 
-    print(f"\n{a.workload}: {len(pairs)} pairs, base = {sides['base']}, "
+
+def report(sides, workload, pairs, metrics):
+    """Prints one workload's table of end-to-end metrics and its failures."""
+    print(f"\n{workload}: {len(pairs)} pairs, base = {sides['base']}, "
           f"change = {sides['change']}")
     equal = equal_pass_pairs(pairs)
     print(f"{'metric':<20}{'base median [q1, q3]':>30}{'change median [q1, q3]':>30}"
@@ -163,7 +161,30 @@ def main():
         ok = [p[s] for p in pairs if p[s]]
         print(f"{s}: failed {sum(r['failed'] for r in ok)} of {sum(r['attempted'] for r in ok)}"
               f" operations, {sum(not r['correct'] for r in ok)} incorrect runs,"
-              f" {len(pairs) - len(ok)} runs that did not finish")
+              f" {len(pairs) - len(ok)} runs that did not finish", flush=True)
+
+
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("base")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True,
+                    help="e.g. corpus_dedup or fold_eval,corpus_dedup")
+    ap.add_argument("--seeds", required=True, help="e.g. 61-70 or 61,63,65")
+    ap.add_argument("--seconds", type=float, default=5)
+    ap.add_argument("--json", help="also write every run's result here")
+    a = ap.parse_args(argv)
+    sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
+    with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    workloads = [w for w in a.workload.split(",") if w]
+    results = {}
+    for w in workloads:
+        results[w] = run_pairs(sides, w, parse_seeds(a.seeds), a.seconds)
+        report(sides, w, results[w], metrics)
+    if a.json:
+        with open(a.json, "w") as f:
+            json.dump(results if len(workloads) > 1 else results[workloads[0]], f, indent=1)
     return 0
 
 

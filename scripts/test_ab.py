@@ -1,9 +1,17 @@
-"""Tests for the regression verdict and the pair filter of scripts/ab.py.
+"""Tests for the regression verdict, the pair filter and the workload
+list of scripts/ab.py.
 
     python3 -m unittest discover -s scripts
 """
+import contextlib
+import io
+import json
+import os
+import tempfile
 import unittest
+from unittest import mock
 
+import ab
 from ab import equal_pass_pairs, verdict
 
 
@@ -52,6 +60,44 @@ class EqualPassPairsTest(unittest.TestCase):
         ]
         self.assertEqual([p["seed"] for p in equal_pass_pairs(pairs)], [1, 4])
         self.assertEqual(equal_pass_pairs(pairs[1:3]), [])
+
+
+class WorkloadListTest(unittest.TestCase):
+    def test_a_comma_list_runs_each_workloads_pairs_and_prints_one_table_each(self):
+        calls = []
+
+        def fake_run(checkout, workload, seed, seconds):
+            calls.append((os.path.basename(checkout), workload, seed))
+            value = 2.0 if os.path.basename(checkout) == "base" else 1.0
+            return {"attempted": 1, "failed": 0, "correct": True,
+                    "metrics": {"job_s": {"value": value}}}
+
+        with tempfile.TemporaryDirectory() as d:
+            for side in ("base", "change"):
+                os.mkdir(os.path.join(d, side))
+            with open(os.path.join(d, "change", "BENCHMARK.json"), "w") as f:
+                json.dump({"end_to_end": [
+                    {"name": "job_s", "better": "lower", "bound": 0.25}]}, f)
+            out = io.StringIO()
+            with mock.patch.object(ab, "run", fake_run), contextlib.redirect_stdout(out):
+                ab.main([os.path.join(d, "base"), os.path.join(d, "change"),
+                         "--workload", "fold_eval,corpus_dedup", "--seeds", "5-6",
+                         "--json", os.path.join(d, "ab.json")])
+            with open(os.path.join(d, "ab.json")) as f:
+                written = json.load(f)
+        # every pair of the first workload runs before the second's, each
+        # pair alternating which side goes first
+        self.assertEqual(calls, [
+            ("base", "fold_eval", 5), ("change", "fold_eval", 5),
+            ("change", "fold_eval", 6), ("base", "fold_eval", 6),
+            ("base", "corpus_dedup", 5), ("change", "corpus_dedup", 5),
+            ("change", "corpus_dedup", 6), ("base", "corpus_dedup", 6)])
+        text = out.getvalue()
+        self.assertEqual([l.split(":")[0] for l in text.splitlines() if " pairs, base = " in l],
+                         ["fold_eval", "corpus_dedup"])
+        self.assertEqual(text.count("job_s    "), 2)
+        self.assertEqual(sorted(written), ["corpus_dedup", "fold_eval"])
+        self.assertEqual([p["seed"] for p in written["corpus_dedup"]], [5, 6])
 
 
 if __name__ == "__main__":

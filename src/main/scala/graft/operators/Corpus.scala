@@ -962,9 +962,9 @@ object Corpus {
       .select(col("doc_id"), lit(1).as("f_exact"))
 
     // no localCheckpoint here: neardupPairsCached is already a pinned
-    // session cache, and connectedComponents pins its symmetrized edge
-    // list — a third materialization of the same rows only added an
-    // eager job barrier to the build floor
+    // session cache, and connectedComponents reads the edges once, into
+    // its co-partitioned adjacency state — a third materialization of
+    // the same rows only added an eager job barrier to the build floor
     val ndPairs = Dedup.neardupPairsCached(spark, dir)
       .filter(col("jaccard") >= Dedup.CLUSTER_JACCARD)
       .select(col("doc_a"), col("doc_b"))
@@ -2011,12 +2011,14 @@ object Corpus {
   def writeNeardupIndex(docs: DataFrame, dir: String): Unit = {
     Dedup.docShingleSets(docs).write.mode("overwrite")
       .parquet(s"$dir/shingle_sets")
-    // the batch explode+groupBy band form: bit-identical to the
+    // the bands read the sets just written, so the text is tokenized
+    // once. The batch explode+groupBy band form: bit-identical to the
     // stream-side mapOnlyBands (spec-pinned) and still the faster
     // derive: over 50k documents (sf0.1's corpus ×10, local[2]) it
     // took ~3.4 s against mapOnlyBands' ~4.9 s of interpreted array
     // HOFs (row-local is for micro-batches)
-    Dedup.minhashBands(Dedup.shingleStream(docs))
+    Dedup.minhashBands(Dedup.explodeSets(
+        docs.sparkSession.read.parquet(s"$dir/shingle_sets")))
       .write.mode("overwrite").parquet(s"$dir/bands")
   }
 
@@ -2057,9 +2059,9 @@ object Corpus {
     // through the anti-join exchange-free (§3.1; the snapshotFold
     // posture made explicit, r15)
     val t = touched.hint("broadcast")
-    (Dedup.docShingleSets(deltaDocs)
-      .unionByName(oldSets.join(t, Seq("doc_id"), "left_anti")),
-      Dedup.minhashBands(Dedup.shingleStream(deltaDocs))
+    val deltaSets = Dedup.docShingleSets(deltaDocs)
+    (deltaSets.unionByName(oldSets.join(t, Seq("doc_id"), "left_anti")),
+      Dedup.minhashBands(Dedup.explodeSets(deltaSets))
         .unionByName(oldBands.join(t, Seq("doc_id"), "left_anti")))
   }
 

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 import graft.sources.Tables
 import graft.functions.VectorFns
 import graft.functions.Rounding.r4
@@ -164,7 +167,8 @@ object Dedup {
   def shingleStream(docs: DataFrame): DataFrame =
     explodeSets(docShingleSets(docs))
 
-  private def explodeSets(sets: DataFrame): DataFrame =
+  /** [[docShingleSets]]' arrays as the long (doc_id, s) stream. */
+  private[graft] def explodeSets(sets: DataFrame): DataFrame =
     sets.select(col("doc_id"), explode(col("sh_set")).as("s"))
 
   /** Per-doc DISTINCT word-3-shingle set as an ARRAY column, with its
@@ -346,9 +350,9 @@ object Dedup {
     * canonical dedup groups in a real corpus pipeline. Components via
     * iterative min-label propagation: each round every node adopts the
     * smallest label among itself and its neighbors; loop until a round
-    * changes nothing (a driver-side LOOP of distributed jobs — the
-    * standard iterative-algorithm shape, not a driver data loop; label
-    * state never leaves the cluster). Emits one row per cluster with
+    * changes nothing (one Spark job per round over co-partitioned
+    * label state — see [[connectedComponents]]; label state never
+    * leaves the cluster). Emits one row per cluster with
     * the canonical (minimum) doc id. Deterministic regardless of
     * iteration count because it runs to convergence. */
   private def q50(spark: SparkSession, dir: String): DataFrame = {
@@ -469,42 +473,80 @@ object Dedup {
 
   /** Reusable library surface: connected components of an undirected
     * edge list over the given node set → (doc_id, label) with label =
-    * the component's minimum node id.
+    * the component's minimum node id, both typed like `nodes.doc_id`
+    * (any integral type). An isolated node keeps its own id; an edge
+    * endpoint missing from `nodes` neither sends nor receives a label;
+    * a null node comes back as (null, null), and an edge with a null
+    * endpoint joins nothing.
     *
-    * Convergence is O(component diameter) rounds — fine for near-dup
-    * graphs, whose clusters are dense and shallow. For deep chain
-    * graphs prefer a pointer-doubling / large-star-small-star scheme
-    * (O(log n) rounds, same DataFrame machinery). */
+    * Min-label propagation over co-partitioned state. One set-up
+    * cogroup keys every node with its distinct neighbours (both
+    * directions of each edge) under one HashPartitioner of
+    * `spark.sql.shuffle.partitions`, so the state holds each node's
+    * adjacency once. Each round only the nodes whose label fell in the
+    * last round send it to their neighbours; the map-side-combined
+    * `reduceByKey(min)` onto the same partitioner is the round's only
+    * shuffle, and the `leftOuterJoin` back onto the state is narrow.
+    * The new state is locally checkpointed and the round's
+    * changed-count action materializes it: ONE Spark job per round,
+    * and lineage never grows across rounds. In memory, a round's state
+    * shares the neighbour arrays of the state before it; superseded
+    * states are released by the context cleaner, as the DataFrame
+    * loop's were.
+    *
+    * Convergence is O(component diameter) rounds plus one quiet round
+    * — fine for near-dup graphs, whose clusters are dense and shallow.
+    * For deep chain graphs prefer a pointer-doubling /
+    * large-star-small-star scheme (O(log n) rounds). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint() // edge list reused every round — materialize once
-    // localCheckpoint (not cache) each round: iterative plans otherwise
-    // grow lineage linearly in rounds and re-execute the whole history
-    // on every action — the classic iterative-algorithm pitfall
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
-      .localCheckpoint()
+    val spark = nodes.sparkSession
+    val idType = nodes.schema("doc_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"connectedComponents needs integral ids, got $idType")
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    def longs(df: DataFrame, cs: String*) =
+      df.select(cs.map(col(_).cast(LongType)): _*).queryExecution.toRdd
+    val ids = longs(nodes, "doc_id").map(r =>
+      (if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)), ()))
+    val adj = longs(edges, "doc_a", "doc_b").flatMap { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+      else {
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator((java.lang.Long.valueOf(a), b), (java.lang.Long.valueOf(b), a))
+      }
+    }
+    // a key with no node row is an endpoint outside `nodes`: no state
+    var state = ids.cogroup(adj, part).mapPartitions(_.collect {
+      case (id, (copies, nbrs)) if copies.nonEmpty =>
+        id -> CcNode(if (id == null) 0L else id.longValue, nbrs.toArray.distinct,
+          copies.size, changed = true)
+    }, preservesPartitioning = true).localCheckpoint()
     var changed = 1L
     while (changed > 0) {
-      val nbMin = sym.join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("label")).as("nb_label"))
-      // a label changes exactly when a neighbor's label beats it, so
-      // the convergence flag rides the SAME join that computes the new
-      // label — the old formulation re-joined next against labels just
-      // to diff them, a second full shuffle join per round whose jobs
-      // dominated the sf-constant floor of every CC caller (q50, q92,
-      // q95, q100)
-      val next = labels.join(nbMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nb_label"), col("label"))).as("label"),
-          (coalesce(col("nb_label"), col("label")) < col("label")).as("chg"))
-        .localCheckpoint()
-      changed = next.filter(col("chg")).count() // scan of pinned blocks only
-      labels = next.drop("chg")
+      val best = state.flatMap { case (_, n) =>
+        if (n.changed) n.nbrs.iterator.map(v => (java.lang.Long.valueOf(v), n.label))
+        else Iterator.empty
+      }.reduceByKey(part, math.min(_, _))
+      val next = state.leftOuterJoin(best, part).mapValues {
+        case (n, Some(l)) if l < n.label => n.copy(label = l, changed = true)
+        case (n, _) => if (n.changed) n.copy(changed = false) else n
+      }.localCheckpoint()
+      changed = next.filter(_._2.changed).count()
+      state = next
     }
-    labels
+    val rows = state.flatMap { case (id, n) =>
+      Iterator.fill(n.copies)(if (id == null) Row(null, null) else Row(id, n.label))
+    }
+    spark.createDataFrame(rows, StructType(Seq(
+        StructField("doc_id", LongType), StructField("label", LongType))))
+      .select(col("doc_id").cast(idType), col("label").cast(idType))
   }
+
+  /** One node of [[connectedComponents]]' state: its current label,
+    * its distinct neighbours, how many `nodes` rows carry its id, and
+    * whether its label fell in the last round. */
+  private final case class CcNode(label: Long, nbrs: Array[Long], copies: Int,
+      changed: Boolean)
 
   /** SimHash: 32-bit locality-sensitive fingerprint from token counts.
     * Bit j is set when the count-weighted sum of (2·bitⱼ(h)−1) over all

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Rounding.r4
 import graft.operators.Dedup
@@ -37,6 +38,98 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 7L))
+  }
+
+  /** The DataFrame min-label loop `Dedup.connectedComponents` ran
+    * before it moved to co-partitioned label state: the reference its
+    * rows and types are compared with. */
+  private def referenceComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .localCheckpoint()
+    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
+      .localCheckpoint()
+    var changed = 1L
+    while (changed > 0) {
+      val nbMin = sym.join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
+        .groupBy(col("src").as("doc_id"))
+        .agg(min(col("label")).as("nb_label"))
+      val next = labels.join(nbMin, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("label"), coalesce(col("nb_label"), col("label"))).as("label"),
+          (coalesce(col("nb_label"), col("label")) < col("label")).as("chg"))
+        .localCheckpoint()
+      changed = next.filter(col("chg")).count()
+      labels = next.drop("chg")
+    }
+    labels
+  }
+
+  /** A seeded graph over shuffled, gapped ids: chains of 2 to 30 nodes
+    * (one of exactly 30), cycles and stars, duplicate and reversed
+    * edges, self-loops, isolated nodes, one duplicated node row, edge
+    * endpoints missing from the nodes (one of them bridging two
+    * components), a null node and an edge with a null endpoint. */
+  private def randomGraph(seed: Int): (Seq[Option[Long]], Seq[(Option[Long], Option[Long])]) = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((1 to 160).map(i => 7L * i + rnd.nextInt(7)))
+    var at = 0
+    def take(k: Int): Seq[Long] = { val xs = ids.slice(at, at + k); at += k; xs }
+    val edges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    for (len <- Seq(30) ++ Seq.fill(3)(2 + rnd.nextInt(29))) {
+      val c = take(len)
+      edges ++= c.zip(c.tail)
+    }
+    for (_ <- 1 to 2) {
+      val c = take(3 + rnd.nextInt(8))
+      edges ++= c.zip(c.tail :+ c.head)
+    }
+    for (_ <- 1 to 2) {
+      val c = take(3 + rnd.nextInt(10))
+      edges ++= c.tail.map(c.head -> _)
+    }
+    val missing = take(3)
+    val nodes = ids.filterNot(missing.toSet)
+    edges ++= rnd.shuffle(edges.toSeq).take(8)
+    edges ++= rnd.shuffle(edges.toSeq).take(8).map(_.swap)
+    edges ++= rnd.shuffle(nodes).take(4).map(x => (x, x))
+    edges ++= Seq((nodes(0), missing(0)), (missing(0), nodes(1)), (missing(1), nodes(2)))
+    (None +: rnd.shuffle(nodes.head +: nodes).map(Some(_)),
+      (Some(nodes(3)), None) +: rnd.shuffle(edges.toSeq).map { case (a, b) => (Some(a), Some(b)) })
+  }
+
+  test("connectedComponents equals the DataFrame loop on seeded random graphs, int and long ids") {
+    val s = spark
+    import s.implicits._
+    for (seed <- Seq(11, 12); asInt <- Seq(false, true)) {
+      val (ns, es) = randomGraph(seed)
+      val (nodes, edges) =
+        if (asInt) (ns.map(_.map(_.toInt)).toDF("doc_id"),
+          es.map { case (a, b) => (a.map(_.toInt), b.map(_.toInt)) }.toDF("doc_a", "doc_b"))
+        else (ns.toDF("doc_id"), es.toDF("doc_a", "doc_b"))
+      val got = Dedup.connectedComponents(nodes, edges)
+      val ref = referenceComponents(nodes, edges)
+      assert(got.schema.map(f => (f.name, f.dataType)) == ref.schema.map(f => (f.name, f.dataType)))
+      val rows = (df: DataFrame) => df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString(",")).toSeq
+      val gotRows = rows(got)
+      assert(gotRows == rows(ref), s"seed $seed, int ids $asInt")
+      assert(gotRows.size == ns.size)
+      assert(gotRows.contains(Seq("null", "null")))
+    }
+  }
+
+  test("connectedComponents runs one Spark job per round") {
+    val s = spark
+    import s.implicits._
+    // a chain 1-2-…-n converges in n rounds: n − 1 that move label 1 one
+    // hop further, then one that changes nothing
+    def chainJobs(n: Int): Int = jobsDuring {
+      Dedup.connectedComponents((1L to n).toDF("doc_id"),
+        (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")).collect()
+    }
+    val (j30, j20) = (chainJobs(30), chainJobs(20))
+    assert(j30 <= 30 + 3, s"a 30-node chain ran $j30 jobs over 30 rounds")
+    assert(j30 - j20 == 10, s"10 more rounds ran ${j30 - j20} more jobs")
   }
 
   test("normText collapses whitespace and case") {
