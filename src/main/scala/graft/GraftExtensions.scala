@@ -27,8 +27,9 @@ import graft.functions.{DotProduct, Shingles, SquaredDistance}
  * optimizer runs later anyway). A typed Dataset's array decoders draw
  * those ids from a global counter, so without it two builds of one
  * typed plan never match each other's cache entry — the session
- * cache over [[graft.functions.Gram.pairs]] (`itemSimsCached`) would
- * be rebuilt by every query that reads it.
+ * caches over [[graft.functions.Gram.pairs]] (`itemSimsCached`,
+ * `userDotsCached`, `pairRulesCached`) would be rebuilt by every
+ * query that reads them.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

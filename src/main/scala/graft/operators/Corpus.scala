@@ -961,16 +961,7 @@ object Corpus {
       .filter(col("doc_id") =!= col("canon"))
       .select(col("doc_id"), lit(1).as("f_exact"))
 
-    // no localCheckpoint here: neardupPairsCached is already a pinned
-    // session cache, and connectedComponents reads the edges once, into
-    // its co-partitioned adjacency state — a third materialization of
-    // the same rows only added an eager job barrier to the build floor
-    val ndPairs = Dedup.neardupPairsCached(spark, dir)
-      .filter(col("jaccard") >= Dedup.CLUSTER_JACCARD)
-      .select(col("doc_a"), col("doc_b"))
-    val ndNodes = ndPairs.select(col("doc_a").as("doc_id"))
-      .union(ndPairs.select(col("doc_b").as("doc_id"))).distinct()
-    val nearDup = Dedup.connectedComponents(ndNodes, ndPairs)
+    val nearDup = Dedup.nearDupLabels(spark, dir)
       .filter(col("doc_id") =!= col("label"))
       .select(col("doc_id"), lit(1).as("f_near"))
 

@@ -355,26 +355,29 @@ object Dedup {
     * leaves the cluster). Emits one row per cluster with
     * the canonical (minimum) doc id. Deterministic regardless of
     * iteration count because it runs to convergence. */
-  private def q50(spark: SparkSession, dir: String): DataFrame = {
-    // materialize the (tiny) verified pair list ONCE — nodes and the
-    // symmetrized edge list each branch off it twice, and without this
-    // checkpoint every branch re-runs the whole shingle→minhash→verify
-    // pipeline (4× the q20 cost, measured dominating the query)
-    val pairs = neardupPairsCached(spark, dir)
-      .filter(col("jaccard") >= CLUSTER_JACCARD)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
-    // only edge ENDPOINTS can land in a >1-doc cluster, and singletons
-    // are filtered below — so the label iteration runs over the (small)
-    // near-dup node set, not the whole corpus
-    val nodes = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    connectedComponents(nodes, pairs)
+  private def q50(spark: SparkSession, dir: String): DataFrame =
+    nearDupLabels(spark, dir)
       .groupBy(col("label").as("canonical_id"))
       .agg(count(lit(1)).as("n_docs"),
         concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
           x => x.cast("string"))).as("member_csv"))
       .filter(col("n_docs") > 1) // singleton "clusters" are just unique docs
+
+  /** The near-dup cluster labels `(doc_id, label)` that q50, q92, q100
+    * and q126 read: [[connectedComponents]] over the session-cached
+    * verified pairs with jaccard ≥ [[CLUSTER_JACCARD]]. Only edge
+    * ENDPOINTS can land in a >1-doc cluster, so the label iteration
+    * runs over the (small) near-dup node set, not the whole corpus.
+    * The pairs need no checkpoint: they are a session cache, and
+    * [[connectedComponents]] reads the edges once, into its
+    * co-partitioned adjacency state. */
+  private[graft] def nearDupLabels(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = neardupPairsCached(spark, dir)
+      .filter(col("jaccard") >= CLUSTER_JACCARD)
+      .select(col("doc_a"), col("doc_b"))
+    val nodes = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    connectedComponents(nodes, pairs)
   }
 
   /** q126 — the dedup IMPACT report: what running the q50/q92
@@ -391,16 +394,10 @@ object Dedup {
     * tiny slice); the token join touches that slice, not the corpus;
     * the final agg is size-bucketed — a handful of rows. */
   private def q126(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = neardupPairsCached(spark, dir)
-      .filter(col("jaccard") >= CLUSTER_JACCARD)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
-    val nodes = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(VectorFns.tokens(col("text"))).cast("long").as("n_tok"))
-    connectedComponents(nodes, pairs)
+    nearDupLabels(spark, dir)
       .join(toks, Seq("doc_id"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("sz"),
@@ -455,15 +452,9 @@ object Dedup {
   private def q92(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val pairs = neardupPairsCached(spark, dir)
-      .filter(col("jaccard") >= CLUSTER_JACCARD)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
-    val nodes = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     // no broadcast hint: the label table is |near-dup nodes| rows —
     // tiny here, corpus-scale on a dup-heavy crawl. AQE decides.
-    docs.join(connectedComponents(nodes, pairs), Seq("doc_id"), "left")
+    docs.join(nearDupLabels(spark, dir), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("canonical_id"),
         (coalesce(col("label"), col("doc_id")) === col("doc_id"))

@@ -61,7 +61,13 @@ object Graph {
     * into its directed graph, q93 counts triangles on it, and q97
     * thresholds on w, so the per-order pair fan-out + count (the
     * expensive scan-side stage) runs ONCE per session via CacheManager
-    * plan-dedup (the itemSimsCached pattern). */
+    * plan-dedup (the itemSimsCached pattern).
+    *
+    * It stays a self-join, not [[graft.functions.Gram.pairs]]: orders
+    * hold about 4 parts each, so routing per-order profiles to item
+    * blocks costs more than the small join (1.2M joined rows at
+    * sf0.1). In 8 alternating cache builds (sf0.1, local[4]) the
+    * kernel form lost all 8, median 2.70 s against 2.16 s. */
   private[graft] def coPurchaseUndCached(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p")).distinct()

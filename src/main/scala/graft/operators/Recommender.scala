@@ -27,9 +27,9 @@ import graft.functions.{Gram, TopK}
  * partition, so only the sorted per-key profiles cross the shuffle
  * (Σ n_k·min(n_k, B) entries for B shuffle partitions, never more
  * than the Σ n_k² rows a self-join would emit) and only co-rated pairs
- * materialize. Cohort-restricted pair stages stay cohort-sized
- * self-joins, and so does the half table [[userDotsHalf]] (see
- * there). Per-entity moment dimensions are broadcast. Cosine ranks
+ * materialize; the half table [[userDotsHalf]] is the same product
+ * with `u < v` kept. Cohort-restricted pair stages stay cohort-sized
+ * self-joins. Per-entity moment dimensions are broadcast. Cosine ranks
  * are computed on values rounded to 6 dp with a deterministic id
  * tie-break so top-k selection is stable across engines and
  * accumulation orders; final scores round to 4 dp (the repo-wide
@@ -320,18 +320,15 @@ object Recommender {
     * kernel runs over the same ratings pay the big keyed self-join
     * shuffle ONCE instead of N times. Must be built over the same
     * capped ratings the consumer uses (the default un-capped form
-    * here). It stays a self-join on purpose: [[Gram.pairs]] emits
-    * both halves, and computing both to keep one measured no faster on
-    * the sf0.1 user-side queries that read this table (q16, q30, q59,
-    * q63). */
-  def userDotsHalf(ratings: DataFrame): DataFrame = {
-    val a = ratings.select(col("user_id").as("u"), col("item_id"), col("rating").as("ra"))
-    val b = ratings.select(col("user_id").as("v"), col("item_id"), col("rating").as("rb"))
-    a.join(b, Seq("item_id"))
-      .filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v"))
-      .agg(sum(col("ra") * col("rb")).as("dot"), count(lit(1)).as("co"))
-  }
+    * here). The pairs come from [[Gram.pairs]] keyed on item_id, with
+    * the `u < v` half kept before any cache, so a cached table holds
+    * half the mirrored rows. `u`/`v` keep the user_id type, `dot` is a
+    * double (also for integral ratings) summed in item order, and a
+    * null rating fails with an error naming the column. */
+  def userDotsHalf(ratings: DataFrame): DataFrame =
+    Gram.pairs(ratings, "item_id", "user_id", "rating")
+      .filter(col("i") < col("j"))
+      .select(col("i").as("u"), col("j").as("v"), col("dot"), col("co"))
 
   /** Session-cached [[userDotsHalf]] over the shared ratings view —
     * CacheManager plan-dedup gives q16/q30/q59/q63 ONE materialization
@@ -393,7 +390,9 @@ object Recommender {
           case None => full
         }
       case (None, Some(narrow)) =>
-        // cohort run: only (target, *) pairs exist — direct form
+        // cohort run: only (target, *) pairs exist — direct form. It
+        // stays a join: Gram.pairs emits every row, and a target-rows
+        // mode would be an option on it (ROADMAP direction 1)
         narrow(r)
           .select(col("user_id").as("u"), col("item_id"), col("rating").as("ra"))
           .join(r.select(col("user_id").as("v"), col("item_id"), col("rating").as("rb")),
@@ -1006,10 +1005,11 @@ object Recommender {
     * Returns `(u < v, sim)` unrounded (seams round r6).
     *
     * This is the 100-TB escape hatch for the user-side pair stage:
-    * [[userDotsHalf]]'s shuffle is Σ_i raters_i² — the same Σ n²
-    * regime BASELINE §r10 measured going 13× super-linear on the item
-    * side — and the sampling cap bounds it independently of viral-item
-    * fan-out. */
+    * [[userDotsHalf]]'s block tasks still touch Σ_i raters_i² pair
+    * products (its shuffle is the routed Σ_i raters_i·min(raters_i, B)
+    * profile entries) — the same Σ n² regime BASELINE §r10 measured
+    * going 13× super-linear on the item side — and the sampling cap
+    * bounds it independently of viral-item fan-out. */
   def userSimsDimsum(ratings: DataFrame, threshold: Double): DataFrame =
     itemSimsDimsum(transposed(ratings), threshold)
       .select(col("i").as("u"), col("j").as("v"), col("sim"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.functions.{Nearest, TopK}
+import graft.functions.{Gram, Nearest, TopK}
 import graft.functions.Rounding.{r4, r6}
 
 /**
@@ -107,25 +107,21 @@ object Sequential {
   /** As [[pairRules]], with pre-built baskets so callers that also
     * consume the baskets (q36) build them once.
     *
-    * `maxItemsPerUser` bounds the quadratic candidate-pair fan-out
-    * (Σᵤ n(u)², [[Recommender.capPerUser]]) — it truncates CANDIDATE
-    * generation only; the support/confidence recount below runs over
-    * the full baskets, so every emitted rule's stats stay exact, the
-    * cap can only drop candidates mined from power-user tails. */
+    * `maxItemsPerUser` ([[Recommender.capPerUser]]) bounds the
+    * candidate-pair work: the routed profile entries Σᵤ n(u)·min(n(u), B)
+    * for B shuffle partitions, and the Σᵤ n(u)² pair products the block
+    * tasks sum ([[candidatePairs]]). It truncates CANDIDATE generation
+    * only; the support/confidence recount below runs over the full
+    * baskets, so every emitted rule's stats stay exact, the cap can
+    * only drop candidates mined from power-user tails. */
   def pairRules(ratings: DataFrame, baskets: DataFrame,
                 maxItemsPerUser: Int = Int.MaxValue): DataFrame = {
-    val rCap = Recommender.capPerUser(ratings, maxItemsPerUser)
-      .select(col("user_id"), col("item_id"))
     val nb = baskets.agg(count(lit(1)).as("n_baskets"))
     // antecedent counts stay EXACT (full data) — only candidate
     // generation below reads the capped rows
     val icnt = ratings.groupBy("item_id").agg(count(lit(1)).as("cnt_i"))
 
-    val a = rCap.select(col("user_id"), col("item_id").as("i"))
-    val b = rCap.select(col("user_id"), col("item_id").as("j"))
-    val pairs = a.join(b, Seq("user_id")).filter(col("i") < col("j"))
-      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("cnt"))
-    val rules = pairs.crossJoin(broadcast(nb))
+    val rules = candidatePairs(ratings, maxItemsPerUser).crossJoin(broadcast(nb))
       .filter(col("cnt") >=
         greatest(lit(4L), ceil(col("n_baskets") * 0.004).cast("long")))
       .select(col("i"), col("j"))
@@ -141,6 +137,15 @@ object Sequential {
         r6(col("cnt2").cast("double") / col("n_baskets")).as("support"),
         r6(col("cnt2").cast("double") / col("cnt_i")).as("confidence"))
   }
+
+  /** [[pairRules]]' candidate stage: `(i < j, cnt)` = the number of
+    * users whose capped rows hold both items — the Gram pair counts
+    * over a constant value. */
+  private[graft] def candidatePairs(ratings: DataFrame, maxItemsPerUser: Int): DataFrame =
+    Gram.pairs(Recommender.capPerUser(ratings, maxItemsPerUser).withColumn("one", lit(1)),
+      "user_id", "item_id", "one")
+      .filter(col("i") < col("j"))
+      .select(col("i"), col("j"), col("co").as("cnt"))
 
   /** U2/J1: timestamp→period via an explicit BETWEEN range join
     * against a materialized period dimension — the join-based

@@ -1,7 +1,10 @@
 package graft
 
+import scala.util.Random
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Sequential
+import graft.functions.Rounding.r6
+import graft.operators.{Recommender, Sequential}
 
 /** Hand-checkable fixtures for the R8/R9 stages: Lloyd assignment on
   * separable 2-D points, and pair-rule mining with recounted
@@ -51,5 +54,48 @@ class SequentialSpec extends SparkSuite {
     val got = Sequential.pairRules(r).collect()
       .map(x => (x.getInt(0), x.getInt(1), x.getDouble(2), x.getDouble(3))).toSeq
     assert(got == Seq((1, 2, 0.5, 0.833333)))
+  }
+
+  /** `pairRules` with its candidate pairs from the self-join it had
+    * before it ran on Gram.pairs. */
+  private def referenceRules(ratings: DataFrame, maxItemsPerUser: Int): DataFrame = {
+    val baskets = Sequential.userBaskets(ratings)
+    val rCap = Recommender.capPerUser(ratings, maxItemsPerUser)
+      .select(col("user_id"), col("item_id"))
+    val nb = baskets.agg(count(lit(1)).as("n_baskets"))
+    val icnt = ratings.groupBy("item_id").agg(count(lit(1)).as("cnt_i"))
+    val a = rCap.select(col("user_id"), col("item_id").as("i"))
+    val b = rCap.select(col("user_id"), col("item_id").as("j"))
+    val rules = a.join(b, Seq("user_id")).filter(col("i") < col("j"))
+      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("cnt"))
+      .crossJoin(nb)
+      .filter(col("cnt") >= greatest(lit(4L), ceil(col("n_baskets") * 0.004).cast("long")))
+      .select(col("i"), col("j"))
+    baskets.join(rules, array_contains(col("items"), col("i")) &&
+        array_contains(col("items"), col("j")))
+      .groupBy(col("i"), col("j")).agg(count(lit(1)).as("cnt2"))
+      .crossJoin(nb)
+      .join(icnt.select(col("item_id").as("i"), col("cnt_i")), Seq("i"))
+      .select(col("i").as("antecedent"), col("j").as("consequent"),
+        r6(col("cnt2").cast("double") / col("n_baskets")).as("support"),
+        r6(col("cnt2").cast("double") / col("cnt_i")).as("confidence"))
+  }
+
+  test("pairRules with maxItemsPerUser = 2 equals the join-form reference") {
+    val s = spark
+    import s.implicits._
+    val rnd = new Random(11)
+    val r = (1 to 60).flatMap { u =>
+      rnd.shuffle((1 to 7).toList).take(2 + rnd.nextInt(4)).map(i => (u, i, 1.0 + rnd.nextInt(5)))
+    }.toDF("user_id", "item_id", "rating")
+    def rows(df: DataFrame) = df.collect()
+      .map(x => (x.getInt(0), x.getInt(1), x.getDouble(2), x.getDouble(3))).toSet
+    val capped = rows(Sequential.pairRules(r, Sequential.userBaskets(r), maxItemsPerUser = 2))
+    assert(capped.nonEmpty)
+    assert(capped == rows(referenceRules(r, 2)))
+    // the cap drops candidates here, so the case exercises it
+    val full = rows(Sequential.pairRules(r))
+    assert(full == rows(referenceRules(r, Int.MaxValue)))
+    assert(capped != full)
   }
 }
