@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.functions.Prefix
 import graft.functions.Rounding.r4
 
 /**
@@ -515,40 +516,26 @@ object Analytics {
     * All-integer arithmetic — engine-exact. Scale: a corpus can be
     * ONE source, so a cumsum window partitioned by source alone would
     * serialize 100 TB through a single window partition. The running
-    * total is therefore a classic two-level distributed prefix sum:
-    * (1) within-bucket cumsum, window keyed on
-    * (source, hkey DIV 2¹⁶) — max partition = source/4096; (2) bucket
-    * token totals (map-side partial agg) → exclusive running offsets
-    * via a window over ≤4096 TINY rows per source, broadcast back;
-    * (3) cum = bucket offset + within-bucket cum. Because the bucket
-    * is a prefix of hkey, the composed order equals the single-window
-    * order and the output is bit-identical (spec-pinned against the
-    * naive form). The manifest agg is keyed on (source, shard); a
-    * skew-heavy source simply yields more shards; no shard exceeds
-    * target + one doc's tokens (pinned in spec). */
+    * total is therefore [[graft.functions.Prefix.running]]'s two-level
+    * prefix sum keyed on (source, hkey DIV 2¹⁶) — max window partition
+    * = source/4096, ≤4096 broadcast offsets per source. The bucket is
+    * an order-preserving prefix of hkey, so the result is bit-identical
+    * to the single-window cumsum (spec-pinned against the naive form).
+    * The manifest agg is keyed on (source, shard); a skew-heavy source
+    * simply yields more shards; no shard exceeds target + one doc's
+    * tokens (pinned in spec). */
   private def q119(spark: SparkSession, dir: String): DataFrame =
     shardPlan(Tables.documents(spark, dir))
 
   def shardPlan(docs: DataFrame, target: Long = SHARD_TOKENS): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col("doc_id"), col("source"),
       size(graft.functions.VectorFns.tokens(col("text"))).cast("long").as("n_tok"),
       graft.operators.Dedup.baseHash(concat(col("doc_id").cast("string"),
         lit("_shard"))).as("hkey"))
       .withColumn("bkt", expr(s"hkey DIV $SHARD_BUCKET_DIV"))
-    val wb = Window.partitionBy(col("source"), col("bkt"))
-      .orderBy(col("hkey"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wo = Window.partitionBy(col("source")).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = toks.groupBy(col("source"), col("bkt"))
-      .agg(sum(col("n_tok")).as("btok"))
-      .select(col("source"), col("bkt"),
-        coalesce(sum(col("btok")).over(wo), lit(0L)).as("boff"))
-    toks
-      .withColumn("bcum", sum(col("n_tok")).over(wb))
-      .join(broadcast(offsets), Seq("source", "bkt"))
-      .withColumn("cum", col("boff") + col("bcum"))
+    val (run, Seq(cum)) = Prefix.running(toks, Seq("source"), "bkt",
+      Seq(col("hkey"), col("doc_id")), sums = Seq("n_tok"))
+    run.withColumn("cum", cum)
       .withColumn("shard_id", expr(s"(cum - n_tok) DIV $target"))
       .groupBy(col("source"), col("shard_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("shard_tokens"),
@@ -573,32 +560,20 @@ object Analytics {
     * kept flag) — the artifact a pipeline mounts, q124b-style.
     *
     * Scale shape: an exact per-source rank WITHOUT a corpus-wide sort
-    * — the q119 two-level construction: row_number within (source,
-    * hash-bucket) partitions + broadcast exclusive bucket-count
-    * offsets (≤4096 rows per source, counts only). Ordering by
-    * (bucket, hkey) IS ordering by hkey since the bucket is
-    * order-preserving, so the two-level rank equals the oracle's flat
-    * per-source row_number exactly; hkey ties are impossible across
-    * buckets and broken by doc_id within one. */
+    * — [[graft.functions.Prefix.running]]'s rank keyed on (source,
+    * hkey DIV 2¹⁶): row_number within (source, hash-bucket) partitions
+    * plus broadcast exclusive bucket-count offsets (≤4096 rows per
+    * source). The bucket is an order-preserving prefix of hkey, so the
+    * two-level rank equals the oracle's flat per-source row_number
+    * exactly; hkey ties are broken by doc_id. */
   def sourceQuota(docs: DataFrame, quota: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val keyed = docs.select(col("doc_id"), col("source"),
       graft.operators.Dedup.baseHash(concat(lit(QUOTA_SALT),
         col("doc_id").cast("string"))).as("hkey"))
       .withColumn("bkt", expr(s"hkey DIV $SHARD_BUCKET_DIV"))
-    val wb = Window.partitionBy(col("source"), col("bkt"))
-      .orderBy(col("hkey"), col("doc_id"))
-    val wo = Window.partitionBy(col("source")).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = keyed.groupBy(col("source"), col("bkt"))
-      .agg(count(lit(1)).as("bcnt"))
-      .select(col("source"), col("bkt"),
-        coalesce(sum(col("bcnt")).over(wo), lit(0L)).as("boff"))
-    keyed
-      .withColumn("brk", row_number().over(wb).cast("long"))
-      .join(broadcast(offsets), Seq("source", "bkt"))
-      .select(col("doc_id"), col("source"),
-        (col("boff") + col("brk")).as("qrank"),
-        (col("boff") + col("brk") <= quota).cast("int").as("kept"))
+    val (run, Seq(qrank)) = Prefix.running(keyed, Seq("source"), "bkt",
+      Seq(col("hkey"), col("doc_id")), rank = true)
+    run.select(col("doc_id"), col("source"), qrank.as("qrank"),
+      (qrank <= quota).cast("int").as("kept"))
   }
 }

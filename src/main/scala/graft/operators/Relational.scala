@@ -97,7 +97,17 @@ object Relational {
     * (reference disabled broadcast joins globally, Main.scala:340-341;
     * the rebuild deliberately reverts that — region/nation are tiny at
     * any SF, so broadcast-hash avoids two shuffles). */
-  private def q03(spark: SparkSession, dir: String): DataFrame = {
+  private def q03(spark: SparkSession, dir: String): DataFrame =
+    lineitemStar(spark, dir)
+      .groupBy(col("r_name"), col("n_name"))
+      .agg(
+        round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .cast("decimal(30,8)")), 4).cast("double").as("revenue"),
+        countDistinct(col("o_orderkey")).as("n_orders"))
+
+  /** The five-table star q03 and q55 aggregate: lineitem ⋈ orders ⋈
+    * customer, then the tiny nation and region dimensions broadcast. */
+  private def lineitemStar(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val o  = Tables.orders(spark, dir)
     val c  = Tables.customer(spark, dir)
@@ -107,11 +117,6 @@ object Relational {
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(
-        round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast("decimal(30,8)")), 4).cast("double").as("revenue"),
-        countDistinct(col("o_orderkey")).as("n_orders"))
   }
 
   /** T1 — per-group top-k via window rank (the distributed form of the
@@ -457,11 +462,18 @@ object Relational {
   private def q53(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(col("event_type"))
-      .agg(
-        graft.functions.Rounding.r4(expr("percentile(value, 0.5)")).as("p50"),
-        graft.functions.Rounding.r4(expr("percentile(value, 0.9)")).as("p90"),
-        graft.functions.Rounding.r4(expr("percentile(value, 0.99)")).as("p99"),
-        count(lit(1)).as("n"))
+      .agg(exactPercentiles.head, exactPercentiles.tail :+ count(lit(1)).as("n"): _*)
+
+  /** q53's exact interpolated p50/p90/p99 of `value`, r4. */
+  private def exactPercentiles: Seq[Column] = Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99")
+    .map { case (p, name) =>
+      graft.functions.Rounding.r4(expr(s"percentile(value, $p)")).as(name) }
+
+  /** Whether approximate statistic `a` lies within the exact bracket
+    * [lo, hi] (1e-9 slack for the double round trip), as an int verdict
+    * — the rank-bracket check of q53b and TextOps.q106b. */
+  private[graft] def bracketOk(a: Column, lo: Column, hi: Column): Column =
+    (a >= lo - lit(1e-9) && a <= hi + lit(1e-9)).cast("int")
 
   /** A3-analog for ordered statistics at the 100-TB posture: the
     * APPROXIMATE twin of q53 the Scaladoc there promises. Exact
@@ -477,15 +489,10 @@ object Relational {
     * so each approx quantile must lie between the exact quantiles at
     * target ±2% rank — hundreds of times looser than the sketch's
     * 1/accuracy rank guarantee, sound for ANY value distribution. */
-  private def q53b(spark: SparkSession, dir: String): DataFrame = {
-    def bracketOk(a: Column, lo: Column, hi: Column): Column =
-      (a >= lo - lit(1e-9) && a <= hi + lit(1e-9)).cast("int")
+  private def q53b(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(col("event_type"))
-      .agg(
-        graft.functions.Rounding.r4(expr("percentile(value, 0.5)")).as("p50"),
-        graft.functions.Rounding.r4(expr("percentile(value, 0.9)")).as("p90"),
-        graft.functions.Rounding.r4(expr("percentile(value, 0.99)")).as("p99"),
+      .agg(exactPercentiles.head, exactPercentiles.tail ++ Seq(
         expr("approx_percentile(value, 0.5, 10000)").as("a50"),
         expr("approx_percentile(value, 0.9, 10000)").as("a90"),
         expr("approx_percentile(value, 0.99, 10000)").as("a99"),
@@ -495,12 +502,11 @@ object Relational {
         expr("percentile(value, 0.92)").as("hi90"),
         expr("percentile(value, 0.97)").as("lo99"),
         expr("percentile(value, 1.0)").as("hi99"),
-        count(lit(1)).as("n"))
+        count(lit(1)).as("n")): _*)
       .select(col("event_type"), col("p50"), col("p90"), col("p99"), col("n"),
         bracketOk(col("a50"), col("lo50"), col("hi50")).as("p50_ok"),
         bracketOk(col("a90"), col("lo90"), col("hi90")).as("p90_ok"),
         bracketOk(col("a99"), col("lo99"), col("hi99")).as("p99_ok"))
-  }
 
   val TRENDING_TOP_K = 5
 
@@ -539,16 +545,8 @@ object Relational {
     * computes all three grouping sets from a single scan instead of
     * three queries). NULL group keys mark subtotal rows, coalesced to
     * printable markers so the oracle compare is null-free. */
-  private def q55(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o  = Tables.orders(spark, dir)
-    val c  = Tables.customer(spark, dir)
-    val n  = Tables.nation(spark, dir)
-    val r  = Tables.region(spark, dir)
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+  private def q55(spark: SparkSession, dir: String): DataFrame =
+    lineitemStar(spark, dir)
       .rollup(col("r_name"), col("n_name"))
       // the grand-total row folds the WHOLE fact table into one sum —
       // at ~1e10 magnitude double accumulation order shifts the 4th
@@ -563,7 +561,6 @@ object Relational {
       .select(coalesce(col("r_name"), lit("<all>")).as("r_name"),
         coalesce(col("n_name"), lit("<all>")).as("n_name"),
         col("revenue"), col("n_rows"))
-  }
 
   /** AS-OF join — an operator Spark has no native form of (DuckDB's
     * native ASOF JOIN is the oracle): each event matches the LATEST

@@ -87,7 +87,7 @@ object Similarity {
           % IVF_SEED_MOD === 0)
       .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"))
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
@@ -689,49 +689,38 @@ object Similarity {
     * snapshot; fold == derive is the maintenance invariant, so a
     * stale survivor row, a ghost cell, or a missed challenge
     * hash-fails here instead of silently skewing a rebuilt gate. */
-  private def q150(spark: SparkSession, dir: String): DataFrame = {
-    val sm = Corpus.DELTA_SNAP_MOD
-    val rm = Corpus.DELTA_REV_MOD
-    val e = emb(spark, dir)
-    val rev = transform(col("v"), x => -x)
-    val oldSnap = e.filter(col("vec_id") % sm =!= 3L)
-    val delta = e.filter(col("vec_id") % sm =!= 4L)
-      .filter(col("vec_id") % sm === 3L || col("vec_id") % rm === 0L)
-      .withColumn("v", when(col("vec_id") % rm === 0L, rev).otherwise(col("v")))
-    val removed = e.filter(col("vec_id") % sm === 4L).select(col("vec_id"))
-    val touched = delta.select(col("vec_id")).unionByName(removed)
-    val oldCents = centsOf(oldSnap, IVF_SEEDS)
-    foldCellIndex(oldCents, cellAssignD(oldSnap, oldCents),
-      delta, touched, IVF_SEEDS)._2
-      .select(col("vec_id"), col("cell"), col("d2"))
-  }
+  private def q150(spark: SparkSession, dir: String): DataFrame =
+    cellIndexFold(emb(spark, dir), old => {
+      val oldCents = centsOf(old, IVF_SEEDS)
+      (oldCents, cellAssignD(old, oldCents))
+    })
 
   /** q150b — q150's fold with the old cell index arriving FROM
     * PARQUET (the q149b/q152b posture): the old snapshot's codebook
-    * and d2-carrying assignments are materialized once per JVM via
+    * and d2-carrying assignments are materialized once per session via
     * `Corpus.writeSemdedupIndex`; every invocation loads + folds, so
     * the bench floor prices the production maintenance op (challenge
     * + orphans + delta against loaded state) instead of the fixture's
     * in-query derive of the old index. Same oracle SQL: the fold is
     * exact wherever the old index came from. */
-  private val q150bIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def q150b(spark: SparkSession, dir: String): DataFrame =
+    cellIndexFold(emb(spark, dir), old => Corpus.readSemdedupIndex(spark,
+      Corpus.sessionIndexDir("q150b_ix", dir)(
+        Corpus.writeSemdedupIndex(old, IVF_SEEDS, _))))
 
-  private def q150b(spark: SparkSession, dir: String): DataFrame = {
+  /** The embedding-side q144 fixture fold q150 and q150b share: the
+    * old snapshot and the delta under the q150 rules, folded through
+    * [[foldCellIndex]]; `oldIndex` turns the old snapshot into its
+    * (codebook, d2-carrying assignment) index. */
+  private def cellIndexFold(e: DataFrame,
+      oldIndex: DataFrame => (DataFrame, DataFrame)): DataFrame = {
     val sm = Corpus.DELTA_SNAP_MOD
     val rm = Corpus.DELTA_REV_MOD
-    val e = emb(spark, dir)
-    val rev = transform(col("v"), x => -x)
-    val oldSnap = e.filter(col("vec_id") % sm =!= 3L)
-    val ixDir = q150bIndexDirs.computeIfAbsent(dir, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft_q150b_ix").toString
-      Corpus.writeSemdedupIndex(oldSnap, IVF_SEEDS, p)
-      p
-    })
-    val (oldCents, oldAssign) = Corpus.readSemdedupIndex(spark, ixDir)
+    val (oldCents, oldAssign) = oldIndex(e.filter(col("vec_id") % sm =!= 3L))
     val delta = e.filter(col("vec_id") % sm =!= 4L)
       .filter(col("vec_id") % sm === 3L || col("vec_id") % rm === 0L)
-      .withColumn("v", when(col("vec_id") % rm === 0L, rev).otherwise(col("v")))
+      .withColumn("v", when(col("vec_id") % rm === 0L,
+        transform(col("v"), x => -x)).otherwise(col("v")))
     val removed = e.filter(col("vec_id") % sm === 4L).select(col("vec_id"))
     val touched = delta.select(col("vec_id")).unionByName(removed)
     foldCellIndex(oldCents, oldAssign, delta, touched, IVF_SEEDS)._2
@@ -773,6 +762,26 @@ object Similarity {
     * (spread across the id range; present at every SF). */
   val PQ_SEEDS: Seq[Long] = (0 until PQ_K).map(i => (i * 31 + 3).toLong)
 
+  /** The exact squared-L2 baseline of a recall contract (q99, q146,
+    * q151): each `qPred` query vector's [[TOP_K]] nearest other
+    * vectors as (q_id, n_id), the query cohort broadcast. */
+  private def exactTopK(e: DataFrame, qPred: Column): DataFrame = {
+    val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
+    e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"),
+        sqDistArr(col("qv"), col("v")).as("d2"))
+      .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
+      .select(col("q_id"), col("n_id"))
+  }
+
+  /** A recall contract's fixture counts (corpus size, query cohort
+    * size) in one scalar agg — one action for both (§2.6). */
+  private def cohortCounts(e: DataFrame, qPred: Column): (Long, Long) = {
+    val nRow = e.agg(count(lit(1)).as("n"), count(when(qPred, 1)).as("nq"))
+      .collect()(0)
+    (nRow.getLong(0), nRow.getLong(1))
+  }
+
   /** Product-quantization ANN — the compression half of the standard
     * 100-TB vector-search layout (IVF partitions the corpus, [[q42]];
     * PQ shrinks what each probe scans): per-subspace codebooks train
@@ -808,18 +817,8 @@ object Similarity {
       val qPred = col("vec_id") % 25 === 0
       val pq = pqTopK(e, codes, cents, qPred, TOP_K)
         .select(col("q_id"), col("n_id"))
-      val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          sqDistArr(col("qv"), col("v")).as("d2"))
-        .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
-        .select(col("q_id"), col("n_id"))
-      val hits = exact.join(pq, Seq("q_id", "n_id")).count()
-      // one scalar agg for both fixture counts (r15 — §2.6, the q151
-      // action-merging posture)
-      val nRow = e.agg(count(lit(1)).as("n"),
-        count(when(qPred, 1)).as("nq")).collect()(0)
-      val (nCorpus, nq) = (nRow.getLong(0), nRow.getLong(1))
+      val hits = exactTopK(e, qPred).join(pq, Seq("q_id", "n_id")).count()
+      val (nCorpus, nq) = cohortCounts(e, qPred)
       val recall = hits.toDouble / (nq * TOP_K)
       import spark.implicits._
       Seq((nq, nCorpus, TOP_K, if (recall >= PQ_RECALL_FLOOR) 1 else 0))
@@ -1057,17 +1056,8 @@ object Similarity {
       val probes = ivfPqProbes(centsOf(e, IVF_SEEDS).count())
       val ann = ivfPqTopK(e, IVF_SEEDS, probes, qPred, TOP_K)
         .select(col("q_id"), col("n_id"))
-      val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          sqDistArr(col("qv"), col("v")).as("d2"))
-        .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
-        .select(col("q_id"), col("n_id"))
-      val hits = exact.join(ann, Seq("q_id", "n_id")).count()
-      // one scalar agg for both fixture counts (r15 — §2.6)
-      val nRow = e.agg(count(lit(1)).as("n"),
-        count(when(qPred, 1)).as("nq")).collect()(0)
-      val (nCorpus, nq) = (nRow.getLong(0), nRow.getLong(1))
+      val hits = exactTopK(e, qPred).join(ann, Seq("q_id", "n_id")).count()
+      val (nCorpus, nq) = cohortCounts(e, qPred)
       // fixture precondition, asserted loudly: a cohort-less or
       // sub-k corpus would make recall NaN / structurally deflated,
       // and the oracle's pinned recall_ok=1 would then read as a
@@ -1142,22 +1132,14 @@ object Similarity {
         .select(col("q_id"), col("n_id"), lit(1).as("is_res"))
       val raw = ivfPqTopK(e, IVF_SEEDS, probes, qPred, TOP_K)
         .select(col("q_id"), col("n_id"), lit(0).as("is_res"))
-      val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          sqDistArr(col("qv"), col("v")).as("d2"))
-        .transform(TopK.perGroup(_, Seq(col("q_id")), Seq(col("d2").asc, col("n_id").asc), TOP_K))
-        .select(col("q_id"), col("n_id"))
-      val hitRow = exact.join(res.unionByName(raw), Seq("q_id", "n_id"))
+      val hitRow = exactTopK(e, qPred).join(res.unionByName(raw), Seq("q_id", "n_id"))
         .agg(sum(col("is_res")).as("res_hits"),
           sum(lit(1) - col("is_res")).as("raw_hits"))
         .collect()(0)
       val (resHits, rawHits) =
         (Option(hitRow.get(0)).fold(0L)(_.asInstanceOf[Long]),
           Option(hitRow.get(1)).fold(0L)(_.asInstanceOf[Long]))
-      val nRow = e.agg(count(lit(1)).as("n"),
-        count(when(qPred, 1)).as("nq")).collect()(0)
-      val (nCorpus, nq) = (nRow.getLong(0), nRow.getLong(1))
+      val (nCorpus, nq) = cohortCounts(e, qPred)
       require(nq > 0 && nCorpus > TOP_K,
         s"q151: degenerate fixture (nq=$nq, n=$nCorpus)")
       import spark.implicits._

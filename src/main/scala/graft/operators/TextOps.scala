@@ -705,11 +705,14 @@ object TextOps {
     * emits real bullet/ellipsis fractions + verdicts or typed NULLs. */
   private def q107(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val hasLines = docs
-      .agg(max(col("text").contains("\n").cast("int")).as("h"))
-      .head().getInt(0) == 1
-    gopherFlags(docs, hasLines)
+    gopherFlags(docs, hasLines(docs))
   }
+
+  /** The line-structure capability guard: whether any doc's text holds
+    * a newline — one bounded scalar aggregate, collected. */
+  private[graft] def hasLines(docs: DataFrame): Boolean =
+    docs.agg(max(col("text").contains("\n").cast("int")).as("h"))
+      .head().getInt(0) == 1
 
   /** Library surface of [[q107]]: per-doc Gopher flags over
     * `(doc_id, text)`. `corpusHasLines` gates the line-structure
@@ -871,9 +874,7 @@ object TextOps {
       expr(s"percentile(avg_logp, ${CCNET_HEAD_Q + CCNET_RANK_TOL})").as("hi_h"),
       expr(s"percentile(avg_logp, ${CCNET_MID_Q - CCNET_RANK_TOL})").as("lo_m"),
       expr(s"percentile(avg_logp, ${CCNET_MID_Q + CCNET_RANK_TOL})").as("hi_m"))
-    def bracketOk(a: org.apache.spark.sql.Column, lo: org.apache.spark.sql.Column,
-                  hi: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (a >= lo - lit(1e-9) && a <= hi + lit(1e-9)).cast("int")
+    import Relational.bracketOk
     val cutsV = cuts.select(col("lang"), col("head_cut"), col("mid_cut"),
       bracketOk(col("a_head"), col("lo_h"), col("hi_h")).as("head_cut_ok"),
       bracketOk(col("a_mid"), col("lo_m"), col("hi_m")).as("mid_cut_ok"))

@@ -744,24 +744,18 @@ object CorpusStreams {
   }
 
   /** The per-source card over the live counters — q131's columns,
-    * computed with the SAME quantized-entropy arithmetic so
-    * single-batch ingest is bit-identical to the batch card
+    * computed by the batch card's own entropy leg and projection
+    * (`Corpus.langEntropy`, `Corpus.datasheetCard`), so single-batch
+    * ingest is bit-identical to the batch card
     * (`mean_logp` is served from the last [[refreshLm]] snapshot and
     * null when the LM hook is off). */
   def datasheet(spark: SparkSession, outDir: String): DataFrame = {
-    import graft.functions.Rounding.{r4, r6}
+    import graft.operators.Corpus
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val c = spark.read.parquet(s"$outDir/sheet_counters")
-    val entropy = c.select(col("source"), col("lang"), col("n_docs").as("nl"))
-      .join(c.groupBy(col("source")).agg(sum(col("n_docs")).as("ns")),
-        Seq("source"))
-      .select(col("source"),
-        r6((-(col("nl").cast("double") / col("ns")))
-          * log(col("nl").cast("double") / col("ns")))
-          .cast("decimal(20,6)").as("term"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_langs"), sum(col("term")).as("ent"))
+    val entropy = Corpus.langEntropy(
+      c.select(col("source"), col("lang"), col("n_docs").as("nl")))
     val logpPath = s"$outDir/sheet_logp"
     val logp =
       if (fs.exists(new org.apache.hadoop.fs.Path(logpPath)))
@@ -774,11 +768,6 @@ object CorpusStreams {
         sum(col("n_dups")).as("n_dups"), sum(col("n_pass")).as("n_pass"))
       .join(entropy, Seq("source"))
       .join(logp, Seq("source"), "left")
-      .select(col("source"), col("n_docs"), col("n_tokens"), col("n_langs"),
-        r4(col("ent").cast("double")).as("lang_entropy"),
-        r4(col("n_dups").cast("double") / col("n_docs")).as("dup_frac"),
-        r4(col("n_pass").cast("double") / col("n_docs")).as("gopher_pass_frac"),
-        when(col("n_lm") > 0, r4(col("slp").cast("double") / col("n_lm")))
-          .as("mean_logp"))
+      .select(Corpus.datasheetCard: _*)
   }
 }

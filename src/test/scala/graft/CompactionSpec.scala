@@ -553,4 +553,26 @@ class CompactionSpec extends SparkSuite {
     assert((persistedIds -- before).isEmpty,
       "full retirement must drain every pin this loop took")
   }
+
+  test("sessionIndexDir: one index dir per (session root, name, corpus), written once, under the session's temp root") {
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory())
+      .getCanonicalPath
+    assert(root != new java.io.File(".").getCanonicalPath,
+      "the session root must be the driver's temp directory, not the working directory")
+    var writes = 0
+    def dirFor(name: String, corpus: String): String =
+      Corpus.sessionIndexDir(name, corpus) { p =>
+        writes += 1
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
+      }
+    val a = dirFor("spec_ix", "/corpus/a")
+    assert(new java.io.File(a).getCanonicalPath.startsWith(root + java.io.File.separator),
+      s"$a is not under the session root $root")
+    assert(new java.io.File(a).isDirectory)
+    assert(dirFor("spec_ix", "/corpus/a") == a)
+    assert(writes == 1, "a second call must return the memoized path without rewriting it")
+    val b = dirFor("spec_ix", "/corpus/b")
+    val c = dirFor("other_ix", "/corpus/a")
+    assert(Set(a, b, c).size == 3 && writes == 3)
+  }
 }
