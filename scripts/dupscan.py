@@ -13,8 +13,9 @@ Every window that occurs at two or more places is reported. Overlapping
 windows that repeat together are printed as one cluster: its length in code
 lines, its first line, and each place as `file:first-last` (source line
 numbers). Then, per file, the number of code lines that some repeated window
-covers, and the total. Standard library only; run it from the repository
-root or anywhere else.
+covers, and the total. It exits 1 when it finds any cluster and 0
+otherwise, so it can gate a change. Standard library only; run it from the
+repository root or anywhere else.
 """
 import os
 import re
@@ -117,7 +118,7 @@ def main():
     for p in sorted(covered, key=lambda p: (-covered[p], p)):
         print(f"{covered[p]:6d}  {p}")
     print(f"{sum(covered.values()):6d}  total repeated code lines")
-    return 0
+    return 1 if clusters else 0
 
 
 if __name__ == "__main__":

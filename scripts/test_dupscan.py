@@ -72,22 +72,35 @@ class FilesTest(unittest.TestCase):
             self.assertEqual(scala_files(root),
                              [os.path.join("src/main/scala/graft/operators/X.scala")])
 
-    def test_the_report_lists_places_and_per_file_counts(self):
+    @staticmethod
+    def run_main(bodies):
+        """(exit code, report) of dupscan.main over one file per body."""
         with tempfile.TemporaryDirectory() as root:
             d = os.path.join(root, "src/main/scala/graft")
             os.makedirs(d)
-            for name in ("A.scala", "B.scala"):
-                with open(os.path.join(d, name), "w") as f:
-                    f.write(BODY)
+            for i, body in enumerate(bodies):
+                with open(os.path.join(d, "ABCD"[i] + ".scala"), "w") as f:
+                    f.write(body)
             out = io.StringIO()
             old = dupscan.ROOT
             dupscan.ROOT = root
             try:
                 with contextlib.redirect_stdout(out):
-                    dupscan.main()
+                    code = dupscan.main()
             finally:
                 dupscan.ROOT = old
-        text = out.getvalue()
+        return code, out.getvalue()
+
+    def test_a_cluster_exits_1(self):
+        self.assertEqual(self.run_main([BODY, BODY])[0], 1)
+
+    def test_no_cluster_exits_0(self):
+        code, text = self.run_main([BODY, BODY.replace("f(", "g(")])
+        self.assertEqual(code, 0)
+        self.assertIn("== 0 clusters ==", text)
+
+    def test_the_report_lists_places_and_per_file_counts(self):
+        text = self.run_main([BODY, BODY])[1]
         self.assertIn("6 lines x 2: val x0 = f(0)", text)
         self.assertIn("src/main/scala/graft/A.scala:1-6", text)
         self.assertIn("== 1 clusters ==", text)

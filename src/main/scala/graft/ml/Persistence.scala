@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.param._
+import org.apache.spark.ml.util.MLReader
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -98,6 +99,19 @@ private[ml] object GraftMLIO {
     val uid = (j \ "uid").asInstanceOf[JString].s
     val params = (j \ "params").asInstanceOf[JObject].obj
     (cls, uid, params, j)
+  }
+
+  /** The reader of a model that restores its saved params: `make`
+    * builds the instance from (session, path, uid, full metadata
+    * object), then every param in the metadata is set on it. */
+  def reader[M <: Params](make: (SparkSession, String, String, JObject) => M)
+  : MLReader[M] = new MLReader[M] {
+    override def load(path: String): M = {
+      val (_, uid, params, meta) = readMeta(path)
+      val m = make(sparkSession, path, uid, meta)
+      applyParams(m, params)
+      m
+    }
   }
 
   def subPath(path: String, name: String): String =

@@ -87,15 +87,11 @@ object KnnRecommenderModel extends MLReadable[KnnRecommenderModel] {
   private[ml] val OUT_SCHEMA: StructType =
     StructType.fromDDL("user_id LONG, item_id LONG, score DOUBLE, rk INT")
 
-  override def read: MLReader[KnnRecommenderModel] = new MLReader[KnnRecommenderModel] {
-    override def load(path: String): KnnRecommenderModel = {
-      val (_, uid, params, _) = GraftMLIO.readMeta(path)
-      val train = sparkSession.read.parquet(GraftMLIO.subPath(path, "train"))
-      val m = new KnnRecommenderModel(uid, train)
-      GraftMLIO.applyParams(m, params)
-      m
+  override def read: MLReader[KnnRecommenderModel] =
+    GraftMLIO.reader { (spark, path, uid, _) =>
+      new KnnRecommenderModel(uid,
+        spark.read.parquet(GraftMLIO.subPath(path, "train")))
     }
-  }
 }
 
 class KnnRecommenderModel private[ml] (override val uid: String,
@@ -343,15 +339,9 @@ class AlsRecommenderModel private[ml] (override val uid: String,
 
 object AlsRecommenderModel extends MLReadable[AlsRecommenderModel] {
   override def read: MLReader[AlsRecommenderModel] =
-    new MLReader[AlsRecommenderModel] {
-      override def load(path: String): AlsRecommenderModel = {
-        val (_, uid, params, _) = GraftMLIO.readMeta(path)
-        val als = org.apache.spark.ml.recommendation.ALSModel
-          .load(GraftMLIO.subPath(path, "als"))
-        val m = new AlsRecommenderModel(uid, als)
-        GraftMLIO.applyParams(m, params)
-        m
-      }
+    GraftMLIO.reader { (_, path, uid, _) =>
+      new AlsRecommenderModel(uid, org.apache.spark.ml.recommendation.ALSModel
+        .load(GraftMLIO.subPath(path, "als")))
     }
 }
 

@@ -154,20 +154,15 @@ class SOMModel private[ml] (override val uid: String,
 }
 
 object SOMModel extends MLReadable[SOMModel] {
-  override def read: MLReader[SOMModel] = new MLReader[SOMModel] {
-    override def load(path: String): SOMModel = {
-      import org.json4s._
-      val (_, uid, params, meta) = GraftMLIO.readMeta(path)
-      val weights = (meta \ "weights").asInstanceOf[JArray].arr.map { row =>
-        row.asInstanceOf[JArray].arr.map {
-          case JDouble(d) => d
-          case JInt(i) => i.toDouble
-          case other => throw new IllegalArgumentException(s"bad weight $other")
-        }.toArray
+  override def read: MLReader[SOMModel] = GraftMLIO.reader { (_, _, uid, meta) =>
+    import org.json4s._
+    val weights = (meta \ "weights").asInstanceOf[JArray].arr.map { row =>
+      row.asInstanceOf[JArray].arr.map {
+        case JDouble(d) => d
+        case JInt(i) => i.toDouble
+        case other => throw new IllegalArgumentException(s"bad weight $other")
       }.toArray
-      val m = new SOMModel(uid, weights)
-      GraftMLIO.applyParams(m, params)
-      m
-    }
+    }.toArray
+    new SOMModel(uid, weights)
   }
 }

@@ -174,15 +174,10 @@ class SequentialRecommenderModel private[ml] (override val uid: String,
 
 object SequentialRecommenderModel extends MLReadable[SequentialRecommenderModel] {
   override def read: MLReader[SequentialRecommenderModel] =
-    new MLReader[SequentialRecommenderModel] {
-      override def load(path: String): SequentialRecommenderModel = {
-        val (_, uid, params, _) = GraftMLIO.readMeta(path)
-        val m = new SequentialRecommenderModel(uid,
-          sparkSession.read.parquet(GraftMLIO.subPath(path, "trans")),
-          sparkSession.read.parquet(GraftMLIO.subPath(path, "assigned")),
-          sparkSession.read.parquet(GraftMLIO.subPath(path, "rules")))
-        GraftMLIO.applyParams(m, params)
-        m
-      }
+    GraftMLIO.reader { (spark, path, uid, _) =>
+      new SequentialRecommenderModel(uid,
+        spark.read.parquet(GraftMLIO.subPath(path, "trans")),
+        spark.read.parquet(GraftMLIO.subPath(path, "assigned")),
+        spark.read.parquet(GraftMLIO.subPath(path, "rules")))
     }
 }

@@ -191,11 +191,7 @@ object Content {
       .select(col("u"), col("i"), col("actual"), col("j"),
         k5FeatureSim().as("sim"), col("r_uj"))
 
-    neighborAgg(pairs, Seq("u", "i", "actual"), K_NEIGHBORS)
-      .select(col("u").as("user_id"), col("i").as("item_id"),
-        r4(col("actual")).as("actual"),
-        r4(col("num") / col("den")).as("predicted"),
-        r4(abs(col("actual") - col("num") / col("den"))).as("abs_err"))
+    Recommender.predictedRows(neighborAgg(pairs, Seq("u", "i", "actual"), K_NEIGHBORS))
   }
 
   /** Reusable library surface: content-based top-N over long-form

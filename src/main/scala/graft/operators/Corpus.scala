@@ -1623,11 +1623,9 @@ object Corpus {
   def sketchLmScores(docs: DataFrame,
                      support: Long = SHEET_LM_SUPPORT,
                      capacity: Int = SHEET_LM_CAPACITY): DataFrame =
-    TextOps.perGramLogpSketch(docs, support, capacity)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("slp"))
-      .select(col("doc_id"),
-        r4(col("slp").cast("double") / col("n_bigrams")).as("avg_logp"))
+    TextOps.lmQualityScores(docs,
+        Some(TextOps.perGramLogpSketch(docs, support, capacity)))
+      .select(col("doc_id"), col("avg_logp"))
 
   /** Epoch cap for [[epochPlan]] — repeating data up to ~4 epochs
     * retains most of its value; beyond that returns decay rapidly

@@ -134,14 +134,15 @@ object Graph {
       .toDF("part", "n_triangles")
 
   /** The measured broadcast↔shuffle close crossover for
-    * [[triangleCounts]], in edges (BASELINE §round-8,
-    * `tools/TriScaleProbe`): at sf0.1 (~1.6 M edges) the broadcast
-    * close is a clear win (the edge list is a dim-bounded catalog
-    * co-occurrence graph); at sf1's 12.0 M edges the two sides price
-    * inside each other's band (broadcast 37.2/66.9 s vs shuffle
-    * 113.0/57.6 s) — i.e. sf1 sits AT the crossover, so the gate
-    * flips there: a broadcast build × tasks of a ≥12 M-edge probe
-    * table no longer beats one keyed shuffle of the wedge stream. */
+    * [[triangleCounts]], in edges (BASELINE §round-8; re-measured as
+    * BASELINE §"Re-measuring at sf1" sets out): at sf0.1 (~1.6 M
+    * edges) the broadcast close is a clear win (the edge list is a
+    * dim-bounded catalog co-occurrence graph); at sf1's 12.0 M edges
+    * the two sides price inside each other's band (broadcast
+    * 37.2/66.9 s vs shuffle 113.0/57.6 s) — i.e. sf1 sits AT the
+    * crossover, so the gate flips there: a broadcast build × tasks of
+    * a ≥12 M-edge probe table no longer beats one keyed shuffle of the
+    * wedge stream. */
   val TRI_BROADCAST_MAX_EDGES: Long = 12000000L
 
   /** [[triangleCountsAuto]]'s pure decision rule, exposed so the

@@ -100,10 +100,7 @@ object Multimodal {
     * the decode batch surface it stands in for. */
   private def q112(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val feats = Tables.documents(spark, dir)
-      .filter(octet_length(col("text")) > 0)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
-      .as[(Long, Array[Byte])]
+    val feats = payloads(spark, dir)
       .mapPartitions { batch =>
         batch.map { case (id, payload) =>
           MediaFeature(id, payload.length.toLong, decodeStub(payload))
@@ -182,15 +179,24 @@ object Multimodal {
     * operator a thumbnailing / audio-downsample stage slots into. */
   def resizeBatch(spark: SparkSession, dir: String): Dataset[ResizedMedia] = {
     import spark.implicits._
-    Tables.documents(spark, dir)
-      .filter(octet_length(col("text")) > 0)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
-      .as[(Long, Array[Byte])]
+    payloads(spark, dir)
       .mapPartitions { batch =>
         batch.map { case (id, payload) =>
           ResizedMedia(id, payload.length.toLong, resizeStub(payload))
         }
       }
+  }
+
+  /** Every non-empty document as its `(doc_id, UTF-8 bytes)` payload:
+    * the input the partition-batched stubs of q112 and
+    * [[resizeBatch]] map over. */
+  private def payloads(spark: SparkSession, dir: String)
+  : Dataset[(Long, Array[Byte])] = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .filter(octet_length(col("text")) > 0)
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
+      .as[(Long, Array[Byte])]
   }
 
   /** q121 — the [[resizeBatch]] surface under a value-level oracle:

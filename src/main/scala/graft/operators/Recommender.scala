@@ -1121,9 +1121,15 @@ object Recommender {
       .agg(sum(col("sim") * col("r_uj")).as("num"),
         sum(abs(col("sim"))).as("den"))
       .filter(col("den") =!= 0.0)
-      .select(col("u").as("user_id"), col("i").as("item_id"),
-        r4(col("actual")).as("actual"),
-        r4(col("num") / col("den")).as("predicted"),
-        r4(abs(col("actual") - col("num") / col("den"))).as("abs_err"))
+      .transform(predictedRows)
   }
+
+  /** The rating-prediction output row from a neighbor aggregate
+    * `(u, i, actual, num, den)`: `(user_id, item_id, actual, predicted,
+    * abs_err)` with predicted = num / den, all r4. */
+  private[graft] def predictedRows(agg: DataFrame): DataFrame =
+    agg.select(col("u").as("user_id"), col("i").as("item_id"),
+      r4(col("actual")).as("actual"),
+      r4(col("num") / col("den")).as("predicted"),
+      r4(abs(col("actual") - col("num") / col("den"))).as("abs_err"))
 }

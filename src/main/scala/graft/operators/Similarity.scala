@@ -1089,9 +1089,10 @@ object Similarity {
     * arithmetic (no cross-row aggregation → no float-order parity
     * risk; both engines can replay it exactly), and because the
     * amplification rides IN-QUERY it generalizes unchanged to the
-    * ScaleProbe replica: every copy's vectors share the same 10 label
-    * centers, so the replica is 10 clusters at 10× membership —
-    * clustered structure at any scale without a special build mode. */
+    * sf1 replica (BASELINE §"Re-measuring at sf1"): every copy's
+    * vectors share the same 10 label centers, so the replica is 10
+    * clusters at 10× membership — clustered structure at any scale
+    * without a special build mode. */
   private[graft] def clusteredEmb(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
       transform(col("v"), (x, i) =>

@@ -1,24 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
- * The honest test of the 100-TB scaling claims (round-4 verdict item
- * 5): replicate the sf0.1 tables K× with consistent key strides into
- * a synthetic sf≈1 dataset, run the heaviest queries against it, and
- * compare seconds-per-SF against the sf0.1 medians.
+ * The input of the sf1 linearity check: replicate the sf0.1 tables K×
+ * with consistent key strides into a synthetic sf≈1 dataset. The only
+ * mode is `build <src> <out> <K>`; the replica is then timed by
+ * [[graft.Bench]] (`SPARK_GRAFT_SF_DIR=<out>`, a query subset through
+ * `SPARK_GRAFT_BENCH_ONLY`), and seconds-per-SF compare against the
+ * sf0.1 medians (BASELINE.md, "Re-measuring at sf1").
  *
  * `build`: every entity key shifts by `copy · STRIDE` so the K copies
  * are disjoint, internally consistent universes (orders still join
  * their lineitems, ratings their features) — grouped work scales
- * linearly by construction, which is exactly the property the probe
+ * linearly by construction, which is exactly the property an sf1 run
  * verifies the PLANS preserve (a users×catalog grid or an unbucketed
  * pair stage would go quadratic instead). STRIDE is a multiple of
  * every cohort modulus in the suite (25/40/50/200), so `user_id % 50
  * = 0`-style cohorts keep their population fraction in every copy.
  *
- * Round-8: the dedup/corpus family joins the probe. Naive replication
+ * Round-8: the dedup/corpus family joins the replica. Naive replication
  * would make every doc a K-way near-duplicate of its clones (banded-
  * LSH bucket work quadratic in the data itself — a clone-corpus
  * artifact, not a plan property), so `build` mutates document TEXT per
@@ -27,9 +29,9 @@ import org.apache.spark.sql.functions._
  * original while making the copies disjoint text universes — the same
  * disjoint-universe construction the key shifts give the relational
  * tables. Grouped/bucketed text work then scales linearly by
- * construction, which is the property the probe verifies the PLANS
- * preserve. (documents.n_chars is stale w.r.t. the suffixed text; no
- * probe query reads it.)
+ * construction, which is the property an sf1 run verifies the PLANS
+ * preserve. (documents.n_chars is stale w.r.t. the suffixed text: a
+ * query that reads it reports the source lengths at unchanged cost.)
  *
  * Round-10: embeddings get the same treatment — each copy is
  * re-embedded through a per-copy deterministic signed coordinate
@@ -37,9 +39,6 @@ import org.apache.spark.sql.functions._
  * and distances are preserved exactly; cross-copy vectors decorrelate
  * like organic data), so the embedding family (q105/q113) measures
  * K× organic work instead of K-way duplicate stacks.
- *
- * `run` emits one JSON line and writes scale_probe.json (the
- * bench_results.json conventions).
  */
 object ScaleProbe {
 
@@ -49,12 +48,10 @@ object ScaleProbe {
   /** Tables whose keys shift per copy (key columns listed); nation
     * and region are true dimension domains and stay single-copy.
     * event_id shifts too — it is a per-row surrogate key, and leaving
-    * it duplicated across copies would distort any future probe query
-    * that groups or distinct-counts on it. documents.source is the one
+    * it duplicated across copies would distort any query that groups
+    * or distinct-counts on it. documents.source is the one
     * knowingly-unshifted id-ish column: it is a STRING category (a
-    * bounded domain like nation), not a surrogate key, and the dedup/
-    * corpus family that reads it is excluded from the probe set anyway
-    * (clone-corpus caveat below). */
+    * bounded domain like nation), not a surrogate key. */
   val SHIFTS: Map[String, Seq[String]] = Map(
     "customer" -> Seq("c_custkey"),
     "orders" -> Seq("o_orderkey", "o_custkey"),
@@ -65,292 +62,9 @@ object ScaleProbe {
     "documents" -> Seq("doc_id"),
     "embeddings" -> Seq("vec_id"))
 
-  /** Round-7 extension: representatives of the events/time-series
-    * family (restored this round after the testdata `ts` layout
-    * change), so the sf1 evidence covers sessionization, ordered
-    * funnels, RANGE trailing windows, as-of/point-in-time joins, JSON
-    * extraction, and the mergeable sketch rollup — the shapes a 100-TB
-    * event log exercises hardest. All are per-user-keyed or
-    * pre-aggregated designs; the probe verifies none hides a global
-    * sort or an unkeyed window that only shows past sf0.1. */
-  val EVENTS_QUERIES: Seq[String] = Seq(
-    "q06_daily_events", "q54_event_pivot", "q56_asof_join",
-    "q57_event_sessions", "q73_event_funnel", "q74_trailing_window",
-    "q78_json_extract", "q101_pit_join", "q102_sketch_rollup")
-
-  /** Round-8 extension: the operators this engine actually aims at
-    * 100 TB — banded near-dup (q19/q20), components (q50), incremental
-    * cross-corpus dedup (q95), PQ ANN (q99), decontamination (q81) and
-    * the composed hygiene pipeline (q100). Meaningful only against a
-    * text-mutated build (see the class doc); on a naive clone corpus
-    * the near-dup queries measure the corpus, not the plans. */
-  val TEXT_QUERIES: Seq[String] = Seq(
-    "q19_minhash_bands", "q20_neardup_pairs", "q50_dedup_clusters",
-    "q95_incremental_dedup", "q99_pq_ann", "q81_decontaminate",
-    "q100_corpus_pipeline",
-    // round-9: the quality/chunk family joins the probe (documents-
-    // based, so the per-copy text mutation gives them disjoint
-    // universes by construction).
-    // round-10: q105_semantic_dedup's exclusion is LIFTED — `build`
-    // now re-embeds each copy through a per-copy signed coordinate
-    // permutation (no cosine-1.0 clones), and the IVF codebook grows
-    // with the corpus in code (Similarity.centsOf: base seeds ∪
-    // 1/64-hash-rate extras), so within-cell occupancy — and with it
-    // SemDeDup's within-cell n² — stays O(SEED_MOD) at any K.
-    "q105_semantic_dedup",
-    "q106_perplexity_buckets", "q106b_ccnet_calibrated",
-    "q107_gopher_flags", "q108_chunk_dedup", "q108b_chunk_keep",
-    // round-9 additions: PII scrub + multimodal decode are per-row
-    // maps; blocklist is a map over the token HOFs; DSIR is explode +
-    // two keyed aggs against fixed-B broadcast dims. All documents-
-    // based, so the per-copy text mutation applies. (q111's 'dup'
-    // hit-rate drops on mutated copies — irrelevant to the scan cost
-    // the probe prices.)
-    "q109_pii_scrub", "q110_dsir_weights", "q111_blocklist",
-    "q112_mm_features",
-    // q114's post-tokenize rounds are O(|vocab|); the text mutation
-    // grows the vocab linearly with the copy count, which is exactly
-    // the growth a 10× real corpus's long-tail vocabulary shows.
-    "q114_bpe_train", "q115_bpe_encode",
-    // q113 reads the bit-identically-cloned embeddings but — unlike
-    // q105 — has NO pairwise stage, so cloning creates no artifact:
-    // assignment is vec×k map work and the draw window's state is
-    // cell occupancy, both linear in the clone count. (The production
-    // caveat that the codebook should grow with the corpus is the
-    // same one q105/q42 document.)
-    "q113_cluster_balance")
-
-  val PROBE_QUERIES: Seq[String] = Seq(
-    "q01_pricing_summary", "q16_user_knn_topk", "q17_item_knn_topk",
-    "q30_user_rating_predict", "q31_item_rating_predict", "q33_hybrid_topk",
-    "q59_user_knn_pearson", "q63_user_knn_euclidean", "q64_bm25",
-    "q76_pagerank", "q93_triangles", "q97_label_propagation",
-    "q32b_content_topk_lsh") ++ EVENTS_QUERIES ++ TEXT_QUERIES
-
-  /** q32 (the exact users×catalog content grid) is priced at sf1 next
-    * to q32b for the BASELINE crossover statement, but in its OWN
-    * session: `run <dir> <n> q32_content_topk`. Mixed into the shared
-    * session its quadratic grid materialization evicts the LRU caches
-    * every later query reuses — measured at sf1, q97 ran 3.9 s in
-    * repeat 1 but 13.8/16.7 s in repeats 2/3 (after q32 had run), and
-    * q17 read 141–168 s in-session vs 84 s warm isolated. Probing the
-    * deliberately-quadratic compat surface must not distort the
-    * linearity evidence of the 13 scale-path queries. */
-  val ISOLATED_QUERIES: Seq[String] = Seq("q32_content_topk")
-
-
-  def main(args: Array[String]): Unit = args(0) match {
-    case "build" => build(args(1), args(2), args(3).toInt)
-    case "run" => run(args(1), args(2).toInt,
-      if (args.length > 3) args.drop(3).toSeq else PROBE_QUERIES)
-    case "lmvocab" => lmVocab(args(1), args(2), args(3).toInt,
-      if (args.length > 4) args.drop(4).map(_.toInt).toSeq else Seq(1, 32, 1024))
-    case "resann" => resAnn(args(1))
-    case "foldsweep" => foldSweep(args(1))
-  }
-
-  /** Fold-vs-rebuild sensitivity: at what DELTA FRACTION does index
-    * maintenance stop beating a rebuild? For each fraction f ∈
-    * {1/16, 1/4, 1/2} of the corpus arriving as the delta, measure
-    * (a) the LM counter fold (`Corpus.foldLmIndex` from parquet) vs
-    * re-deriving the model from the new snapshot's text, and (b) the
-    * semdedup cell fold (`Similarity.foldCellIndex` from parquet) vs
-    * re-deriving the flat assignment. The standing index is written
-    * once per fraction (priced separately); walls are medians of 3.
-    * The expected shape: fold cost grows with f while rebuild is
-    * ~flat, so the curves cross somewhere past ordinary weekly
-    * deltas — the number that justifies "fold weekly, rebuild
-    * rarely". */
-  def foldSweep(dir: String): Unit = {
-    val spark = graft.Session.local()
-    val S = graft.operators.Similarity
-    val T = graft.operators.TextOps
-    val C = graft.operators.Corpus
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def med3(f: => Unit): Double = {
-      val ws = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      ws.sorted.apply(1)
-    }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_foldsweep").toString
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")).cache()
-    docs.count()
-    val e = graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .cache()
-    e.count()
-    val points = Seq(1, 4, 8).map { k => // k/16 of the corpus as delta
-      val frac = k / 16.0
-      // LM side
-      val oldDocs = docs.filter(col("doc_id") % 16 >= k)
-      val deltaDocs = docs.filter(col("doc_id") % 16 < k)
-      val lmIx = s"$base/lm_$k"
-      C.writeLmIndex(oldDocs, lmIx)
-      val (dg0, c120, c10) = C.readLmIndex(spark, lmIx)
-      val lmFold = med3 {
-        val (dg, c12, c1) = C.foldLmIndex(dg0, c120, c10, deltaDocs,
-          deltaDocs.select(col("doc_id")))
-        dg.write.format("noop").mode("overwrite").save()
-        c12.write.format("noop").mode("overwrite").save()
-        c1.write.format("noop").mode("overwrite").save()
-      }
-      val lmRebuild = med3 {
-        val dg = T.docGramCounts(docs)
-        dg.write.format("noop").mode("overwrite").save()
-        dg.groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c12"))
-          .write.format("noop").mode("overwrite").save()
-        dg.groupBy(col("w1")).agg(sum(col("c")).as("c1"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      // cell side
-      val oldVecs = e.filter(col("vec_id") % 16 >= k)
-      val deltaVecs = e.filter(col("vec_id") % 16 < k)
-      val cellIx = s"$base/cell_$k"
-      C.writeSemdedupIndex(oldVecs, S.IVF_SEEDS, cellIx)
-      val (oc, oa) = C.readSemdedupIndex(spark, cellIx)
-      val cellFold = med3 {
-        S.foldCellIndex(oc, oa, deltaVecs,
-          deltaVecs.select(col("vec_id")), S.IVF_SEEDS)._2
-          .write.format("noop").mode("overwrite").save()
-      }
-      val cellRebuild = med3 {
-        S.cellAssignD(e, S.centsOf(e, S.IVF_SEEDS))
-          .write.format("noop").mode("overwrite").save()
-      }
-      Console.err.println(s"[foldsweep] f=$frac lm fold=${f3(lmFold)} " +
-        s"rebuild=${f3(lmRebuild)} | cell fold=${f3(cellFold)} " +
-        s"rebuild=${f3(cellRebuild)}")
-      s"""{"frac":$frac,"lm_fold":${f3(lmFold)},"lm_rebuild":${f3(lmRebuild)},""" +
-        s""""cell_fold":${f3(cellFold)},"cell_rebuild":${f3(cellRebuild)}}"""
-    }
-    val json = s"""{"metric":"foldsweep","sf_dir":"$dir",""" +
-      s""""points":[${points.mkString(",")}]}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("scale_probe.json"), json)
-    println(json)
-    spark.stop()
-  }
-
-  /** Residual-vs-raw ANN recall levels (VERDICT r13 next #3): runs
-    * both composed PQ pipelines plus the exact baseline on (a) the
-    * table as-is and (b) the `Similarity.clusteredEmb` label-
-    * amplified fixture, at the q146 probe sizing, and emits one JSON
-    * line of recalls — the absolute-level evidence behind q151's
-    * comparative `residual_wins` contract (the uniform arm documents
-    * the inversion; the clustered arm documents the win; run on the
-    * replica to read both at 10×). */
-  def resAnn(dir: String): Unit = {
-    val spark = graft.Session.local()
-    import org.apache.spark.sql.DataFrame
-    val S = graft.operators.Similarity
-    val e0 = graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val arms = Seq(
-      "uniform" -> e0.select(col("vec_id"), col("v")),
-      "clustered" -> S.clusteredEmb(e0))
-    val readouts = arms.map { case (tag, eArm) =>
-      val e = eArm.cache(); e.count()
-      val qPred = col("vec_id") % 25 === 0
-      val nCells = S.centsOf(e, S.IVF_SEEDS).count()
-      val probes = S.ivfPqProbes(nCells)
-      val q = e.filter(qPred).select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val exact = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          graft.functions.VectorFns.sqDistArr(col("qv"), col("v")).as("d2"))
-        .transform(graft.functions.TopK.perGroup(_, Seq(col("q_id")),
-          Seq(col("d2").asc, col("n_id").asc), 10))
-        .select(col("q_id"), col("n_id")).cache()
-      val nq = q.count()
-      def recallOf(ann: DataFrame): Double =
-        exact.join(ann.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"))
-          .count().toDouble / (nq * 10)
-      val rRes = recallOf(S.ivfPqResidualTopK(e, S.IVF_SEEDS, probes, qPred, 10))
-      val rRaw = recallOf(S.ivfPqTopK(e, S.IVF_SEEDS, probes, qPred, 10))
-      Console.err.println(s"[resann] $tag cells=$nCells probes=$probes " +
-        s"res=${f3(rRes)} raw=${f3(rRaw)}")
-      e.unpersist(); exact.unpersist()
-      s""""$tag":{"cells":$nCells,"probes":$probes,"nq":$nq,""" +
-        s""""recall_residual":${f3(rRes)},"recall_raw":${f3(rRaw)}}"""
-    }
-    val json = s"""{"metric":"resann","sf_dir":"$dir","amp":${S.CLUSTER_AMP},""" +
-      s"""${readouts.mkString(",")}}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("scale_probe.json"), json)
-    println(json)
-    spark.stop()
-  }
-
-  /** The lm-gate's ORGANIC-VOCAB probe (VERDICT r12 next #4): the
-    * committed 4 000-gram crossover was priced on replicas whose
-    * bigram universe grows only linearly with the copy count (931 →
-    * 9 310 at K=10 — the ¤-mutation keeps each copy's vocab IDENTICAL
-    * to the original's), so the sf1 in-situ reading is an
-    * indifference band, not a sketch win. The gate's actual case is
-    * the VOCAB axis: organic text grows distinct grams much faster
-    * than corpus mass (long-tail vocabulary). This mode grows that
-    * axis directly while holding corpus mass FIXED: every token takes
-    * a `¤(doc_id % V)` class tag, so the corpus splits into V
-    * disjoint vocabulary classes — token/bigram counts per doc are
-    * bit-identical across V (the scan/tokenize work is constant) and
-    * the distinct-gram universe scales ≈ V×. At each V it prices the
-    * exact chain ([[graft.operators.TextOps.perGramLogp]]: c₁₂ model
-    * + scoring via vocab-sized SHUFFLE joins), the sketch chain
-    * (capacity-bounded Misra-Gries model + broadcast scoring join),
-    * and the auto seam, against the SAME per-doc rollup. Caches clear
-    * between V values so each point is self-contained. */
-  def lmVocab(src: String, scratch: String, repeats: Int,
-              vs: Seq[Int]): Unit = {
-    val spark = graft.Session.local()
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.size - 1) / 2) }
-    import graft.operators.TextOps
-    val points = vs.map { v =>
-      val dir = s"$scratch/v$v"
-      val docs0 = spark.read.parquet(s"$src/documents.parquet")
-      (if (v <= 1) docs0 else docs0.withColumn("text",
-        regexp_replace(col("text"), lit("(\\S+)"),
-          concat(lit("$1¤"), (col("doc_id") % v).cast("string")))))
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val docs = graft.sources.Tables.documents(spark, dir)
-      val grams = TextOps.bigramStream(docs)
-        .select(col("w1"), col("w2")).distinct().count()
-      val sides = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "exact" -> (() => TextOps.lmQualityScores(docs,
-          Some(TextOps.perGramLogp(docs)))),
-        "sketch" -> (() => TextOps.lmQualityScores(docs,
-          Some(TextOps.perGramLogpSketch(docs)))),
-        "auto" -> (() => TextOps.lmQualityScores(docs)))
-      val med = sides.map { case (name, mk) =>
-        val walls = (1 to repeats).map { r =>
-          val t0 = System.nanoTime()
-          mk().write.mode("overwrite").format("noop").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(s"[lmvocab] v=$v grams=$grams $name run $r ${f3(dt)}s")
-          dt
-        }
-        name -> median(walls)
-      }
-      // each V's bigram cache is its own plan — drop it so the next
-      // point starts cold and no point pays another's residency
-      spark.catalog.clearCache()
-      (v, grams, med)
-    }
-    val json = "{\"metric\":\"lm_vocab_probe\",\"unit\":\"sec\"," +
-      "\"src\":\"" + src + "\",\"repeats\":" + repeats +
-      ",\"crossover_grams\":" + TextOps.LM_SKETCH_MIN_GRAMS +
-      ",\"points\":[" + points.map { case (v, g, med) =>
-        "{\"v\":" + v + ",\"distinct_grams\":" + g + "," +
-          med.map { case (n, s) => "\"" + n + "\":" + f3(s) }.mkString(",") + "}"
-      }.mkString(",") + "]}"
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("scale_probe.json"), json)
-    println(json)
-    spark.stop()
+  def main(args: Array[String]): Unit = args match {
+    case Array("build", src, out, copies) => build(src, out, copies.toInt)
+    case _ => sys.error("usage: ScaleProbe build <src> <out> <copies>")
   }
 
   def build(src: String, out: String, copies: Int): Unit = {
@@ -419,52 +133,5 @@ object ScaleProbe {
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
-  }
-
-  def run(dir: String, repeats: Int, queries: Seq[String]): Unit = {
-    val spark = graft.Session.local()
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.size - 1) / 2) }
-    val fns = queries.sorted.map(n => n -> graft.SparkEntry.queries(n))
-    val runs = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
-    // HOST loadavg at each repeat's start/end — recorded for continuity
-    // with earlier rounds' notes only, NOT for attribution: during a
-    // repeat it mostly counts this probe's own runnable threads
-    // (BASELINE round-7 measured external CPU ≈ 0). Linearity verdicts
-    // lean on lower-medians across repeats; a suspect super-linear
-    // reading should be re-measured, not explained away by load.
-    def hostLoad(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loads = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
-    for (r <- 1 to repeats) {
-      val load0 = hostLoad()
-      runs += fns.zipWithIndex.map { case ((name, fn), i) =>
-        if (i % 6 == 5) System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(s"[scale] run $r $name ${f3(dt)}s")
-        name -> dt
-      }.toMap
-      loads += ((load0, hostLoad()))
-      val med = fns.map { case (n, _) => n -> median(runs.map(_(n)).toSeq) }
-      val qs = med.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-        .mkString("{", ",", "}")
-      val runsJson = runs.map(run => fns.map { case (n, _) =>
-        "\"" + n + "\":" + f3(run(n)) }.mkString("{", ",", "}"))
-        .mkString("[", ",", "]")
-      val total = med.map(_._2).sum
-      val loadsJson = loads.map { case (a, b) => s"[${f3(a)},${f3(b)}]" }
-        .mkString("[", ",", "]")
-      val json = s"""{"metric":"scale_probe","unit":"sec","sf_dir":"$dir",""" +
-        s""""repeats_done":$r,"host_loadavg":$loadsJson,""" +
-        s""""queries":$qs,"runs":$runsJson,"value":${f3(total)}}"""
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("scale_probe.json"), json)
-      println(json)
-    }
-    spark.stop()
   }
 }

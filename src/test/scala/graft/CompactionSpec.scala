@@ -15,7 +15,7 @@ import graft.streaming.{EventStreams, GateIndexes}
 class CompactionSpec extends SparkSuite {
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix)
 
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -952,8 +952,7 @@ class CorpusSpec extends SparkSuite {
 
     // the optional schedule stage lays out EXACTLY the kept train
     // docs in vtime order (the q128 writer wired into q125)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_manifest_sched").toString
+    val dir = tempDir("graft_manifest_sched")
     graft.operators.Corpus.trainingManifest(docs, corpusHasLines = false,
       scheduleOut = Some(s"$dir/sched"))
     val sched = spark.read.parquet(s"$dir/sched")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.CorpusStreams
 
@@ -16,7 +17,29 @@ class CorpusStreamsSpec extends SparkSuite {
   private def target = graft.operators.Analytics.SHARD_TOKENS
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_manifest_stream").toString
+    tempDir("graft_manifest_stream")
+
+  /** Each of `batches` written as one parquet file into a fresh dir,
+    * with increasing modification times, and that dir read back as a
+    * file-source stream taking one file per micro-batch: micro-batch n
+    * of the stream is file n. Returns the stream and every file read
+    * back as a batch DataFrame. */
+  private def fileBatches(batches: Seq[DataFrame]): (DataFrame, Seq[DataFrame]) = {
+    val (ingest, stage) = (tempDir("graft_file_stream"), tempDir("graft_file_stage"))
+    val files = batches.zipWithIndex.map { case (b, i) =>
+      b.coalesce(1).write.parquet(s"$stage/$i")
+      val part = new java.io.File(s"$stage/$i").listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .head
+      val file = new java.io.File(s"$ingest/batch-$i.parquet")
+      java.nio.file.Files.move(part.toPath, file.toPath)
+      assert(file.setLastModified(1700000000000L + i * 1000L))
+      file.getPath
+    }
+    val schema = spark.read.parquet(files.head).schema
+    (spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(ingest),
+      files.map(spark.read.parquet(_)))
+  }
 
   test("semdedupGateStream: stream pairs == the q105b batch increment; replays emit once") {
     val sp = spark
@@ -216,6 +239,47 @@ class CorpusStreamsSpec extends SparkSuite {
     // crash-replay: re-running batch 1 rewrites identical partitions
     CorpusStreams.ingestDriftBatch(b, 1L, out)
     assert(logRows() == got, "replay changed the drift log")
+  }
+
+  test("driftStream: the sink's log over a file-source stream equals ingestDriftBatch on the same batches") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val (stream, batches) = fileBatches(Seq(
+      docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
+    val (sunk, direct) = (tempDir("graft_drift_sink"), tempDir("graft_drift_direct"))
+    val q = CorpusStreams.driftStream(stream, sunk, tempDir("graft_drift_ckpt"))
+    try q.processAllAvailable() finally q.stop()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      CorpusStreams.ingestDriftBatch(b, i.toLong, direct)
+    }
+    def rows(dir: String) =
+      CorpusStreams.driftLog(spark, dir).collect().map(_.toSeq).toSet
+    val got = rows(sunk)
+    assert(got.map(_.head.toString) == Set("0", "1"), s"batches logged: $got")
+    assert(got == rows(direct),
+      s"sink-only=${got -- rows(direct)}\ndirect-only=${rows(direct) -- got}")
+  }
+
+  test("embDriftStream: the sink's log over a file-source stream equals ingestEmbDriftBatch on the same batches") {
+    val S = graft.operators.Similarity
+    val e = graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("label"),
+        col("embedding").cast("array<double>").as("v"))
+    val (stream, batches) = fileBatches(Seq(
+      e.filter(col("vec_id") % S.SEM_INCR_MOD =!= S.SEM_INCR_MOD - 1),
+      e.filter(col("vec_id") % S.SEM_INCR_MOD === S.SEM_INCR_MOD - 1)))
+    val (sunk, direct) = (tempDir("graft_edrift_sink"), tempDir("graft_edrift_direct"))
+    val q = CorpusStreams.embDriftStream(stream, sunk, tempDir("graft_edrift_ckpt"))
+    try q.processAllAvailable() finally q.stop()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      CorpusStreams.ingestEmbDriftBatch(b, i.toLong, direct)
+    }
+    def rows(dir: String) =
+      CorpusStreams.embDriftLog(spark, dir).collect().map(_.toSeq).toSet
+    val got = rows(sunk)
+    // batch 0 has no standing state, so only batch 1 logs
+    assert(got.map(_.head.toString) == Set("1"), s"batches logged: $got")
+    assert(got == rows(direct),
+      s"sink-only=${got -- rows(direct)}\ndirect-only=${rows(direct) -- got}")
   }
 
   test("single-batch ingest from empty state reproduces the batch manifest bit-for-bit") {

@@ -35,7 +35,7 @@ class LayoutSpec extends SparkSuite {
     val pts = Seq.fill(20000)((rnd.nextInt(1000).toDouble, rnd.nextInt(1000).toDouble))
       .toDF("x", "y")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder")
     // linear layout: range-partitioned + sorted on x only
     pts.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(s"$dir/linear")
@@ -74,7 +74,7 @@ class LayoutSpec extends SparkSuite {
     import s.implicits._
     val Corpus = graft.operators.Corpus
     val rnd = new Random(17)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zfold").toString
+    val dir = tempDir("graft_zfold")
     val standing = (0 until 20000).map(i =>
       (i.toLong, rnd.nextInt(1000).toDouble, rnd.nextInt(1000).toDouble))
       .toDF("doc_id", "x", "y")
@@ -125,7 +125,7 @@ class LayoutSpec extends SparkSuite {
   test("compact: many tiny files become ceil(rows/target) files, content identical") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tempDir("compact")
     // 40 writer tasks × 25 rows — the streaming-sink small-file pattern
     (0 until 1000).map(i => (i.toLong, s"row$i")).toDF("id", "v")
       .repartition(40).write.parquet(s"$dir/small")
@@ -144,7 +144,7 @@ class LayoutSpec extends SparkSuite {
   test("mergeUpsert: update + insert + tombstone-delete in one pass, base untouched") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("merge").toString
+    val dir = tempDir("merge")
     Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30))
       .toDF("id", "v", "n").write.parquet(s"$dir/base")
     val updates = Seq(
@@ -176,8 +176,7 @@ class LayoutSpec extends SparkSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sched_writer").toString
+    val dir = tempDir("graft_sched_writer")
 
     // plan assertion on the exact shape the writer executes: a
     // RangePartitioning exchange and a partition-LOCAL sort, and NO

@@ -90,7 +90,7 @@ class MultimodalSpec extends SparkSuite {
     import org.apache.spark.sql.functions.col
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm_mb").toString
+    val dir = tempDir("graft_mm_mb")
     // '¤' is 2 UTF-8 bytes: byte length ≠ char length by construction,
     // and frames straddle multibyte boundaries
     val texts = Map(

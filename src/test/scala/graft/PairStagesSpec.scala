@@ -83,7 +83,7 @@ class PairStagesSpec extends SparkSuite {
   test("a second userDotsCached build reads the first's cached table") {
     // q30, q59 and q63 each rebuild the session cache's plan; the match
     // goes through GraftExtensions' lambda-variable renumbering
-    val dir = java.nio.file.Files.createTempDirectory("graft_dots").toString
+    val dir = tempDir("graft_dots")
     val rnd = new Random(6)
     val s = spark
     import s.implicits._

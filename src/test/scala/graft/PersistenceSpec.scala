@@ -11,7 +11,7 @@ import graft.ml._
 class PersistenceSpec extends SparkSuite {
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).resolve("model").toString
+    java.nio.file.Paths.get(tempDir(name)).resolve("model").toString
 
   private def ratings: DataFrame = {
     val s = spark

@@ -11,7 +11,7 @@ class ScaleProbeSpec extends SparkSuite {
 
   private val src = "/root/testdata/sf0.001"
   private lazy val out = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scale_spec").toString
+    val dir = tempDir("graft_scale_spec")
     ScaleProbe.buildWith(spark, src, dir, 3)
     dir
   }

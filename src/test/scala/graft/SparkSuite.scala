@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,6 +15,29 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   /** Two partitions, so plan-shape assertions see the same exchange
     * layout on any host. */
   lazy val spark: SparkSession = Session.local(2)
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh directory under the JVM temp root, deleted with all it
+    * holds in `afterAll`, once the suite's streaming queries have
+    * stopped. */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.synchronized(tempDirs += dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try if (tempDirs.nonEmpty) {
+      spark.streams.active.foreach(_.stop())
+      tempDirs.filter(Files.exists(_)).foreach { dir =>
+        val paths = Files.walk(dir)
+        try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally paths.close()
+      }
+      tempDirs.clear()
+    } finally super.afterAll()
 
   def resourcePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath

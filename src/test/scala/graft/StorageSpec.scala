@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class StorageSpec extends SparkSuite {
 
   private def tmpWarehouse(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    tempDir(name)
 
   test("bucketed tables join without a shuffle exchange") {
     val s = spark

@@ -259,8 +259,8 @@ class StreamingSpec extends SparkSuite {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val out = tempDir("graft_sink")
+    val ckpt = tempDir("graft_ckpt")
 
     val mem = MemoryStream[(Long, String)]
     val q = EventStreams.idempotentParquetSink(
@@ -286,8 +286,8 @@ class StreamingSpec extends SparkSuite {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_trend").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_trend_ck").toString
+    val out = tempDir("graft_trend")
+    val ckpt = tempDir("graft_trend_ck")
 
     val day1 = Seq(
       (ts("2024-03-01 01:00:00"), 1L, 10.0), (ts("2024-03-01 02:00:00"), 1L, 5.0),
@@ -333,7 +333,7 @@ class StreamingSpec extends SparkSuite {
     val sp = spark
     // stage the table into a fresh ingest dir (the file-source contract
     // is a directory that part files land in)
-    val ingest = java.nio.file.Files.createTempDirectory("evt_ingest")
+    val ingest = java.nio.file.Paths.get(tempDir("evt_ingest"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       ingest.resolve("part-000.parquet"))
